@@ -8,17 +8,23 @@ receiver's record-parse stage is the same shape: one raw text field →
 structured attributes (receiver/fluentforwardreceiver/conversion.go:84-180).
 
 Two execution paths:
-  * JVM path (default, whole-stage codegen): one ``regexp_extract`` per
-    named group. Catalyst folds the pattern; Java regex dialect.
-  * Arrow path (RE2/Python-dialect parity): ``pd.Series.str.extract``
-    in a pandas UDF returning a struct — one pass per batch.
+  * JVM path (whole-stage codegen): one ``regexp_extract`` per named
+    group. Catalyst folds the pattern; Java regex dialect.
+  * Arrow path: Arrow's RE2 ``extract_regex`` kernel in an Arrow UDF
+    (``pa.Array -> pa.Array``) returning a struct — one pass per batch,
+    no pandas conversion. RE2 is the reference's Go ``regexp`` dialect
+    and the DuckDB oracle's; its ``\\w``/``\\d`` are ASCII-only, like
+    the JVM path's, so both paths agree on non-ASCII text.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
+# at module level: postponed annotations make the Arrow UDF's type hints
+# strings, which Spark resolves from this module's globals
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -77,18 +83,30 @@ def extract_struct(col: Column, pattern: str) -> Column:
     )
 
 
-def extract_pandas_udf(pattern: str):
-    """Arrow path: pandas UDF text → struct<groups…:string>, using the
-    Python `re` dialect (closest public stand-in for RE2 parity).
-    One ``Series.str.extract`` per Arrow batch — no per-row Python."""
+def extract_arrow_udf(pattern: str):
+    """Arrow path: Arrow UDF text → struct<groups…:string>, matched by
+    Arrow's RE2 kernel. A non-matching or NULL row yields a struct of
+    NULL fields (EXTRACT no-op semantics). Patterns RE2 cannot compile
+    (lookaround, backreferences) raise ``ValueError`` here, when the
+    plan is built, not inside a task."""
     names = named_groups(pattern)
     ppat = _to_python_dialect(pattern)
+    try:
+        pc.extract_regex(pa.array([], pa.string()), ppat)
+    except pa.ArrowInvalid as e:
+        raise ValueError(f"pattern is not valid RE2: {pattern}: {e}") from e
     out_type = T.StructType([T.StructField(n, T.StringType()) for n in names])
 
-    @F.pandas_udf(out_type)
-    def extract(s: pd.Series) -> pd.DataFrame:
-        df = s.astype("string").str.extract(ppat, expand=True)
-        df.columns = names
-        return df.astype(object).where(pd.notna(df), None)
+    @F.arrow_udf(out_type)
+    def extract(s: pa.Array) -> pa.Array:
+        # flatten() pushes the no-match NULL down into each field; the
+        # rebuilt struct itself is never NULL
+        return pa.StructArray.from_arrays(
+            pc.extract_regex(s, ppat).flatten(), names=names
+        )
 
-    return extract
+    # The function is deterministic, but the flag stops Catalyst from
+    # pushing route filters on the parsed fields (e.g. `level`) below
+    # the parse projection, which would evaluate the UDF once over every
+    # row and again over the rows that survive.
+    return extract.asNondeterministic()

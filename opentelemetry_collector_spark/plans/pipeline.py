@@ -44,7 +44,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.parse import extract_pandas_udf, extract_struct
+from ..functions.parse import extract_arrow_udf, extract_struct
 from .. import datagen
 
 # The grok contract for the synthetic transcript bodies (FIXTURES.md §1):
@@ -64,14 +64,17 @@ def parse_stage(
 ) -> DataFrame:
     """text → struct of named-group fields + ``parsed`` flag.
 
-    engine='arrow': one vectorized ``Series.str.extract`` per Arrow
-    batch (the north-star contract: pandas/Arrow UDF over the text
-    column, no per-row Python). engine='jvm': ``regexp_extract``
-    per group inside whole-stage codegen (faster; Java regex dialect).
-    Non-matching rows get NULL fields (EXTRACT no-op semantics).
+    engine='arrow': one Arrow RE2 ``extract_regex`` per Arrow batch in
+    an Arrow UDF evaluated once per row (the north-star contract: an
+    Arrow UDF over the text column, no per-row Python, no pandas).
+    engine='jvm': ``regexp_extract`` per group inside whole-stage
+    codegen (Java regex dialect). Both dialects keep ``\\w``/``\\d``
+    ASCII-only, so the engines agree. Non-matching rows get NULL fields
+    (EXTRACT no-op semantics). Filters are not pushed below the Arrow
+    parse, so filter on scan columns before calling this.
     """
     if engine == "arrow":
-        parsed = extract_pandas_udf(pattern)(F.col(text_col))
+        parsed = extract_arrow_udf(pattern)(F.col(text_col))
     elif engine == "jvm":
         parsed = extract_struct(F.col(text_col), pattern)
     else:

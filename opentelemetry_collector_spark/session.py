@@ -40,6 +40,26 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(app_id)
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap sized to the host: half of MemTotal, in MiB.
+
+    Local mode runs every executor inside this one JVM, and the Python
+    workers, off-heap buffers and page cache need the rest. A heap larger
+    than RAM on a host with no swap gets the JVM OOM-killed instead of
+    failing a task with an error. Falls back to 4g when MemTotal cannot
+    be read (no /proc).
+    """
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(512, kib // 2048)}m"
+    except OSError:
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "otelcol_spark",
     cpus: int | None = None,
@@ -54,7 +74,8 @@ def get_spark(
     ``spark://host:7077`` for a standalone cluster (tools/cluster_bench.py)
     — in which case ``cpus`` sizes only the shuffle partitioning and the
     executor fleet is described via ``extra_conf`` (spark.executor.cores /
-    spark.cores.max), mirroring a spark-submit deployment.
+    spark.cores.max), mirroring a spark-submit deployment. The driver
+    heap is ``SPARK_DRIVER_MEM`` when set, else ``default_driver_memory()``.
     """
     if cpus is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -74,7 +95,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     if extra_conf:

@@ -22,7 +22,7 @@ from opentelemetry_collector_spark.functions.mmh3 import (
     trace_id_col,
 )
 from opentelemetry_collector_spark.functions.parse import (
-    extract_pandas_udf,
+    extract_arrow_udf,
     extract_struct,
     named_groups,
 )
@@ -112,6 +112,13 @@ class TestParse:
         with pytest.raises(ValueError):
             named_groups(r"(?P<a>\w+) (\w+)")  # unnamed group present
 
+    def test_arrow_refuses_non_re2_pattern_at_plan_build(self):
+        # lookaround and backreferences compile in Python `re` and Java
+        # but not in RE2: refuse them in the driver, not inside a task
+        for pat in (r"(?P<a>\w+)(?=x)", r"(?P<a>\w)(?P=a)"):
+            with pytest.raises(ValueError, match="RE2"):
+                extract_arrow_udf(pat)
+
     @pytest.mark.parametrize("engine", ["arrow", "jvm"])
     def test_extract(self, spark, engine):
         df = spark.createDataFrame(
@@ -119,11 +126,15 @@ class TestParse:
                 ("[error] planner: step failed duration=42ms",),
                 ("free text no structure",),
                 (None,),
+                # \d and \w are ASCII-only in RE2 and Java (Python `re`
+                # matched both rows): Arabic-Indic digits, accented level
+                ("[error] planner: x duration=\u0664\u0662ms",),
+                ("[\u00e9rror] planner: x duration=42ms",),
             ],
             "text string",
         )
         col = (
-            extract_pandas_udf(self.PAT)(F.col("text"))
+            extract_arrow_udf(self.PAT)(F.col("text"))
             if engine == "arrow"
             else extract_struct(F.col("text"), self.PAT)
         )
@@ -134,8 +145,8 @@ class TestParse:
             "msg": "step failed",
             "dur": "42",
         }
-        assert all(v is None for v in rows[1]["p"].asDict().values())
-        assert all(v is None for v in rows[2]["p"].asDict().values())
+        for r in rows[1:]:
+            assert all(v is None for v in r["p"].asDict().values()), r
 
 
 class TestSeverity:

@@ -9,6 +9,7 @@ from opentelemetry_collector_spark import datagen
 from opentelemetry_collector_spark.plans.pipeline import (
     PipelineConfig,
     aggregate_combined,
+    default_routes,
     enrich_stage,
     parse_stage,
     route_stage,
@@ -73,6 +74,37 @@ class TestPlanQuality:
         plan = plan_of(agg)
         # partial_count before the exchange = map-side combine
         assert "partial_count" in plan, plan
+
+    def test_arrow_parse_runs_once_per_row(
+        self, spark, parquet_transcripts, monkeypatch
+    ):
+        """A route filter on a parsed field must not be pushed below the
+        Arrow parse: that would run the UDF over every row and again
+        over the survivors (two ArrowEvalPython nodes)."""
+        from opentelemetry_collector_spark.plans import entry_queries
+
+        # the flagship queries over the parquet transcripts table
+        monkeypatch.setattr(
+            entry_queries, "_derive_transcripts", lambda *_: parquet_transcripts
+        )
+        for q in (
+            entry_queries.q_pipeline_errors_agg,
+            entry_queries.q_pipeline_routed_rows,
+        ):
+            plan = plan_of(q(spark, ""))
+            assert plan.count("ArrowEvalPython") == 1, f"{q.__name__}\n{plan}"
+        enriched = enrich_stage(
+            parse_stage(parquet_transcripts),
+            datagen.role_lookup_df(spark),
+            datagen.tool_lookup_df(spark),
+        )
+        errors = route_stage(enriched, default_routes())["errors"]
+        plan = plan_of(errors.groupBy("level").agg(F.count(F.lit(1))))
+        assert plan.count("ArrowEvalPython") == 1, plan
+
+    def test_column_pruning_drops_unused_arrow_parse(self, spark, parquet_transcripts):
+        plan = plan_of(parse_stage(parquet_transcripts).select("conv_id"))
+        assert "ArrowEvalPython" not in plan, plan
 
     def test_whole_stage_codegen_covers_parse(self, spark, parquet_transcripts):
         plan = plan_of(parse_stage(parquet_transcripts, engine="jvm"))

@@ -80,6 +80,20 @@ class TestRunAndWrite:
         assert m["archive"] == n
         assert m["errors"] == results["errors"].rows
 
+    def test_sequential_path_commits_every_sink(
+        self, spark, tiny_transcripts, wh
+    ):
+        """concurrent=False submits the sink writes one by one; the
+        commits and the sent counters are the concurrent path's."""
+        results = run_and_write(
+            spark, tiny_transcripts, wh, "run1", concurrent=False
+        )
+        assert len(results) == 6
+        assert not any(r.skipped for r in results.values())
+        assert results["archive"].rows == tiny_transcripts.count()
+        m = {r["sink"]: r["sent"] for r in wh.metrics_table(spark).collect()}
+        assert m == {name: r.rows for name, r in results.items()}
+
     def test_resume_after_partial_run(self, spark, tiny_transcripts, wh):
         # first: commit only one sink (simulating a crash after it)
         from opentelemetry_collector_spark.plans.pipeline import run_pipeline
@@ -214,8 +228,9 @@ class TestConcurrentWrites:
         same rows, same lineage totals as the sequential path.
 
         Slow lane: runs the full sink pipeline twice; the fast lane
-        keeps the sequential run_and_write e2e tests and the
-        driver-side scheduling unit test above."""
+        keeps the concurrent-default run_and_write e2e tests, one
+        sequential (concurrent=False) e2e test and the driver-side
+        scheduling unit test above."""
         seq = run_and_write(
             spark, tiny_transcripts, wh, "runC-seq", concurrent=False
         )

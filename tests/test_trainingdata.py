@@ -1360,11 +1360,10 @@ class TestSaltedAgg:
 
 
 class TestIvf:
-    # fast lane keeps the directed end-to-end gate
-    # (test_ivf_finds_the_near_dup_cluster); the determinism and
-    # recall-widening properties re-train centroids (the expensive
-    # step) and are additionally covered by the td_topk driver row
-    @pytest.mark.slow
+    # fast lane keeps centroid determinism and the directed end-to-end
+    # gate (test_ivf_finds_the_near_dup_cluster); the recall-widening
+    # property re-trains centroids twice and is slow. No driver row
+    # covers IVF (td_topk runs brute force and hyperplane LSH only).
     def test_centroids_deterministic_and_shaped(self, vectors):
         from opentelemetry_collector_spark.trainingdata import ivf_train_centroids
 
