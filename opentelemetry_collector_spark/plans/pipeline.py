@@ -18,10 +18,13 @@ receiver → processor chain → exporter fan-out
 
 Everything is one declarative DataFrame DAG: Catalyst pushes the parse
 projections into the scan, the lookup joins are explicit broadcasts
-(≤20-row dims), and the only shuffles are the per-sink aggregations'
-groupBys. The parsed/enriched frame is computed once and fanned out —
-the analog of the reference sharing one receiver instance across
-pipelines (docs/design.md:68).
+(≤20-row dims), and the only shuffle is the grouping-sets aggregation.
+``compile_routed`` is the production compile: each row is parsed and
+enriched once, then cloned to every sink whose rule matches in one
+tagged fan-out (cloningfanoutconnector.go:46-66), so one write commits
+every sink — the analog of the reference sharing one receiver instance
+across pipelines (docs/design.md:68). ``run_pipeline`` keeps the
+per-sink frame view of the same stages.
 
 Scale notes (100 TB / 10^12 turns):
   * the parse+enrich stage is embarrassingly parallel — no shuffle;
@@ -41,7 +44,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.parse import extract_arrow_udf, extract_struct
@@ -270,11 +273,9 @@ class PipelineConfig:
     window: str = "5 minutes"
     redact_sensitive: bool = False
     salt_threshold: int | None = None  # turns per conv above which to salt
-    # Persist the enriched frame before the sink fan-out — the analog of
-    # the reference sharing ONE receiver instance across its pipelines
-    # (docs/design.md:68): without it every sink/aggregate re-runs the
-    # parse+enrich DAG (the Arrow parse UDF would execute N_sinks+N_aggs
-    # times over the full input).
+    # Persist the enriched frame under run_pipeline's per-sink frames:
+    # without it every sink/aggregate frame forced on its own re-runs the
+    # parse+enrich DAG. compile_routed needs no persist (one action).
     persist: bool = True
     # StorageLevel name for that persist. MEMORY_AND_DISK (Spark's
     # default) churns the multi-GB enriched frame through the executor
@@ -333,10 +334,9 @@ def materialize_concurrent(actions: dict, max_threads: int = 8) -> dict:
     {name: result} with every action completed, re-raising the first
     failure after all submitted actions finish.
 
-    This is the canonical multi-sink submission pattern: a fan-out
-    pipeline's sink writes and per-sink aggregations are independent
-    jobs, and submitting them sequentially leaves the cluster idle at
-    every job boundary and stage barrier — measured on the 4-worker
+    For independent jobs, such as ``run_pipeline``'s per-sink frames,
+    submitting them sequentially leaves the cluster idle at every job
+    boundary and stage barrier — measured on the 4-worker
     standalone cluster, sequential submission holds executor
     utilization at ~0.87 while the single-worker leg sits at ~0.96,
     i.e. the idle cost grows with cluster size exactly where scaling
@@ -363,46 +363,36 @@ def materialize_concurrent(actions: dict, max_threads: int = 8) -> dict:
     return results
 
 
-def run_pipeline_fused(
+def _enriched(spark, transcripts, config, role_lookup=None, tool_lookup=None) -> DataFrame:
+    parsed = parse_stage(transcripts, config.pattern, engine=config.parse_engine)
+    return enrich_stage(
+        parsed,
+        role_lookup or datagen.role_lookup_df(spark),
+        tool_lookup or datagen.tool_lookup_df(spark),
+        redact_sensitive=config.redact_sensitive,
+    )
+
+
+def compile_routed(
     spark: SparkSession,
     transcripts: DataFrame,
     config: PipelineConfig | None = None,
-    role_lookup: DataFrame | None = None,
-    tool_lookup: DataFrame | None = None,
-) -> dict:
-    """Alternative compilation: identical semantics to
-    ``run_pipeline`` in TWO actions — one tagged fan-out write (all
-    sinks in one pass; on a real warehouse, write PARTITIONED BY sink
-    for one atomic multi-sink commit) and one grouping-sets
-    aggregation covering all sinks × all four groupings in a single
-    shuffle.
-
-    Trade-off (measured on local[8..32], 36M rows): the explode
-    roughly doubles in-flight rows, so this plan loses to the
-    multi-action plan when sinks overlap heavily (archive matches
-    everything); it wins when routes are near-disjoint, when the sink
-    count is large (driver round-trips dominate), or when the target
-    needs one atomic partitioned write. Equivalence is pinned by
-    tests/test_fused_pipeline.py.
-
-    Returns {'enriched', 'routed_tagged', 'aggregates_tagged'}.
-    """
+) -> tuple[DataFrame, Observation]:
+    """parse → enrich → tagged route: the frame ``run_and_write``
+    commits in one write partitioned by ``sink``, and the Observation
+    that counts, on the enriched frame before the fan-out clones rows,
+    the receiver's obsreport counters (obsreport_receiver.go:30-51):
+    ``accepted`` (every input row) and ``parse_refused`` (rows the parse
+    left unmatched). It rides the action that consumes the frame, so
+    the counters cost no job."""
     config = config or PipelineConfig()
-    role_lookup = role_lookup or datagen.role_lookup_df(spark)
-    tool_lookup = tool_lookup or datagen.tool_lookup_df(spark)
-
-    parsed = parse_stage(transcripts, config.pattern, engine=config.parse_engine)
-    enriched = enrich_stage(
-        parsed, role_lookup, tool_lookup, redact_sensitive=config.redact_sensitive
+    received = Observation()
+    enriched = _enriched(spark, transcripts, config).observe(
+        received,
+        F.count(F.lit(1)).alias("accepted"),
+        F.count_if(~F.col("parsed")).alias("parse_refused"),
     )
-    if config.persist:
-        enriched = enriched.persist(getattr(StorageLevel, config.storage_level))
-    tagged = route_stage_tagged(enriched, config.routes)
-    return {
-        "enriched": enriched,
-        "routed_tagged": tagged,
-        "aggregates_tagged": aggregate_combined_tagged(tagged, config.window),
-    }
+    return route_stage_tagged(enriched, config.routes), received
 
 
 def run_pipeline(
@@ -412,20 +402,16 @@ def run_pipeline(
     role_lookup: DataFrame | None = None,
     tool_lookup: DataFrame | None = None,
 ) -> dict:
-    """Compile + return the full DAG (lazily — nothing executes here).
+    """Compile + return the per-sink frame view of the pipeline (lazily —
+    nothing executes here); ``compile_routed`` is the one-write compile
+    that ``run_and_write`` ships.
 
     Returns {'enriched': df, 'routed': {sink: df}, 'aggregates':
     {sink: {agg_name: df}}, 'metrics': df} where metrics carries the
     obsreport-style per-stage/per-sink counters.
     """
     config = config or PipelineConfig()
-    role_lookup = role_lookup or datagen.role_lookup_df(spark)
-    tool_lookup = tool_lookup or datagen.tool_lookup_df(spark)
-
-    parsed = parse_stage(transcripts, config.pattern, engine=config.parse_engine)
-    enriched = enrich_stage(
-        parsed, role_lookup, tool_lookup, redact_sensitive=config.redact_sensitive
-    )
+    enriched = _enriched(spark, transcripts, config, role_lookup, tool_lookup)
     if config.persist:
         enriched = enriched.persist(getattr(StorageLevel, config.storage_level))
     routed = route_stage(enriched, config.routes)

@@ -7,30 +7,37 @@ here is an atomic snapshot commit that a restarted job detects and
 skips.
 
 Design (Iceberg-shaped, parquet-backed):
-  * each sink table lives at ``<root>/<sink>/``; every write lands in
-    a unique ``snap=<snapshot_id>`` subdirectory (snapshot_id =
-    deterministic fingerprint of run_id + sink), so a re-run of the
-    same run_id OVERWRITES its own snapshot rather than duplicating
-    rows — writes are idempotent at the snapshot level;
-  * a commit manifest (JSON, written atomically via rename AFTER the
-    data lands) records the snapshot: row count, input fingerprint,
-    per-partition lineage. Readers only see committed snapshots; a
-    crash mid-write leaves an orphan directory that the next run of
-    the same run_id overwrites — never double-counted data;
+  * a pipeline run (``run_and_write``) writes every routed sink in ONE
+    write partitioned by sink, ``<root>/routed/snap=<snapshot_id>/
+    sink=<s>/``, and every per-sink aggregate in one more,
+    ``<root>/aggregates/snap=<snapshot_id>/sink=<s>_agg/`` —
+    snapshot_id is a deterministic fingerprint of the run_id, so a
+    re-run of the same run_id OVERWRITES its own snapshot rather than
+    duplicating rows. ``write_sink`` writes one sink's frame to
+    ``<root>/<sink>/snap=<snapshot_id>/`` (fingerprint of run_id +
+    sink) — the streaming path's per-epoch commits;
+  * ONE commit manifest per snapshot (JSON, written atomically via
+    rename AFTER the data lands) with one entry per sink: path, row
+    count, observed sent count, per-file lineage; a run's manifest
+    also carries the receiver counters. Readers only see committed
+    snapshots; a crash before the rename leaves orphan directories
+    that the next attempt of the same run_id overwrites — never
+    double-counted data;
   * obsreport-style sent-counters are captured from ``df.observe``
     during the SAME action as the write; per-file lineage (file →
     row count + key range) is harvested from the written parquet
     FOOTERS — metadata-only, no second data scan (the manifest-file
-    role Iceberg's own manifests play). A commit requires the footer
-    row total to equal the observed sent count — a lost or truncated
-    file fails the commit instead of under-counting silently;
+    role Iceberg's own manifests play). A commit requires each sink's
+    footer row total to equal its observed sent count — a lost or
+    truncated file fails the commit instead of under-counting silently;
   * on a real cluster the identical interface binds to Iceberg
-    (``writeTo(...).append()`` within its snapshot/commit machinery);
-    ``sources.tables.iceberg_available`` gates that path.
+    (``writeTo(...).append()`` within its snapshot/commit machinery,
+    on a table PARTITIONED BY sink); ``sources.tables.iceberg_available``
+    gates that path.
 
-At 100 TB the commit manifest stays tiny (per-partition rows, not
-per-row), and resume skips whole completed sinks — the expensive
-recompute is avoided precisely where it matters.
+At 100 TB the commit manifest stays tiny (per-file rows, not per-row).
+Resume is all-or-nothing per snapshot: a committed run is returned
+whole and skipped, an uncommitted one is rewritten whole.
 """
 
 from __future__ import annotations
@@ -38,11 +45,11 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
+import re
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -111,6 +118,32 @@ class SinkResult:
     lineage: list[dict] = field(default_factory=list)
 
 
+def _results(snapshot_id: str, entries: dict[str, dict], skipped: bool = False):
+    return {
+        sink: SinkResult(sink, e["path"], snapshot_id, e["rows"], skipped, e.get("lineage", []))
+        for sink, e in entries.items()
+    }
+
+
+def _load_manifest(path: str) -> dict:
+    """The one manifest reader. Manifests from before the per-run
+    commit hold a single sink at top level; they read back as the
+    one-entry case of the ``sinks`` format."""
+    with open(path) as f:
+        m = json.load(f)
+    if not isinstance(m, dict):
+        raise ValueError(f"manifest {path} is not a JSON object")
+    if "sinks" not in m and "sink" in m:
+        m["sinks"] = {
+            m["sink"]: {
+                "path": m["path"],
+                "rows": m["rows"],
+                "lineage": m.get("lineage", []),
+            }
+        }
+    return m
+
+
 class Warehouse:
     """Filesystem warehouse with atomic JSON commit manifests."""
 
@@ -126,35 +159,44 @@ class Warehouse:
     def committed(self, snapshot_id: str) -> dict | None:
         p = self._commit_path(snapshot_id)
         if os.path.exists(p):
-            with open(p) as f:
-                return json.load(f)
+            return _load_manifest(p)
         return None
 
+    def _manifests(self, skip_corrupt: bool = False):
+        """Every committed manifest, in file-name order. ``skip_corrupt``
+        passes over manifests that do not parse instead of raising."""
+        commits_dir = os.path.join(self.root, "_commits")
+        for fn in sorted(os.listdir(commits_dir)):
+            if not fn.endswith(".json"):  # a *.json.tmp is uncommitted
+                continue
+            try:
+                yield _load_manifest(os.path.join(commits_dir, fn))
+            except (OSError, ValueError):  # JSONDecodeError is a ValueError
+                if not skip_corrupt:
+                    raise
+
     def has_run(self, sink: str, run_id: str) -> bool:
-        """True when (run_id, sink) already has a committed snapshot."""
-        return self.committed(_fingerprint(run_id, sink)) is not None
+        """True when (run_id, sink) already has a committed snapshot,
+        from ``write_sink`` or from a whole-run commit."""
+        for snapshot_id in (_fingerprint(run_id, sink), _fingerprint(run_id)):
+            m = self.committed(snapshot_id)
+            if m is not None and sink in m["sinks"]:
+                return True
+        return False
 
     def has_stream_runs(self, stream_id: str) -> bool:
         """True when any committed snapshot carries this stream's
         namespaced run_id (``<stream_id>-epoch-N``) — the marker-less
         signal that a resuming checkpoint was ALREADY namespaced, so
         the legacy-epoch migration must not claim it. Metadata-only:
-        one scan of the KB-scale commit log."""
+        one scan of the KB-scale commit log; a corrupt manifest must
+        not abort stream startup, so it is skipped."""
         prefix = f"{stream_id}-epoch-"
-        commits_dir = os.path.join(self.root, "_commits")
-        for fn in os.listdir(commits_dir):
-            if not fn.endswith(".json"):
-                continue
-            try:
-                with open(os.path.join(commits_dir, fn)) as f:
-                    # str(... or "") tolerates run_id: null and corrupt
-                    # non-string manifests — one bad manifest must not
-                    # abort stream startup
-                    if str(json.load(f).get("run_id") or "").startswith(prefix):
-                        return True
-            except (OSError, json.JSONDecodeError):
-                continue
-        return False
+        # str(... or "") tolerates run_id: null and non-string run_ids
+        return any(
+            str(m.get("run_id") or "").startswith(prefix)
+            for m in self._manifests(skip_corrupt=True)
+        )
 
     def has_legacy_epochs(self) -> bool:
         """True when any committed snapshot carries an UNSCOPED
@@ -165,20 +207,27 @@ class Warehouse:
         resuming a pre-namespacing build (there is nothing it could
         double-commit), so it must classify non-legacy. Metadata-only:
         one scan of the KB-scale commit log."""
-        import re
-
-        commits_dir = os.path.join(self.root, "_commits")
         pat = re.compile(r"^epoch-\d+$")
-        for fn in os.listdir(commits_dir):
-            if not fn.endswith(".json"):
-                continue
-            try:
-                with open(os.path.join(commits_dir, fn)) as f:
-                    if pat.match(str(json.load(f).get("run_id") or "")):
-                        return True
-            except (OSError, json.JSONDecodeError):
-                continue
-        return False
+        return any(
+            pat.match(str(m.get("run_id") or ""))
+            for m in self._manifests(skip_corrupt=True)
+        )
+
+    def _resume(
+        self, snapshot_id: str, run_id: str, input_fingerprint: str
+    ) -> dict[str, SinkResult] | None:
+        """The committed snapshot's sinks, marked skipped, or None when
+        the snapshot is uncommitted. The same run_id over a different
+        input is a misuse, not a resume, and raises."""
+        prior = self.committed(snapshot_id)
+        if prior is None:
+            return None
+        if input_fingerprint and prior.get("input_fingerprint") not in ("", input_fingerprint):
+            raise ValueError(
+                f"run {run_id!r} already committed with a different input "
+                f"fingerprint — refusing to resume"
+            )
+        return _results(snapshot_id, prior["sinks"], skipped=True)
 
     def _commit(self, manifest: dict) -> None:
         """Write-then-rename so a manifest is either absent or complete
@@ -189,7 +238,87 @@ class Warehouse:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, p)
 
+    def _commit_sinks(
+        self,
+        snapshot_id: str,
+        run_id: str,
+        entries: dict[str, dict],
+        input_fingerprint: str = "",
+        counters: dict | None = None,
+    ) -> dict[str, SinkResult]:
+        """Commit one snapshot's sink entries in one manifest."""
+        manifest = {
+            "snapshot_id": snapshot_id,
+            "run_id": run_id,
+            "input_fingerprint": input_fingerprint,
+            "committed_at": time.time(),
+            "sinks": entries,
+        }
+        if counters is not None:
+            manifest["counters"] = counters
+        self._commit(manifest)
+        return _results(snapshot_id, entries)
+
     # -- writes -------------------------------------------------------------
+
+    def _write_observed(
+        self,
+        df: DataFrame,
+        path: str,
+        sinks: dict[str, tuple[str, Column]],
+        partition_by: tuple[str, ...] = (),
+        lineage_keys: tuple[str, ...] = (),
+    ) -> dict[str, dict]:
+        """Overwrite ``path`` with ``df`` in one action and return one
+        uncommitted manifest entry per sink of ``sinks`` ({sink: (its
+        directory, its row count expression)}).
+
+        The obsreport "sent" counters ride the write itself via
+        df.observe (obsreport_exporter.go:29-44 — never a second scan).
+        Lineage comes from the parquet footers: metadata-only, no
+        re-scan of the data just written (at 100 TB a post-write
+        re-read would double the write path's I/O). Overwrite mode
+        replaces an orphan directory left by a crashed attempt."""
+        obs = Observation()
+        writer = df.observe(obs, *[c.alias(s) for s, (_, c) in sinks.items()]).write
+        writer.mode("overwrite").partitionBy(*partition_by).parquet(path)
+        observed = obs.get
+        entries = {}
+        for sink, (sink_path, _) in sinks.items():
+            lineage = _footer_lineage(sink_path, lineage_keys)
+            rows = sum(r["rows"] for r in lineage)
+            if rows != observed[sink]:  # commit-time conservation check
+                raise RuntimeError(
+                    f"sink {sink!r}: observed {observed[sink]} rows during write "
+                    f"but lineage sums to {rows} — refusing to commit"
+                )
+            entries[sink] = {
+                "path": sink_path,
+                "rows": rows,
+                "observed_sent": int(observed[sink]),
+                "lineage": lineage,
+            }
+        return entries
+
+    def write_partitioned(
+        self,
+        table: str,
+        df: DataFrame,
+        run_id: str,
+        sinks: list[str],
+        lineage_keys: tuple[str, ...] = (),
+    ) -> dict[str, dict]:
+        """Write ``df`` partitioned by its ``sink`` column into the run's
+        one snapshot directory of ``table``, in one action, with one
+        sent counter per sink on that action. Returns the uncommitted
+        per-sink entries, each with its own ``sink=<s>`` directory;
+        ``run_and_write`` commits them in the run's manifest."""
+        path = os.path.join(self.root, table, f"snap={_fingerprint(run_id)}")
+        counted = {
+            s: (os.path.join(path, f"sink={s}"), F.count_if(F.col("sink") == s))
+            for s in sinks
+        }
+        return self._write_observed(df, path, counted, ("sink",), lineage_keys)
 
     def write_sink(
         self,
@@ -200,7 +329,8 @@ class Warehouse:
         lineage_keys: tuple[str, ...] = (),
         partition_layout: bool = False,
     ) -> SinkResult:
-        """Write one sink's DataFrame as a committed snapshot.
+        """Write one sink's DataFrame as a committed snapshot: the
+        one-entry case of the run manifest.
 
         Idempotent per (run_id, sink): an existing committed snapshot
         with the same input fingerprint is skipped (resume); a
@@ -208,28 +338,11 @@ class Warehouse:
         that is a misuse, not a resume.
         """
         snapshot_id = _fingerprint(run_id, sink)
-        prior = self.committed(snapshot_id)
+        prior = self._resume(snapshot_id, run_id, input_fingerprint)
         if prior is not None:
-            if input_fingerprint and prior.get("input_fingerprint") not in ("", input_fingerprint):
-                raise ValueError(
-                    f"run {run_id!r} sink {sink!r} already committed with a "
-                    f"different input fingerprint — refusing to resume"
-                )
-            return SinkResult(
-                sink, prior["path"], snapshot_id, prior["rows"],
-                skipped=True, lineage=prior.get("lineage", []),
-            )
+            return prior[sink]
 
-        path = os.path.join(self.root, sink, f"snap={snapshot_id}")
-        if os.path.exists(path):  # orphan from a crashed attempt
-            shutil.rmtree(path)
-
-        # obsreport "sent" counter captured DURING the write action via
-        # df.observe (obsreport_exporter.go:29-44 — the counter rides
-        # the export itself, never a second scan).
-        from pyspark.sql import Observation
-
-        tagged = df
+        partition_by: tuple[str, ...] = ()
         if partition_layout:
             # Iceberg-style layout days(ts)/bucket(conv_id): time-range
             # queries prune by day directory, per-conversation lookups
@@ -237,54 +350,25 @@ class Warehouse:
             # SURVEY §7 calls out (hive-partitioned parquet here; the
             # identical spec binds to Iceberg partition transforms on a
             # real catalog)
-            tagged = tagged.withColumn(
+            df = df.withColumn(
                 "_day", F.date_format(F.col("ts").cast("timestamp"), "yyyy-MM-dd")
             ).withColumn(
                 "_bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(16)).cast("int")
             )
-        obs = Observation(f"sent_{sink}_{snapshot_id}")
-        tagged = tagged.observe(obs, F.count(F.lit(1)).alias("sent"))
-        writer = tagged.write.mode("overwrite")
-        if partition_layout:
-            writer = writer.partitionBy("_day", "_bucket")
-        writer.parquet(path)
-        observed_sent = int(obs.get["sent"])
-
-        # lineage from parquet footers: metadata-only, no re-scan of
-        # the data just written (at 100 TB a post-write re-read would
-        # double the write path's I/O)
-        lineage = _footer_lineage(path, lineage_keys)
-        rows = sum(r["rows"] for r in lineage)
-        if rows != observed_sent:  # commit-time conservation check
-            raise RuntimeError(
-                f"sink {sink!r}: observed {observed_sent} rows during write "
-                f"but lineage sums to {rows} — refusing to commit"
-            )
-
-        self._commit(
-            {
-                "snapshot_id": snapshot_id,
-                "run_id": run_id,
-                "sink": sink,
-                "path": path,
-                "rows": rows,
-                "observed_sent": observed_sent,
-                "input_fingerprint": input_fingerprint,
-                "lineage": lineage,
-                "committed_at": time.time(),
-            }
+            partition_by = ("_day", "_bucket")
+        path = os.path.join(self.root, sink, f"snap={snapshot_id}")
+        entries = self._write_observed(
+            df, path, {sink: (path, F.count(F.lit(1)))}, partition_by, lineage_keys
         )
-        return SinkResult(sink, path, snapshot_id, rows, lineage=lineage)
+        return self._commit_sinks(snapshot_id, run_id, entries, input_fingerprint)[sink]
 
     def read_sink(self, spark: SparkSession, sink: str) -> DataFrame:
-        """Read only committed snapshots of a sink table."""
-        commits_dir = os.path.join(self.root, "_commits")
-        paths = []
-        for fn in sorted(os.listdir(commits_dir)):
-            with open(os.path.join(commits_dir, fn)) as f:
-                m = json.load(f)
-            if m["sink"] == sink:
-                paths.append(m["path"])
+        """Read only committed snapshots of a sink table. A sink of a
+        partitioned run with no rows has no directory and adds none; a
+        committed snapshot with rows whose directory is gone still fails
+        the read."""
+        entries = [m["sinks"][sink] for m in self._manifests() if sink in m["sinks"]]
+        paths = [e["path"] for e in entries if e["rows"] > 0 or os.path.isdir(e["path"])]
         if not paths:
             raise FileNotFoundError(f"no committed snapshots for sink {sink!r}")
         # _part_id survives only in pre-footer-lineage snapshots
@@ -293,12 +377,11 @@ class Warehouse:
     def metrics_table(self, spark: SparkSession) -> DataFrame:
         """obsreport-parity view over the commit log: per-sink sent
         counters (obsreport_exporter.go:29-44)."""
-        commits_dir = os.path.join(self.root, "_commits")
-        rows = []
-        for fn in sorted(os.listdir(commits_dir)):
-            with open(os.path.join(commits_dir, fn)) as f:
-                m = json.load(f)
-            rows.append((m["run_id"], m["sink"], m["rows"], len(m.get("lineage", []))))
+        rows = [
+            (m["run_id"], sink, e["rows"], len(e.get("lineage", [])))
+            for m in self._manifests()
+            for sink, e in m["sinks"].items()
+        ]
         return spark.createDataFrame(
             rows, "run_id string, sink string, sent bigint, n_partitions int"
         )
@@ -311,45 +394,52 @@ def run_and_write(
     run_id: str,
     config=None,
     input_fingerprint: str = "",
-    concurrent: bool = True,
 ) -> dict[str, SinkResult]:
-    """Execute the full pipeline and commit every routed sink +
-    per-sink aggregate to the warehouse, skipping sinks already
-    committed for this run_id (idempotent resume after a crash).
+    """Execute the full pipeline and commit every routed sink and its
+    per-sink aggregate to the warehouse as ONE snapshot of the run.
 
-    Sink writes are independent Spark jobs over independent warehouse
-    paths (each commit is its own atomic rename under a per-sink
-    name), so they are submitted concurrently by default
-    (plans.pipeline.materialize_concurrent) — the scheduler fills one
-    job's stage-barrier idle with another's tasks, which matters more
-    the larger the cluster. ``concurrent=False`` restores sequential
-    submission."""
-    from ..plans.pipeline import PipelineConfig, materialize_concurrent, run_pipeline
+    Two actions, no persist: the tagged fan-out (``compile_routed``) is
+    written once, partitioned by sink, so each row is parsed and
+    enriched once; then one grouping-sets aggregation over the files
+    just written (Spark reads back only the 5 columns it needs) is
+    written the same way. One manifest, renamed into place after both
+    writes, commits all of it with the receiver counters (accepted,
+    parse refused) observed on the first write.
+
+    Resume is all-or-nothing per run: a committed run is returned whole
+    with every result ``skipped``; a run whose data landed but whose
+    manifest did not is rewritten whole. A run_id that already has
+    per-sink ``write_sink`` commits raises, since rewriting it would
+    count those sinks twice."""
+    from ..plans.pipeline import PipelineConfig, aggregate_combined_tagged, compile_routed
 
     config = config or PipelineConfig()
-    res = run_pipeline(spark, transcripts, config)
-
-    def write(sink: str, df: DataFrame, **kw):
-        return lambda: warehouse.write_sink(
-            sink, df, run_id, input_fingerprint, **kw
+    snapshot_id = _fingerprint(run_id)
+    prior = warehouse._resume(snapshot_id, run_id, input_fingerprint)
+    if prior is not None:
+        return prior
+    sinks = [r.sink for r in config.routes]
+    if any(warehouse.has_run(s, run_id) for s in sinks + [f"{s}_agg" for s in sinks]):
+        raise ValueError(
+            f"run {run_id!r} already has per-sink commits — refusing to rewrite it"
         )
 
-    actions = {
-        sink: write(sink, df, lineage_keys=("conv_id", "ts"))
-        for sink, df in res["routed"].items()
-    }
-    actions.update(
-        {
-            f"{sink}_agg": write(f"{sink}_agg", agg_df)
-            for sink, agg_df in res["aggregates_combined"].items()
-        }
+    tagged, received = compile_routed(spark, transcripts, config)
+    entries = warehouse.write_partitioned(
+        "routed", tagged, run_id, sinks, lineage_keys=("conv_id", "ts")
     )
-    try:
-        if concurrent:
-            results = materialize_concurrent(actions)
-        else:
-            results = {name: fn() for name, fn in actions.items()}
-    finally:
-        if config.persist:
-            res["enriched"].unpersist()
-    return results
+    counters = {k: int(v) for k, v in received.get.items()}
+
+    # the routed table's own directory: read back by the schema just
+    # written (no footer inference; a run that routed no rows reads empty)
+    routed_dir = os.path.dirname(entries[sinks[0]]["path"])
+    written = spark.read.schema(tagged.schema).parquet(routed_dir)
+    aggregates = aggregate_combined_tagged(written, config.window).withColumn(
+        "sink", F.concat(F.col("sink"), F.lit("_agg"))
+    )
+    entries.update(
+        warehouse.write_partitioned(
+            "aggregates", aggregates, run_id, [f"{s}_agg" for s in sinks]
+        )
+    )
+    return warehouse._commit_sinks(snapshot_id, run_id, entries, input_fingerprint, counters)

@@ -1,6 +1,6 @@
-"""The fused (tagged fan-out, single-shuffle) pipeline compilation
-must produce exactly the per-sink results of the reference-shaped
-multi-action plan."""
+"""The tagged fan-out and its single-shuffle aggregation (what
+``run_and_write`` commits) must produce exactly the per-sink results of
+the reference-shaped per-sink frames."""
 
 from pyspark.sql import functions as F
 
@@ -8,10 +8,10 @@ from opentelemetry_collector_spark.plans.pipeline import (
     PipelineConfig,
     aggregate_combined,
     aggregate_combined_tagged,
+    compile_routed,
     parse_stage,
     route_stage,
     route_stage_tagged,
-    run_pipeline_fused,
 )
 
 
@@ -43,12 +43,13 @@ class TestFusedEquivalence:
         plan = agg._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange") == 1, plan
 
-    def test_run_pipeline_fused_counts(self, spark, tiny_transcripts):
-        res = run_pipeline_fused(spark, tiny_transcripts, PipelineConfig(persist=False))
+    def test_compile_routed_counts(self, spark, tiny_transcripts):
+        tagged, received = compile_routed(spark, tiny_transcripts, PipelineConfig())
         n = tiny_transcripts.count()
         per_sink = {
             r["sink"]: r["n"]
-            for r in res["routed_tagged"].groupBy("sink").agg(F.count("*").alias("n")).collect()
+            for r in tagged.groupBy("sink").agg(F.count("*").alias("n")).collect()
         }
         assert per_sink["archive"] == n
+        assert received.get["accepted"] == n
         assert set(per_sink) == {"errors", "tool_calls", "archive"}

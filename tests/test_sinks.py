@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.sinks import Warehouse, run_and_write
+from opentelemetry_collector_spark.sinks.warehouse import _fingerprint
 from opentelemetry_collector_spark.plans.pipeline import PipelineConfig
 
 
@@ -23,10 +24,12 @@ class TestWarehouse:
         assert r.rows == tiny_transcripts.count()
         # manifest exists and is complete
         m = wh.committed(r.snapshot_id)
-        assert m["rows"] == r.rows and m["sink"] == "archive"
+        assert list(m["sinks"]) == ["archive"]  # the one-entry manifest
+        e = m["sinks"]["archive"]
+        assert e["rows"] == r.rows
         # lineage covers all partitions and sums to the total
-        assert sum(p["rows"] for p in m["lineage"]) == r.rows
-        assert all("min_conv_id" in p for p in m["lineage"])
+        assert sum(p["rows"] for p in e["lineage"]) == r.rows
+        assert all("min_conv_id" in p for p in e["lineage"])
 
     def test_resume_skips_committed(self, spark, tiny_transcripts, wh):
         r1 = wh.write_sink("archive", tiny_transcripts, "run1")
@@ -80,33 +83,105 @@ class TestRunAndWrite:
         assert m["archive"] == n
         assert m["errors"] == results["errors"].rows
 
-    def test_sequential_path_commits_every_sink(
-        self, spark, tiny_transcripts, wh
-    ):
-        """concurrent=False submits the sink writes one by one; the
-        commits and the sent counters are the concurrent path's."""
-        results = run_and_write(
-            spark, tiny_transcripts, wh, "run1", concurrent=False
-        )
+    def test_one_manifest_commits_every_sink(self, spark, tiny_transcripts, wh):
+        """One run, one manifest: an entry per sink, each with its own
+        ``sink=<s>`` directory, so walking each result's path counts
+        each file once."""
+        results = run_and_write(spark, tiny_transcripts, wh, "run1")
         assert len(results) == 6
         assert not any(r.skipped for r in results.values())
-        assert results["archive"].rows == tiny_transcripts.count()
-        m = {r["sink"]: r["sent"] for r in wh.metrics_table(spark).collect()}
-        assert m == {name: r.rows for name, r in results.items()}
+        assert len({r.snapshot_id for r in results.values()}) == 1
+        m = wh.committed(results["archive"].snapshot_id)
+        assert set(m["sinks"]) == set(results)
+        assert os.listdir(os.path.join(wh.root, "_commits")) == [
+            f"{results['archive'].snapshot_id}.json"
+        ]
+        files = set()
+        for name, r in results.items():
+            assert os.path.basename(r.path) == f"sink={name}"
+            assert m["sinks"][name]["observed_sent"] == r.rows
+            assert sum(f["rows"] for f in r.lineage) == r.rows
+            files |= {os.path.join(r.path, f["file"]) for f in r.lineage}
+        assert len(files) == sum(len(r.lineage) for r in results.values())
+        sent = {r["sink"]: r["sent"] for r in wh.metrics_table(spark).collect()}
+        assert sent == {name: r.rows for name, r in results.items()}
+
+    def test_receiver_counters_ride_the_write(self, spark, tiny_transcripts, wh):
+        """accepted / parse refused are observed on the enriched frame,
+        before the fan-out clones rows, and land in the run manifest."""
+        from opentelemetry_collector_spark.plans.pipeline import parse_stage
+
+        results = run_and_write(spark, tiny_transcripts, wh, "run1")
+        counters = wh.committed(results["archive"].snapshot_id)["counters"]
+        refused = parse_stage(tiny_transcripts, engine="jvm").filter("NOT parsed").count()
+        assert counters == {
+            "accepted": tiny_transcripts.count(),
+            "parse_refused": refused,
+        }
+        assert refused > 0  # the fixture does hold unparseable turns
 
     def test_resume_after_partial_run(self, spark, tiny_transcripts, wh):
-        # first: commit only one sink (simulating a crash after it)
-        from opentelemetry_collector_spark.plans.pipeline import run_pipeline
+        """Resume is all-or-nothing per run: the run commits in one
+        manifest, so there is no partly committed run to finish."""
+        first = run_and_write(spark, tiny_transcripts, wh, "run1", input_fingerprint="fpA")
+        n_errors = first["errors"].rows
 
-        res = run_pipeline(spark, tiny_transcripts, PipelineConfig(persist=False))
-        wh.write_sink("errors", res["routed"]["errors"], "run1")
+        # a committed run comes back whole, every sink skipped
+        again = run_and_write(spark, tiny_transcripts, wh, "run1", input_fingerprint="fpA")
+        assert set(again) == set(first) and all(r.skipped for r in again.values())
+        assert {k: r.rows for k, r in again.items()} == {k: r.rows for k, r in first.items()}
 
-        # resume: full run skips the committed sink, completes the rest
+        # a crash between the data write and the manifest rename: the
+        # data stays, the manifest does not; the rerun rewrites the run
+        os.remove(os.path.join(wh.root, "_commits", f"{first['errors'].snapshot_id}.json"))
+        with pytest.raises(FileNotFoundError):
+            wh.read_sink(spark, "errors")  # uncommitted data is invisible
+        redo = run_and_write(spark, tiny_transcripts, wh, "run1", input_fingerprint="fpA")
+        assert not any(r.skipped for r in redo.values())
+        assert wh.read_sink(spark, "errors").count() == n_errors  # not doubled
+        assert wh.read_sink(spark, "errors_agg").count() == first["errors_agg"].rows
+
+        # the same run_id over different input is a misuse, not a resume
+        with pytest.raises(ValueError, match="different input fingerprint"):
+            run_and_write(spark, tiny_transcripts, wh, "run1", input_fingerprint="fpB")
+
+    def test_refuses_run_id_with_per_sink_commits(self, spark, tiny_transcripts, wh):
+        """A sink already committed under the run_id by ``write_sink``
+        would be counted twice by a whole-run rewrite."""
+        wh.write_sink("errors", tiny_transcripts, "run1")
+        with pytest.raises(ValueError, match="per-sink commits"):
+            run_and_write(spark, tiny_transcripts, wh, "run1")
+        # an aggregate table counts too: a crash may leave only it committed
+        wh.write_sink("errors_agg", tiny_transcripts.limit(3), "run2")
+        with pytest.raises(ValueError, match="per-sink commits"):
+            run_and_write(spark, tiny_transcripts, wh, "run2")
+        assert wh.committed(_fingerprint("run2")) is None
+
+    def test_lost_committed_directory_fails_the_read(self, spark, tiny_transcripts, wh):
+        """Only a sink committed with 0 rows may lack its directory; a
+        committed sink whose files are gone must fail loudly, not read
+        back short."""
+        import shutil
+
         results = run_and_write(spark, tiny_transcripts, wh, "run1")
-        assert results["errors"].skipped
-        assert not results["archive"].skipped
-        # totals identical to a fresh complete run
-        assert wh.read_sink(spark, "errors").count() == results["errors"].rows
+        assert results["errors"].rows > 0
+        shutil.rmtree(results["errors"].path)
+        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+            wh.read_sink(spark, "errors").count()
+
+    def test_route_matching_nothing_commits_zero_rows(self, spark, tiny_transcripts, wh):
+        """A sink no row reaches gets no partition directory: it commits
+        0 rows, its aggregate too, and reading it finds no snapshot."""
+        from opentelemetry_collector_spark.plans.pipeline import RouteRule
+
+        routes = [RouteRule("archive"), RouteRule("none", include=lambda df: F.lit(False))]
+        results = run_and_write(
+            spark, tiny_transcripts, wh, "run1", PipelineConfig(routes=routes)
+        )
+        assert results["none"].rows == 0 and results["none_agg"].rows == 0
+        assert results["archive"].rows == tiny_transcripts.count()
+        with pytest.raises(FileNotFoundError):
+            wh.read_sink(spark, "none")
 
     def test_routed_rows_match_reread(self, spark, tiny_transcripts, wh):
         """Routed-row equality through the sink: what was written is
@@ -220,30 +295,6 @@ class TestConcurrentWrites:
         assert done == [1]
         assert materialize_concurrent({}) == {}
 
-    @pytest.mark.slow
-    def test_run_and_write_concurrent_equals_sequential(
-        self, spark, tiny_transcripts, wh
-    ):
-        """Concurrent submission changes scheduling only: same commits,
-        same rows, same lineage totals as the sequential path.
-
-        Slow lane: runs the full sink pipeline twice; the fast lane
-        keeps the concurrent-default run_and_write e2e tests, one
-        sequential (concurrent=False) e2e test and the driver-side
-        scheduling unit test above."""
-        seq = run_and_write(
-            spark, tiny_transcripts, wh, "runC-seq", concurrent=False
-        )
-        con = run_and_write(spark, tiny_transcripts, wh, "runC-con")
-        assert set(seq) == set(con)
-        for name in seq:
-            assert con[name].rows == seq[name].rows, name
-            assert not con[name].skipped
-        key = ["conv_id", "turn_idx", "text"]
-        a = spark.read.parquet(seq["archive"].path).select(key)
-        b = spark.read.parquet(con["archive"].path).select(key)
-        assert a.subtract(b).count() == 0 and b.subtract(a).count() == 0
-
     def test_concurrent_spark_action_failure_isolated(
         self, spark, tmp_path
     ):
@@ -274,3 +325,58 @@ class TestConcurrentWrites:
                 }
             )
         assert spark.read.parquet(good_path).count() == 100
+
+
+class TestCommitPlanShape:
+    """The commit's plan shape, pinned without timing: the fan-out is
+    one write, so the job count does not grow with the routes, and no
+    cached frame sits anywhere in the run."""
+
+    def _run(self, spark, path, wh, run_id, routes):
+        """(job count, physical plans) of one run_and_write, from Spark's
+        status tracker and SQL store. Jobs are counted under a job group,
+        plus any new ungrouped job: a job submitted from another driver
+        thread does not inherit the group."""
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        store = spark._jsparkSession.sharedState().statusStore()
+        seq = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+
+        def executions():
+            return {e.executionId(): e for e in seq(store.executionsList())}
+
+        before, ungrouped = set(executions()), set(tracker.getJobIdsForGroup())
+        persistent = sc._jsc.getPersistentRDDs().size()
+        sc.setJobGroup(run_id, run_id)
+        try:
+            run_and_write(
+                spark, spark.read.parquet(path), wh, run_id, PipelineConfig(routes=routes)
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        # nothing the run persisted is left behind
+        assert sc._jsc.getPersistentRDDs().size() == persistent
+        jobs = set(tracker.getJobIdsForGroup(run_id))
+        jobs |= set(tracker.getJobIdsForGroup()) - ungrouped
+        plans = [e.physicalPlanDescription() for i, e in executions().items() if i not in before]
+        return len(jobs), plans
+
+    def test_jobs_do_not_grow_with_routes_and_nothing_is_cached(
+        self, spark, tiny_transcripts, wh, tmp_path
+    ):
+        from opentelemetry_collector_spark.plans.pipeline import RouteRule, default_routes
+
+        path = str(tmp_path / "in")  # an uncached input, as in production
+        tiny_transcripts.write.parquet(path)
+        five = default_routes() + [
+            RouteRule("user", include=lambda df: F.col("role") == "user"),
+            RouteRule("info", include=lambda df: F.col("level") == "info"),
+        ]
+        jobs3, plans3 = self._run(spark, path, wh, "shape-3", default_routes())
+        jobs5, plans5 = self._run(spark, path, wh, "shape-5", five)
+        assert jobs3 > 0 and jobs3 == jobs5
+        assert plans3 and len(plans3) == len(plans5)
+        for plan in plans3 + plans5:
+            for node in ("InMemoryRelation", "InMemoryTableScan", "TableCacheQueryStage"):
+                assert node not in plan, plan
