@@ -17,8 +17,9 @@ Local smoke:
     python jobs/run_pipeline.py --generate-convs 1000 \
         --warehouse /tmp/wh --run-id smoke --master 'local[8]'
 
-The job is idempotent per --run-id: rerunning after a failure skips
-sinks whose snapshot already committed (see sinks.warehouse). Scaling
+The job is idempotent per --run-id: a run commits every sink in one
+manifest, so a rerun of a committed run skips the whole run and a rerun
+of an uncommitted one rewrites it whole (see sinks.warehouse). Scaling
 evidence for the N-vs-4N criterion comes from tools/cluster_bench.py,
 which runs this same pipeline on a real standalone cluster at 1 vs 4
 workers; tools/submit_cluster_demo.py proves this exact spark-submit
@@ -50,26 +51,15 @@ def main() -> None:
                     help="override master for local runs (cluster: set by spark-submit)")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from opentelemetry_collector_spark.session import get_spark
 
-    builder = SparkSession.builder.appName(f"otelcol_spark:{args.run_id}")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
-    from opentelemetry_collector_spark.session import ship_package
+    # under spark-submit with no --master here, spark-submit's master stands
+    spark = get_spark(app_name=f"otelcol_spark:{args.run_id}", master=args.master or None)
     from opentelemetry_collector_spark.sources import read_transcripts
     from opentelemetry_collector_spark.plans.pipeline import (
         PipelineConfig, repartition_for_skew,
     )
     from opentelemetry_collector_spark.sinks import Warehouse, run_and_write
-
-    ship_package(spark)
 
     if args.generate_convs:
         transcripts = read_transcripts(spark, n_convs=args.generate_convs)

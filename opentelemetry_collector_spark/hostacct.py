@@ -3,7 +3,7 @@
 and are invisible to 1-min loadavg sampled at pass edges. These
 helpers measure, per timed section, how much CPU on a given core set
 was burned by processes OUTSIDE our own process tree — the mechanical
-contamination signal bench.py and tools/scaling_bench.py use to
+contamination signal bench.py and tools/cluster_bench.py use to
 exclude or flag contended timings (kernel threads contribute <2% on
 this box; co-tenant bursts measure 20%+)."""
 

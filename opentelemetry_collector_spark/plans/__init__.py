@@ -5,7 +5,6 @@ from .pipeline import (
     parse_stage,
     enrich_stage,
     route_stage,
-    aggregate_stage,
     run_pipeline,
 )
 
@@ -16,6 +15,5 @@ __all__ = [
     "parse_stage",
     "enrich_stage",
     "route_stage",
-    "aggregate_stage",
     "run_pipeline",
 ]

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import read_table
+from .pipeline import TRANSCRIPT_PATTERN
 
 # ---------------------------------------------------------------------------
 # shared derivation: events → transcripts (identical in both dialects)
@@ -32,18 +33,12 @@ from ..sources.tables import read_table
 
 from .shared_sql import _TRANSCRIPTS_FROM_EVENTS, _derive_transcripts, _register  # noqa: F401
 
-# role → role_class dim (both sides; Spark joins it broadcast, the
-# oracle folds it as a CASE)
+# role → role_class as the oracle folds it: datagen.ROLE_LOOKUP's
+# mapping, which the Spark side joins broadcast in enrich_stage
 _ROLE_CLASS_CASE = """
   CASE role WHEN 'user' THEN 'human' WHEN 'assistant' THEN 'model'
             WHEN 'system' THEN 'control' WHEN 'tool' THEN 'machine' END
 """
-_ROLE_DIM_ROWS = [
-    ("user", "human", 9),
-    ("assistant", "model", 10),
-    ("system", "control", 13),
-    ("tool", "machine", 5),
-]
 
 _DUCK_EPOCH = "(epoch_us({col}) // 1000000)"
 
@@ -53,12 +48,6 @@ def _epoch_s(col: F.Column) -> F.Column:
     yield NTZ in Spark 4; with the session pinned UTC the two agree
     with DuckDB's epoch_us of the naive value)."""
     return col.cast("timestamp").cast("long")
-
-
-def _role_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        _ROLE_DIM_ROWS, "role string, role_class string, severity_number int"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -71,13 +60,16 @@ def q_pipeline_errors_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     role_class × level × 5-min window, counting turns and summing the
     parsed duration. Exercises the Arrow parse UDF, the broadcast
     enrich join, the route predicate and the windowed aggregation."""
-    from .pipeline import parse_stage
+    from .. import datagen
+    from .pipeline import default_routes, enrich_stage, parse_stage, route_stage
 
     t = _derive_transcripts(spark, sf_dir)
-    pattern = r"\[(?P<level>\w+)\] (?P<component>\w+): (?P<msg>.*?) duration=(?P<duration_ms>\d+)ms"
-    parsed = parse_stage(t, pattern, engine="arrow")
-    enriched = parsed.join(F.broadcast(_role_dim(spark)), "role", "left")
-    routed = enriched.filter(F.col("level").isin("warn", "error"))
+    enriched = enrich_stage(
+        parse_stage(t, TRANSCRIPT_PATTERN, engine="arrow"),
+        datagen.role_lookup_df(spark),
+        datagen.tool_lookup_df(spark),
+    )
+    routed = route_stage(enriched, default_routes())["errors"]
     return (
         routed.groupBy(
             "role_class",
@@ -118,8 +110,7 @@ def q_pipeline_routed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline import parse_stage
 
     t = _derive_transcripts(spark, sf_dir)
-    pattern = r"\[(?P<level>\w+)\] (?P<component>\w+): (?P<msg>.*?) duration=(?P<duration_ms>\d+)ms"
-    parsed = parse_stage(t, pattern, engine="arrow")
+    parsed = parse_stage(t, TRANSCRIPT_PATTERN, engine="arrow")
     return parsed.filter(F.col("level").isin("warn", "error")).select(
         "conv_id", "turn_idx", "role", "text"
     )
@@ -142,8 +133,7 @@ def q_route_fanout_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .pipeline import RouteRule, parse_stage, route_stage
 
     t = _derive_transcripts(spark, sf_dir)
-    pattern = r"\[(?P<level>\w+)\] (?P<component>\w+): (?P<msg>.*?) duration=(?P<duration_ms>\d+)ms"
-    parsed = parse_stage(t, pattern, engine="jvm").withColumn(
+    parsed = parse_stage(t, TRANSCRIPT_PATTERN, engine="jvm").withColumn(
         "attrs",
         F.map_filter(
             F.create_map(

@@ -13,18 +13,20 @@ receiver → processor chain → exporter fan-out
       → route      (filter/matcher predicates fanning rows out to N
                     sinks; fanoutconnector.go:29-98 + filterlog)
       → aggregate  (per-sink counts by conv_id/role/tool and 5-minute
-                    event-time windows — the obsreport "sent" counters,
-                    obsreport/obsreport_exporter.go:29-44)
+                    event-time windows in one grouping-sets shuffle)
 
 Everything is one declarative DataFrame DAG: Catalyst pushes the parse
 projections into the scan, the lookup joins are explicit broadcasts
 (≤20-row dims), and the only shuffle is the grouping-sets aggregation.
-``compile_routed`` is the production compile: each row is parsed and
-enriched once, then cloned to every sink whose rule matches in one
-tagged fan-out (cloningfanoutconnector.go:46-66), so one write commits
-every sink — the analog of the reference sharing one receiver instance
-across pipelines (docs/design.md:68). ``run_pipeline`` keeps the
-per-sink frame view of the same stages.
+``compile_routed`` is the one compile every commit runs, a batch run
+and a stream micro-batch alike: each row is parsed and enriched once,
+then cloned to every sink whose rule matches in one tagged fan-out
+(cloningfanoutconnector.go:46-66), so one write commits every sink —
+the analog of the reference sharing one receiver instance across
+pipelines (docs/design.md:68). The receiver and per-sink counters
+(obsreport) ride that write into the run manifest. ``run_pipeline``
+keeps a persisted per-sink frame view of the same stages, which the
+layer-by-layer benchmark and the cluster bench force.
 
 Scale notes (100 TB / 10^12 turns):
   * the parse+enrich stage is embarrassingly parallel — no shuffle;
@@ -240,32 +242,10 @@ def aggregate_combined(df: DataFrame, window: str = "5 minutes") -> DataFrame:
     return gs.select("group_set", "conv_id", "role", "tool", "window_start", "n_turns")
 
 
-def aggregate_stage(df: DataFrame, window: str = "5 minutes") -> dict[str, DataFrame]:
-    """The four aggregations as separate frames (views over the single
-    grouping-sets aggregation). Window starts are epoch seconds so
-    goldens are timezone-proof; by_tool keeps the reference's
-    non-null-attribute semantics."""
-    combined = aggregate_combined(df, window)
-    return {
-        "by_conv": combined.filter(F.col("group_set") == "by_conv").select(
-            "conv_id", "n_turns"
-        ),
-        "by_role": combined.filter(F.col("group_set") == "by_role").select(
-            "role", "n_turns"
-        ),
-        "by_tool": combined.filter(
-            (F.col("group_set") == "by_tool") & F.col("tool").isNotNull()
-        ).select("tool", "n_turns"),
-        "by_window": combined.filter(F.col("group_set") == "by_window").select(
-            "window_start", "n_turns"
-        ),
-    }
-
-
 @dataclass
 class PipelineConfig:
     """The YAML-config analog (configmodels.Config): declarative stage
-    settings compiled once into a DataFrame DAG by ``run_pipeline``."""
+    settings compiled once into a DataFrame DAG by ``compile_routed``."""
 
     pattern: str = TRANSCRIPT_PATTERN
     parse_engine: str = "arrow"
@@ -273,11 +253,8 @@ class PipelineConfig:
     window: str = "5 minutes"
     redact_sensitive: bool = False
     salt_threshold: int | None = None  # turns per conv above which to salt
-    # Persist the enriched frame under run_pipeline's per-sink frames:
-    # without it every sink/aggregate frame forced on its own re-runs the
-    # parse+enrich DAG. compile_routed needs no persist (one action).
-    persist: bool = True
-    # StorageLevel name for that persist. MEMORY_AND_DISK (Spark's
+    # StorageLevel name for run_pipeline's persist of the enriched frame
+    # (compile_routed needs none: one action). MEMORY_AND_DISK (Spark's
     # default) churns the multi-GB enriched frame through the executor
     # old-gen every run — repeated runs in one long-lived app pay GC
     # for it. DISK_ONLY keeps the heap flat and reads back from the
@@ -363,12 +340,12 @@ def materialize_concurrent(actions: dict, max_threads: int = 8) -> dict:
     return results
 
 
-def _enriched(spark, transcripts, config, role_lookup=None, tool_lookup=None) -> DataFrame:
+def _enriched(spark, transcripts, config) -> DataFrame:
     parsed = parse_stage(transcripts, config.pattern, engine=config.parse_engine)
     return enrich_stage(
         parsed,
-        role_lookup or datagen.role_lookup_df(spark),
-        tool_lookup or datagen.tool_lookup_df(spark),
+        datagen.role_lookup_df(spark),
+        datagen.tool_lookup_df(spark),
         redact_sensitive=config.redact_sensitive,
     )
 
@@ -399,52 +376,27 @@ def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
     config: PipelineConfig | None = None,
-    role_lookup: DataFrame | None = None,
-    tool_lookup: DataFrame | None = None,
 ) -> dict:
-    """Compile + return the per-sink frame view of the pipeline (lazily —
-    nothing executes here); ``compile_routed`` is the one-write compile
-    that ``run_and_write`` ships.
+    """Compile the per-sink frame view of the pipeline (lazily — nothing
+    executes here): the enriched frame, persisted at
+    ``config.storage_level`` so each sink's frame forced on its own does
+    not re-run the parse, and one filtered frame plus one grouping-sets
+    aggregate per sink. The caller unpersists ``enriched``.
+    ``compile_routed`` is the one-write compile that ``run_and_write``
+    ships; the run's counters ride its manifest.
 
-    Returns {'enriched': df, 'routed': {sink: df}, 'aggregates':
-    {sink: {agg_name: df}}, 'metrics': df} where metrics carries the
-    obsreport-style per-stage/per-sink counters.
+    Returns {'enriched': df, 'routed': {sink: df},
+    'aggregates_combined': {sink: df}}.
     """
     config = config or PipelineConfig()
-    enriched = _enriched(spark, transcripts, config, role_lookup, tool_lookup)
-    if config.persist:
-        enriched = enriched.persist(getattr(StorageLevel, config.storage_level))
+    enriched = _enriched(spark, transcripts, config).persist(
+        getattr(StorageLevel, config.storage_level)
+    )
     routed = route_stage(enriched, config.routes)
-    aggregates = {sink: aggregate_stage(df, config.window) for sink, df in routed.items()}
-    aggregates_combined = {
-        sink: aggregate_combined(df, config.window) for sink, df in routed.items()
-    }
-
-    # obsreport parity: receiver accepted / per-sink sent counters
-    # (obsreport_receiver.go:30-51, obsreport_exporter.go:29-44).
-    metrics_parts = [
-        transcripts.agg(
-            F.lit("receiver").alias("stage"),
-            F.lit("transcripts").alias("name"),
-            F.count(F.lit(1)).alias("accepted"),
-        )
-    ]
-    for sink, df in routed.items():
-        metrics_parts.append(
-            df.agg(
-                F.lit("exporter").alias("stage"),
-                F.lit(sink).alias("name"),
-                F.count(F.lit(1)).alias("accepted"),
-            )
-        )
-    metrics = metrics_parts[0]
-    for part in metrics_parts[1:]:
-        metrics = metrics.unionByName(part)
-
     return {
         "enriched": enriched,
         "routed": routed,
-        "aggregates": aggregates,
-        "aggregates_combined": aggregates_combined,
-        "metrics": metrics,
+        "aggregates_combined": {
+            sink: aggregate_combined(df, config.window) for sink, df in routed.items()
+        },
     }

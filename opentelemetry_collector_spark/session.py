@@ -74,20 +74,25 @@ def get_spark(
     ``spark://host:7077`` for a standalone cluster (tools/cluster_bench.py)
     — in which case ``cpus`` sizes only the shuffle partitioning and the
     executor fleet is described via ``extra_conf`` (spark.executor.cores /
-    spark.cores.max), mirroring a spark-submit deployment. The driver
-    heap is ``SPARK_DRIVER_MEM`` when set, else ``default_driver_memory()``.
+    spark.cores.max), mirroring a spark-submit deployment. Under
+    ``spark-submit`` with neither given, its ``--master`` stands. The
+    driver heap is ``SPARK_DRIVER_MEM`` when set, else
+    ``default_driver_memory()``.
     """
     if cpus is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
         cpus = int(env) if env else 0
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or (
-        f"local[{cpus}]" if cpus else "local[*]"
-    )
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or None
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        # not launched by spark-submit, so nothing else sets a master
+        master = f"local[{cpus}]" if cpus else "local[*]"
     n_shuffle = shuffle_partitions or (cpus if cpus else (os.cpu_count() or 8))
 
+    builder = SparkSession.builder.appName(app_name)
+    if master:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        builder
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

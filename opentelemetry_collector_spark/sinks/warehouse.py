@@ -13,9 +13,11 @@ Design (Iceberg-shaped, parquet-backed):
     ``<root>/aggregates/snap=<snapshot_id>/sink=<s>_agg/`` —
     snapshot_id is a deterministic fingerprint of the run_id, so a
     re-run of the same run_id OVERWRITES its own snapshot rather than
-    duplicating rows. ``write_sink`` writes one sink's frame to
-    ``<root>/<sink>/snap=<snapshot_id>/`` (fingerprint of run_id +
-    sink) — the streaming path's per-epoch commits;
+    duplicating rows. A stream micro-batch commits the same way, as
+    the run ``<stream_id>-epoch-<N>``. ``write_sink`` commits one
+    frame as its own table, ``<root>/<sink>/snap=<snapshot_id>/``
+    (fingerprint of run_id + sink), optionally in the day/bucket
+    partition layout;
   * ONE commit manifest per snapshot (JSON, written atomically via
     rename AFTER the data lands) with one entry per sink: path, row
     count, observed sent count, per-file lineage; a run's manifest

@@ -13,18 +13,18 @@ Key correspondences:
     (batch_processor.go:115-171): a window emits when event time has
     provably moved past it, not on a wall clock;
   * ``foreachBatch`` multi-sink write = the fan-out connector
-    (processor/fanoutconnector.go:29-98) — each micro-batch is routed
-    once and written to every matching sink exactly like the batch
-    path, through the same Warehouse snapshot commits (epoch id →
-    run_id makes micro-batch writes idempotent under retries);
+    (processor/fanoutconnector.go:29-98) — each micro-batch is one
+    ``run_and_write`` run, the batch path's one compile and one
+    partitioned write with one manifest (epoch id → run_id makes
+    micro-batch commits idempotent under retries);
   * ``applyInPandasWithState`` per-conversation batch emitter =
     send_batch_size semantics (batch_processor.go:151-163 +
     splittraces.go:22-65): per-key state accumulates counts and emits
     a batch row each time the threshold is crossed.
 
-The transformation stages are literally the batch functions — one
-logical-plan library serves both engines, which is the point of the
-Spark-first design.
+The transformation stages and the commit are literally the batch
+functions — one logical-plan library serves both engines, which is the
+point of the Spark-first design.
 """
 
 from __future__ import annotations
@@ -67,7 +67,7 @@ def streaming_windowed_counts(
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Watermarked event-time window counts by role — the continuous
-    form of the batch ``aggregate_stage``; late rows beyond the
+    form of the batch by-window aggregate; late rows beyond the
     watermark are dropped exactly once rather than re-opening windows."""
     return (
         source.withWatermark("ts", watermark)
@@ -237,19 +237,29 @@ def start_routed_stream(
     config=None,
     available_now: bool = True,
 ):
-    """Run the full parse→enrich→route pipeline per micro-batch and
-    commit every routed sink through the Warehouse. The run_id is
-    namespaced by a stable stream identity (sha256 of the checkpoint
-    dir) + epoch id, so a retried micro-batch (failure replay) skips
-    sinks it already committed — exactly-once sink delivery on top of
-    at-least-once replay — while a SECOND stream, or a restart with a
-    fresh checkpoint, gets a different namespace and can never collide
-    with (and silently skip against) another stream's epochs. Legacy
-    un-namespaced ``epoch-N`` snapshots are honored ONLY when the
-    checkpoint provably predates namespacing (see
-    ``_legacy_epoch_mode``)."""
-    from ..plans.pipeline import PipelineConfig, parse_stage, enrich_stage, route_stage
-    from .. import datagen
+    """Commit each micro-batch as one ``run_and_write`` run: the batch
+    path's compile, one write partitioned by sink, the per-sink
+    ``<s>_agg`` tables and one manifest per epoch carrying the receiver
+    counters, with ``config`` (redaction included) honoured as in
+    batch. Resume is all-or-nothing per epoch.
+
+    The run_id is namespaced by a stable stream identity (sha256 of the
+    checkpoint dir) + epoch id, so a retried micro-batch (failure
+    replay) skips the epoch it already committed — exactly-once sink
+    delivery on top of at-least-once replay — while a SECOND stream, or
+    a restart with a fresh checkpoint, gets a different namespace and
+    can never collide with (and silently skip against) another stream's
+    epochs.
+
+    Warehouses written before epochs were whole runs may hold per-sink
+    ``write_sink`` commits of an epoch: those sinks are dropped from
+    the epoch's routes, and the rest commit as the run. Legacy
+    un-namespaced ``epoch-N`` commits count ONLY when the checkpoint
+    provably predates namespacing (see ``_legacy_epoch_mode``)."""
+    from dataclasses import replace
+
+    from ..plans.pipeline import PipelineConfig
+    from ..sinks.warehouse import run_and_write
 
     config = config or PipelineConfig()
     stream_id = stream_identity(checkpoint_dir)
@@ -258,21 +268,20 @@ def start_routed_stream(
     )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        s = batch_df.sparkSession
-        parsed = parse_stage(batch_df, config.pattern, engine=config.parse_engine)
-        enriched = enrich_stage(
-            parsed, datagen.role_lookup_df(s), datagen.tool_lookup_df(s)
-        ).persist()
-        try:
-            for sink, df in route_stage(enriched, config.routes).items():
-                # one-time migration, scoped to genuinely pre-
-                # namespacing checkpoints: replaying an epoch the old
-                # build committed as "epoch-N" must not double-commit
-                if legacy_mode and warehouse.has_run(sink, f"epoch-{epoch_id}"):
-                    continue
-                warehouse.write_sink(sink, df, run_id=f"{stream_id}-epoch-{epoch_id}")
-        finally:
-            enriched.unpersist()
+        run_id = f"{stream_id}-epoch-{epoch_id}"
+        # a committed epoch lists every sink, so a replay of it keeps
+        # no route; sinks an older build committed one by one (under
+        # "epoch-N" before namespacing) keep their rows
+        routes = [
+            r for r in config.routes
+            if not warehouse.has_run(r.sink, run_id)
+            and not (legacy_mode and warehouse.has_run(r.sink, f"epoch-{epoch_id}"))
+        ]
+        if routes:
+            run_and_write(
+                batch_df.sparkSession, batch_df, warehouse, run_id,
+                config=replace(config, routes=routes),
+            )
 
     writer = (
         source.writeStream.foreachBatch(process_batch)

@@ -8,6 +8,7 @@ import re
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.datagen import (
     make_transcripts_pdf,
@@ -39,7 +40,9 @@ def result(spark):
     from opentelemetry_collector_spark.datagen import make_transcripts_df
 
     df = make_transcripts_df(spark, n_convs=30, seed=42)
-    return run_pipeline(spark, df, PipelineConfig(parse_engine="arrow"))
+    res = run_pipeline(spark, df, PipelineConfig(parse_engine="arrow"))
+    yield res
+    res["enriched"].unpersist()
 
 
 def routed_oracle(oracle_pdf, sink):
@@ -71,21 +74,25 @@ def test_routed_row_equality(result, oracle_pdf, sink):
 @pytest.mark.parametrize("sink", ["errors", "tool_calls", "archive"])
 def test_per_sink_aggregate_counts(result, oracle_pdf, sink):
     want_rows = routed_oracle(oracle_pdf, sink)
-    aggs = result["aggregates"][sink]
+    aggs = result["aggregates_combined"][sink]
 
-    by_role = {r["role"]: r["n_turns"] for r in aggs["by_role"].collect()}
-    assert by_role == want_rows.groupby("role").size().to_dict()
+    def counts(group_set, key, cond=None):
+        df = aggs.filter(F.col("group_set") == group_set)
+        if cond is not None:
+            df = df.filter(cond)
+        return {r[key]: r["n_turns"] for r in df.collect()}
 
-    by_conv = {r["conv_id"]: r["n_turns"] for r in aggs["by_conv"].collect()}
-    assert by_conv == want_rows.groupby("conv_id").size().to_dict()
+    assert counts("by_role", "role") == want_rows.groupby("role").size().to_dict()
+    assert counts("by_conv", "conv_id") == want_rows.groupby("conv_id").size().to_dict()
+    # by_tool keeps the reference's non-null-attribute semantics
+    assert (
+        counts("by_tool", "tool", F.col("tool").isNotNull())
+        == want_rows[want_rows.tool.notna()].groupby("tool").size().to_dict()
+    )
 
-    by_tool = {r["tool"]: r["n_turns"] for r in aggs["by_tool"].collect()}
-    assert by_tool == want_rows[want_rows.tool.notna()].groupby("tool").size().to_dict()
-
-    by_window = {r["window_start"]: r["n_turns"] for r in aggs["by_window"].collect()}
     epoch_s = want_rows["ts"].astype("datetime64[us]").astype("int64") // 10**6
     win = (epoch_s // 300 * 300).astype(int)
-    assert by_window == want_rows.groupby(win).size().to_dict()
+    assert counts("by_window", "window_start") == want_rows.groupby(win).size().to_dict()
 
 
 def test_enrich_lookup_semantics(result):
@@ -100,12 +107,21 @@ def test_enrich_lookup_semantics(result):
     assert len(sensitive) > 0 and sensitive["is_sensitive"].all()
 
 
-def test_metrics_conservation(result, oracle_pdf):
-    metrics = {(r["stage"], r["name"]): r["accepted"] for r in result["metrics"].collect()}
-    assert metrics[("receiver", "transcripts")] == len(oracle_pdf)
-    assert metrics[("exporter", "archive")] == len(oracle_pdf)
-    assert metrics[("exporter", "tool_calls")] == (oracle_pdf.role == "tool").sum()
-    assert metrics[("exporter", "errors")] == oracle_pdf.level.isin(["warn", "error"]).sum()
+def test_metrics_conservation(spark, oracle_pdf, tmp_path):
+    """The obsreport counters ride the run manifest: receiver accepted
+    and each sink's sent count, on the same input as the oracle."""
+    from opentelemetry_collector_spark.datagen import make_transcripts_df
+    from opentelemetry_collector_spark.sinks import Warehouse, run_and_write
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    df = make_transcripts_df(spark, n_convs=30, seed=42)
+    results = run_and_write(spark, df, wh, "run1", PipelineConfig(parse_engine="arrow"))
+    m = wh.committed(results["archive"].snapshot_id)
+    sent = {sink: e["observed_sent"] for sink, e in m["sinks"].items()}
+    assert m["counters"]["accepted"] == len(oracle_pdf)
+    assert sent["archive"] == len(oracle_pdf)
+    assert sent["tool_calls"] == (oracle_pdf.role == "tool").sum()
+    assert sent["errors"] == oracle_pdf.level.isin(["warn", "error"]).sum()
 
 
 def test_parse_engines_agree(spark):

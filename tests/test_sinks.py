@@ -189,7 +189,8 @@ class TestRunAndWrite:
         under stable (conv_id, turn_idx) ordering)."""
         from opentelemetry_collector_spark.plans.pipeline import run_pipeline
 
-        res = run_pipeline(spark, tiny_transcripts, PipelineConfig(persist=False))
+        res = run_pipeline(spark, tiny_transcripts, PipelineConfig())
+        res["enriched"].unpersist()  # the route stage's frame, uncached
         expect = res["routed"]["errors"].select("conv_id", "turn_idx", "text")
         run_and_write(spark, tiny_transcripts, wh, "run1")
         got = wh.read_sink(spark, "errors").select("conv_id", "turn_idx", "text")

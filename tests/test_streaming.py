@@ -82,6 +82,67 @@ class TestStreamingPipeline:
             .count()
         )
         assert wh.read_sink(spark, "errors").count() == expect_err
+        # each epoch is one run: one manifest with the receiver counters
+        manifests = list(wh._manifests())
+        assert len(manifests) == 2  # 4 files, 2 per trigger
+        assert all(len(m["sinks"]) == 6 for m in manifests)
+        assert sum(m["counters"]["accepted"] for m in manifests) == n
+        # the per-epoch aggregates sum to the batch aggregate
+        from opentelemetry_collector_spark.plans.pipeline import aggregate_combined
+
+        keys = ["group_set", "conv_id", "role", "tool", "window_start"]
+        got = (
+            wh.read_sink(spark, "archive_agg")
+            .groupBy(keys)
+            .agg(F.sum("n_turns").alias("n_turns"))
+        )
+        want = aggregate_combined(tiny_transcripts).select(*keys, "n_turns")
+        assert got.subtract(want).count() == 0
+        assert want.subtract(got).count() == 0
+
+    def test_redaction_honoured(self, spark, tiny_transcripts, source_dir, tmp_path):
+        """The stream commits through the batch compile, so
+        ``redact_sensitive`` hashes the text of sensitive-tool turns."""
+        from opentelemetry_collector_spark.plans.pipeline import PipelineConfig
+
+        wh = Warehouse(str(tmp_path / "wh_redact"))
+        src = stream_transcripts(spark, source_dir)
+        q = start_routed_stream(
+            spark, src, wh, checkpoint_dir=str(tmp_path / "ckpt_redact"),
+            config=PipelineConfig(redact_sensitive=True),
+        )
+        _await(q)
+        key = ["conv_id", "turn_idx", "text"]
+        sensitive = F.col("tool") == "python"
+        assert tiny_transcripts.filter(sensitive).count() > 0
+        want = tiny_transcripts.withColumn(
+            "text", F.when(sensitive, F.sha1("text")).otherwise(F.col("text"))
+        ).select(key)
+        got = wh.read_sink(spark, "archive").select(key)
+        assert got.count() == want.count()
+        assert got.subtract(want).count() == 0
+        assert want.subtract(got).count() == 0
+
+    def test_epoch_with_per_sink_commit_keeps_its_rows(
+        self, spark, tiny_transcripts, source_dir, tmp_path
+    ):
+        """A warehouse from before epochs were whole runs may hold a
+        per-sink commit of an epoch: on replay that sink keeps its rows
+        and the other sinks commit as the epoch's run."""
+        from opentelemetry_collector_spark.streaming.pipeline import stream_identity
+
+        wh = Warehouse(str(tmp_path / "wh_upgrade"))
+        ckpt = str(tmp_path / "ckpt_upgrade")
+        run_id = f"{stream_identity(ckpt)}-epoch-0"
+        wh.write_sink("errors", tiny_transcripts.limit(3), run_id=run_id)
+
+        src = stream_transcripts(spark, source_dir)  # one epoch
+        q = start_routed_stream(spark, src, wh, checkpoint_dir=ckpt)
+        _await(q)  # raises if the epoch's run raised
+        assert wh.read_sink(spark, "errors").count() == 3
+        assert wh.read_sink(spark, "archive").count() == tiny_transcripts.count()
+        assert wh.has_run("archive_agg", run_id)
+        assert not wh.has_run("errors_agg", run_id)
 
     # slow lane: stream==batch on sf parquet; streaming_parity driver row re-verifies
     @pytest.mark.slow

@@ -5,21 +5,20 @@ every worker an identical executor spec (6 cores, own JVM + heap,
 taskset-pinned to its own disjoint core set, own tmpfs shuffle dirs),
 driver + master pinned to the spare cores like a separate driver node.
 
-This supersedes the single-JVM local[N]-vs-local[4N] harness
-(tools/scaling_bench.py) for the headline number: a 24-thread single
-JVM time-shares one scheduler, one heap and one Python-worker pool
-across all cores, which produced 26s..187s pass swings with ZERO
-external CPU on the pinned cores (BENCH/campaign.json round 2/3) — an
-artifact no multi-executor cluster has, because each executor owns its
-heap and workers. Here the low leg IS literally one of the high leg's
+A single-JVM local[N]-vs-local[4N] harness cannot give the headline
+number: a 24-thread single JVM time-shares one scheduler, one heap and
+one Python-worker pool across all cores, which produced 26s..187s pass
+swings with ZERO external CPU on the pinned cores — an artifact no
+multi-executor cluster has, because each executor owns its heap and
+workers. Here the low leg IS literally one of the high leg's
 executors, so per-executor effects cancel in the ratio and what remains
 is genuine scale cost: inter-executor shuffle + one driver coordinating
 4x the tasks.
 
 Usage: python tools/cluster_bench.py [n_convs] [n_runs]
 Writes per-run JSON lines to stdout (assemble with
-tools/assemble_campaign.py) and BENCH/cluster_campaign.json when
-n_runs > 1.
+tools/assemble_cluster_campaign.py) and BENCH/cluster_campaign.json
+when n_runs > 1.
 """
 
 from __future__ import annotations
@@ -321,12 +320,44 @@ def run_leg(n_workers: int, path: str) -> dict:
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
+def ensure_input(n_convs: int, replicate: int = 16) -> str:
+    """Deterministic scaling input: a seeded base table replicated
+    ``replicate``× with suffixed conv_ids (distinct conversations,
+    identical turn content), written as many parquet files so the scan
+    parallelizes like the production input (thousands of files on
+    object storage). Sized so the measured section runs tens of
+    seconds at N cores — short tasks measure scheduler overhead, not
+    scaling."""
+    path = f"/tmp/transcripts_scaling_{n_convs}x{replicate}"
+    if os.path.exists(path):
+        return path
+    sys.path.insert(0, REPO)
+    from opentelemetry_collector_spark.datagen import make_transcripts_pdf
+    from opentelemetry_collector_spark.session import get_spark
+
+    print(f"generating {n_convs} conversations ×{replicate} …", file=sys.stderr)
+    pdf = make_transcripts_pdf(n_convs=n_convs, seed=42)
+    spark = get_spark(app_name="scaling_datagen", cpus=0)  # local[*]
+    base = spark.createDataFrame(pdf)
+    from pyspark.sql import functions as F
+
+    replicated = (
+        base.crossJoin(
+            spark.range(replicate).select(F.col("id").alias("_rep"))
+        )
+        .withColumn("conv_id", F.concat_ws("#", "conv_id", F.col("_rep").cast("string")))
+        .drop("_rep")
+    )
+    replicated.repartition(128).write.mode("overwrite").parquet(path)
+    n = spark.read.parquet(path).count()
+    print(f"wrote {n} rows to {path}", file=sys.stderr)
+    spark.stop()
+    return path
+
+
 def main() -> None:
     n_convs = int(sys.argv[1]) if len(sys.argv) > 1 else 120_000
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 1
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from scaling_bench import ensure_input
-
     path = ensure_input(n_convs)
 
     def with_retry(n_workers: int) -> dict:

@@ -98,6 +98,7 @@ def main() -> None:
     from opentelemetry_collector_spark.session import get_spark
     from opentelemetry_collector_spark.sources import read_transcripts
     from opentelemetry_collector_spark.plans import run_pipeline
+    from opentelemetry_collector_spark.sinks import Warehouse
 
     spark = get_spark(app_name="submit_demo_verify", cpus=8)
     res = run_pipeline(spark, read_transcripts(spark, n_convs=n_convs))
@@ -105,15 +106,13 @@ def main() -> None:
 
     ok = True
     for n_workers, leg in sizes.items():
+        warehouse = Warehouse(leg["warehouse"])
         sinks = {}
         for sink, want in sorted(expected.items()):
-            # layout: <root>/<sink>/snap=<snapshot_id>/part-*.parquet
-            base = os.path.join(leg["warehouse"], sink)
-            snaps = sorted(
-                os.path.join(base, d) for d in os.listdir(base)
-                if d.startswith("snap=")
-            ) if os.path.isdir(base) else []
-            got = spark.read.parquet(snaps[-1]).count() if snaps else -1
+            try:
+                got = warehouse.read_sink(spark, sink).count()
+            except FileNotFoundError:  # the run committed no such sink
+                got = -1
             sinks[sink] = {"rows": got, "expected": want}
             ok = ok and got == want
         leg["sinks"] = sinks
