@@ -34,10 +34,10 @@ Scale notes (100 TB / 10^12 turns):
     directly from the scan partitioning;
   * aggregations shuffle on low-cardinality keys (role/tool/window) —
     partial aggregation (map-side combine) makes these cheap; the
-    conv_id aggregation is the big shuffle and is hash-partitioned;
-    AQE skew handling + optional salting covers hot conversations;
-  * `repartition_for_skew` salts only conversations above a turn-count
-    threshold, keeping the rest 1-pass.
+    conv_id aggregation is the big shuffle and is hash-partitioned
+    (`repartition_for_skew`); AQE handles skewed joins;
+  * hot conversations are the caller's to salt: `salted_key` and
+    `salted_two_stage_agg` spread one key over several reducers.
 """
 
 from __future__ import annotations
@@ -252,7 +252,6 @@ class PipelineConfig:
     routes: list[RouteRule] = field(default_factory=default_routes)
     window: str = "5 minutes"
     redact_sensitive: bool = False
-    salt_threshold: int | None = None  # turns per conv above which to salt
     # StorageLevel name for run_pipeline's persist of the enriched frame
     # (compile_routed needs none: one action). MEMORY_AND_DISK (Spark's
     # default) churns the multi-GB enriched frame through the executor

@@ -14,17 +14,14 @@ Design (Iceberg-shaped, parquet-backed):
     snapshot_id is a deterministic fingerprint of the run_id, so a
     re-run of the same run_id OVERWRITES its own snapshot rather than
     duplicating rows. A stream micro-batch commits the same way, as
-    the run ``<stream_id>-epoch-<N>``. ``write_sink`` commits one
-    frame as its own table, ``<root>/<sink>/snap=<snapshot_id>/``
-    (fingerprint of run_id + sink), optionally in the day/bucket
-    partition layout;
-  * ONE commit manifest per snapshot (JSON, written atomically via
-    rename AFTER the data lands) with one entry per sink: path, row
-    count, observed sent count, per-file lineage; a run's manifest
-    also carries the receiver counters. Readers only see committed
-    snapshots; a crash before the rename leaves orphan directories
-    that the next attempt of the same run_id overwrites — never
-    double-counted data;
+    the run ``<stream_id>-epoch-<N>``. The run is the only snapshot
+    kind: every commit is a whole run;
+  * ONE commit manifest per run (JSON, written atomically via rename
+    AFTER the data lands) with one entry per sink — path, row count,
+    observed sent count, per-file lineage — and the receiver counters.
+    Readers only see committed snapshots; a crash before the rename
+    leaves orphan directories that the next attempt of the same run_id
+    overwrites — never double-counted data;
   * obsreport-style sent-counters are captured from ``df.observe``
     during the SAME action as the write; per-file lineage (file →
     row count + key range) is harvested from the written parquet
@@ -47,16 +44,15 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import re
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
-def _fingerprint(*parts: str) -> str:
-    return hashlib.sha1("\x1f".join(parts).encode()).hexdigest()[:16]
+def _fingerprint(run_id: str) -> str:
+    return hashlib.sha1(run_id.encode()).hexdigest()[:16]
 
 
 def _json_safe(v):
@@ -122,27 +118,19 @@ class SinkResult:
 
 def _results(snapshot_id: str, entries: dict[str, dict], skipped: bool = False):
     return {
-        sink: SinkResult(sink, e["path"], snapshot_id, e["rows"], skipped, e.get("lineage", []))
+        sink: SinkResult(sink, e["path"], snapshot_id, e["rows"], skipped, e["lineage"])
         for sink, e in entries.items()
     }
 
 
 def _load_manifest(path: str) -> dict:
-    """The one manifest reader. Manifests from before the per-run
-    commit hold a single sink at top level; they read back as the
-    one-entry case of the ``sinks`` format."""
+    """The one manifest reader: a JSON object with a ``sinks`` object."""
     with open(path) as f:
         m = json.load(f)
     if not isinstance(m, dict):
         raise ValueError(f"manifest {path} is not a JSON object")
-    if "sinks" not in m and "sink" in m:
-        m["sinks"] = {
-            m["sink"]: {
-                "path": m["path"],
-                "rows": m["rows"],
-                "lineage": m.get("lineage", []),
-            }
-        }
+    if not isinstance(m.get("sinks"), dict):
+        raise ValueError(f"manifest {path} has no sinks object")
     return m
 
 
@@ -164,56 +152,12 @@ class Warehouse:
             return _load_manifest(p)
         return None
 
-    def _manifests(self, skip_corrupt: bool = False):
-        """Every committed manifest, in file-name order. ``skip_corrupt``
-        passes over manifests that do not parse instead of raising."""
+    def _manifests(self):
+        """Every committed manifest, in file-name order."""
         commits_dir = os.path.join(self.root, "_commits")
         for fn in sorted(os.listdir(commits_dir)):
-            if not fn.endswith(".json"):  # a *.json.tmp is uncommitted
-                continue
-            try:
+            if fn.endswith(".json"):  # a *.json.tmp is uncommitted
                 yield _load_manifest(os.path.join(commits_dir, fn))
-            except (OSError, ValueError):  # JSONDecodeError is a ValueError
-                if not skip_corrupt:
-                    raise
-
-    def has_run(self, sink: str, run_id: str) -> bool:
-        """True when (run_id, sink) already has a committed snapshot,
-        from ``write_sink`` or from a whole-run commit."""
-        for snapshot_id in (_fingerprint(run_id, sink), _fingerprint(run_id)):
-            m = self.committed(snapshot_id)
-            if m is not None and sink in m["sinks"]:
-                return True
-        return False
-
-    def has_stream_runs(self, stream_id: str) -> bool:
-        """True when any committed snapshot carries this stream's
-        namespaced run_id (``<stream_id>-epoch-N``) — the marker-less
-        signal that a resuming checkpoint was ALREADY namespaced, so
-        the legacy-epoch migration must not claim it. Metadata-only:
-        one scan of the KB-scale commit log; a corrupt manifest must
-        not abort stream startup, so it is skipped."""
-        prefix = f"{stream_id}-epoch-"
-        # str(... or "") tolerates run_id: null and non-string run_ids
-        return any(
-            str(m.get("run_id") or "").startswith(prefix)
-            for m in self._manifests(skip_corrupt=True)
-        )
-
-    def has_legacy_epochs(self) -> bool:
-        """True when any committed snapshot carries an UNSCOPED
-        pre-namespacing run_id (exactly ``epoch-N``). Legacy-epoch
-        migration is only meaningful when such snapshots exist at all:
-        a checkpoint with offsets but no marker and no unscoped
-        ``epoch-N`` commits anywhere in the warehouse cannot be
-        resuming a pre-namespacing build (there is nothing it could
-        double-commit), so it must classify non-legacy. Metadata-only:
-        one scan of the KB-scale commit log."""
-        pat = re.compile(r"^epoch-\d+$")
-        return any(
-            pat.match(str(m.get("run_id") or ""))
-            for m in self._manifests(skip_corrupt=True)
-        )
 
     def _resume(
         self, snapshot_id: str, run_id: str, input_fingerprint: str
@@ -245,48 +189,51 @@ class Warehouse:
         snapshot_id: str,
         run_id: str,
         entries: dict[str, dict],
-        input_fingerprint: str = "",
-        counters: dict | None = None,
+        input_fingerprint: str,
+        counters: dict,
     ) -> dict[str, SinkResult]:
-        """Commit one snapshot's sink entries in one manifest."""
-        manifest = {
+        """Commit one run's sink entries and counters in one manifest."""
+        self._commit({
             "snapshot_id": snapshot_id,
             "run_id": run_id,
             "input_fingerprint": input_fingerprint,
             "committed_at": time.time(),
             "sinks": entries,
-        }
-        if counters is not None:
-            manifest["counters"] = counters
-        self._commit(manifest)
+            "counters": counters,
+        })
         return _results(snapshot_id, entries)
 
     # -- writes -------------------------------------------------------------
 
-    def _write_observed(
+    def write_partitioned(
         self,
+        table: str,
         df: DataFrame,
-        path: str,
-        sinks: dict[str, tuple[str, Column]],
-        partition_by: tuple[str, ...] = (),
+        run_id: str,
+        sinks: list[str],
         lineage_keys: tuple[str, ...] = (),
     ) -> dict[str, dict]:
-        """Overwrite ``path`` with ``df`` in one action and return one
-        uncommitted manifest entry per sink of ``sinks`` ({sink: (its
-        directory, its row count expression)}).
+        """Overwrite the run's one snapshot directory of ``table`` with
+        ``df`` partitioned by its ``sink`` column, in one action, and
+        return one uncommitted manifest entry per sink, each with its own
+        ``sink=<s>`` directory; ``run_and_write`` commits them in the
+        run's manifest.
 
-        The obsreport "sent" counters ride the write itself via
-        df.observe (obsreport_exporter.go:29-44 — never a second scan).
-        Lineage comes from the parquet footers: metadata-only, no
-        re-scan of the data just written (at 100 TB a post-write
-        re-read would double the write path's I/O). Overwrite mode
-        replaces an orphan directory left by a crashed attempt."""
+        The obsreport "sent" counters, one per sink, ride the write
+        itself via df.observe (obsreport_exporter.go:29-44 — never a
+        second scan). Lineage comes from the parquet footers:
+        metadata-only, no re-scan of the data just written (at 100 TB a
+        post-write re-read would double the write path's I/O). Overwrite
+        mode replaces an orphan directory left by a crashed attempt."""
+        path = os.path.join(self.root, table, f"snap={_fingerprint(run_id)}")
         obs = Observation()
-        writer = df.observe(obs, *[c.alias(s) for s, (_, c) in sinks.items()]).write
-        writer.mode("overwrite").partitionBy(*partition_by).parquet(path)
+        counts = [F.count_if(F.col("sink") == s).alias(s) for s in sinks]
+        writer = df.observe(obs, *counts).write
+        writer.mode("overwrite").partitionBy("sink").parquet(path)
         observed = obs.get
         entries = {}
-        for sink, (sink_path, _) in sinks.items():
+        for sink in sinks:
+            sink_path = os.path.join(path, f"sink={sink}")
             lineage = _footer_lineage(sink_path, lineage_keys)
             rows = sum(r["rows"] for r in lineage)
             if rows != observed[sink]:  # commit-time conservation check
@@ -302,68 +249,6 @@ class Warehouse:
             }
         return entries
 
-    def write_partitioned(
-        self,
-        table: str,
-        df: DataFrame,
-        run_id: str,
-        sinks: list[str],
-        lineage_keys: tuple[str, ...] = (),
-    ) -> dict[str, dict]:
-        """Write ``df`` partitioned by its ``sink`` column into the run's
-        one snapshot directory of ``table``, in one action, with one
-        sent counter per sink on that action. Returns the uncommitted
-        per-sink entries, each with its own ``sink=<s>`` directory;
-        ``run_and_write`` commits them in the run's manifest."""
-        path = os.path.join(self.root, table, f"snap={_fingerprint(run_id)}")
-        counted = {
-            s: (os.path.join(path, f"sink={s}"), F.count_if(F.col("sink") == s))
-            for s in sinks
-        }
-        return self._write_observed(df, path, counted, ("sink",), lineage_keys)
-
-    def write_sink(
-        self,
-        sink: str,
-        df: DataFrame,
-        run_id: str,
-        input_fingerprint: str = "",
-        lineage_keys: tuple[str, ...] = (),
-        partition_layout: bool = False,
-    ) -> SinkResult:
-        """Write one sink's DataFrame as a committed snapshot: the
-        one-entry case of the run manifest.
-
-        Idempotent per (run_id, sink): an existing committed snapshot
-        with the same input fingerprint is skipped (resume); a
-        mismatched fingerprint (same run_id, different input) raises —
-        that is a misuse, not a resume.
-        """
-        snapshot_id = _fingerprint(run_id, sink)
-        prior = self._resume(snapshot_id, run_id, input_fingerprint)
-        if prior is not None:
-            return prior[sink]
-
-        partition_by: tuple[str, ...] = ()
-        if partition_layout:
-            # Iceberg-style layout days(ts)/bucket(conv_id): time-range
-            # queries prune by day directory, per-conversation lookups
-            # prune by bucket — the partition-pruning-friendly layout
-            # SURVEY §7 calls out (hive-partitioned parquet here; the
-            # identical spec binds to Iceberg partition transforms on a
-            # real catalog)
-            df = df.withColumn(
-                "_day", F.date_format(F.col("ts").cast("timestamp"), "yyyy-MM-dd")
-            ).withColumn(
-                "_bucket", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(16)).cast("int")
-            )
-            partition_by = ("_day", "_bucket")
-        path = os.path.join(self.root, sink, f"snap={snapshot_id}")
-        entries = self._write_observed(
-            df, path, {sink: (path, F.count(F.lit(1)))}, partition_by, lineage_keys
-        )
-        return self._commit_sinks(snapshot_id, run_id, entries, input_fingerprint)[sink]
-
     def read_sink(self, spark: SparkSession, sink: str) -> DataFrame:
         """Read only committed snapshots of a sink table. A sink of a
         partitioned run with no rows has no directory and adds none; a
@@ -373,14 +258,13 @@ class Warehouse:
         paths = [e["path"] for e in entries if e["rows"] > 0 or os.path.isdir(e["path"])]
         if not paths:
             raise FileNotFoundError(f"no committed snapshots for sink {sink!r}")
-        # _part_id survives only in pre-footer-lineage snapshots
-        return spark.read.parquet(*paths).drop("_part_id", "_day", "_bucket")
+        return spark.read.parquet(*paths)
 
     def metrics_table(self, spark: SparkSession) -> DataFrame:
         """obsreport-parity view over the commit log: per-sink sent
         counters (obsreport_exporter.go:29-44)."""
         rows = [
-            (m["run_id"], sink, e["rows"], len(e.get("lineage", [])))
+            (m["run_id"], sink, e["rows"], len(e["lineage"]))
             for m in self._manifests()
             for sink, e in m["sinks"].items()
         ]
@@ -410,9 +294,7 @@ def run_and_write(
 
     Resume is all-or-nothing per run: a committed run is returned whole
     with every result ``skipped``; a run whose data landed but whose
-    manifest did not is rewritten whole. A run_id that already has
-    per-sink ``write_sink`` commits raises, since rewriting it would
-    count those sinks twice."""
+    manifest did not is rewritten whole."""
     from ..plans.pipeline import PipelineConfig, aggregate_combined_tagged, compile_routed
 
     config = config or PipelineConfig()
@@ -421,10 +303,6 @@ def run_and_write(
     if prior is not None:
         return prior
     sinks = [r.sink for r in config.routes]
-    if any(warehouse.has_run(s, run_id) for s in sinks + [f"{s}_agg" for s in sinks]):
-        raise ValueError(
-            f"run {run_id!r} already has per-sink commits — refusing to rewrite it"
-        )
 
     tagged, received = compile_routed(spark, transcripts, config)
     entries = warehouse.write_partitioned(

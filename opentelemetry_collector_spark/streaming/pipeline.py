@@ -30,7 +30,6 @@ point of the Spark-first design.
 from __future__ import annotations
 
 from collections.abc import Iterable
-from typing import Any, Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -115,120 +114,6 @@ def stream_identity(checkpoint_dir: str) -> str:
     return hashlib.sha256(key.encode()).hexdigest()[:12]
 
 
-def _legacy_epoch_mode(
-    checkpoint_dir: str, stream_id: str, spark=None, warehouse=None
-) -> bool:
-    """One-time migration marker: pre-namespacing builds committed sink
-    epochs under run_id ``epoch-N``. Only a checkpoint that ALREADY has
-    Spark offsets but NO marker can be resuming such a build — it gets
-    ``legacy=True`` recorded once. A fresh checkpoint (no offsets)
-    records ``legacy=False`` immediately, so a brand-new stream can
-    never skip its own commits just because some OTHER pre-namespacing
-    stream left an ``epoch-N`` snapshot in the shared warehouse (that
-    unscoped skip was silent data loss).
-
-    offsets-without-marker alone cannot distinguish a genuinely
-    pre-namespacing checkpoint from one written by a namespaced build
-    that predates the MARKER: the warehouse commit log breaks the
-    tie. If any committed snapshot already carries this stream's
-    namespaced run_id (``<stream_id>-epoch-N``), the previous
-    incarnation was namespaced — classifying it legacy would pin the
-    silent epoch-skip on it forever whenever any other stream's true
-    legacy ``epoch-N`` snapshot shares the warehouse.
-
-    Local checkpoints use plain file I/O; remote checkpoint URIs
-    (hdfs://, s3a://, ...) go through Hadoop's FileSystem API via the
-    session's JVM — probing a remote URI with os.path would always
-    report 'no offsets' and mis-record every resuming legacy stream as
-    namespaced (re-introducing the double commit this marker exists to
-    prevent)."""
-    import json
-    import os
-
-    local = _local_path(checkpoint_dir)
-    if local is not None:
-        marker = os.path.join(local, "_namespace_marker.json")
-        try:
-            with open(marker, encoding="utf-8") as f:
-                return bool(json.load(f).get("legacy", False))
-        except FileNotFoundError:
-            pass
-        # no marker yet: offsets present ⇒ resuming a checkpoint written
-        # before the marker existed ⇒ may predate namespacing — unless
-        # the commit log shows this stream already committed namespaced,
-        # OR the warehouse holds no unscoped ``epoch-N`` snapshot at all
-        # (legacy mode only exists to avoid double-committing those; if
-        # none exist, a namespaced checkpoint that stopped before its
-        # first sink commit must not get legacy=True pinned forever).
-        # Residual window, by design: a zero-commit namespaced
-        # checkpoint sharing a warehouse where some OTHER stream's true
-        # legacy epoch-N snapshots exist is indistinguishable from a
-        # genuine legacy resume — it classifies legacy and may skip an
-        # epoch whose (sink, epoch-N) pair another stream committed.
-        # The marker bounds the exposure to that first resume.
-        legacy = os.path.isdir(os.path.join(local, "offsets")) and not (
-            warehouse is not None
-            and (
-                warehouse.has_stream_runs(stream_id)
-                or not warehouse.has_legacy_epochs()
-            )
-        )
-        os.makedirs(local, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump({"stream_id": stream_id, "legacy": legacy}, f)
-        os.replace(tmp, marker)
-        return legacy
-
-    if spark is None:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise ValueError(
-            f"remote checkpoint {checkpoint_dir!r} needs an active "
-            "SparkSession to probe the namespace marker"
-        )
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    root = HPath(checkpoint_dir)
-    fs = root.getFileSystem(conf)
-    marker = HPath(root, "_namespace_marker.json")
-    if fs.exists(marker):
-        stream = fs.open(marker)
-        try:
-            chunks = bytearray()
-            while True:
-                b = stream.read()
-                if b < 0:
-                    break
-                chunks.append(b)
-        finally:
-            stream.close()
-        return bool(json.loads(bytes(chunks)).get("legacy", False))
-    # same tie-breaks as the local branch: namespaced commits for this
-    # stream, or a warehouse with no unscoped epoch-N snapshot at all,
-    # both mean non-legacy
-    legacy = fs.isDirectory(HPath(root, "offsets")) and not (
-        warehouse is not None
-        and (
-            warehouse.has_stream_runs(stream_id)
-            or not warehouse.has_legacy_epochs()
-        )
-    )
-    tmp = HPath(root, "_namespace_marker.json.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(
-            json.dumps({"stream_id": stream_id, "legacy": legacy}).encode()
-        )
-    finally:
-        out.close()
-    fs.rename(tmp, marker)
-    return legacy
-
-
 def start_routed_stream(
     spark: SparkSession,
     source: DataFrame,
@@ -245,43 +130,20 @@ def start_routed_stream(
 
     The run_id is namespaced by a stable stream identity (sha256 of the
     checkpoint dir) + epoch id, so a retried micro-batch (failure
-    replay) skips the epoch it already committed — exactly-once sink
-    delivery on top of at-least-once replay — while a SECOND stream, or
-    a restart with a fresh checkpoint, gets a different namespace and
-    can never collide with (and silently skip against) another stream's
-    epochs.
-
-    Warehouses written before epochs were whole runs may hold per-sink
-    ``write_sink`` commits of an epoch: those sinks are dropped from
-    the epoch's routes, and the rest commit as the run. Legacy
-    un-namespaced ``epoch-N`` commits count ONLY when the checkpoint
-    provably predates namespacing (see ``_legacy_epoch_mode``)."""
-    from dataclasses import replace
-
-    from ..plans.pipeline import PipelineConfig
+    replay) resumes the epoch's run — returned whole if it committed,
+    rewritten whole if it did not: exactly-once sink delivery on top of
+    at-least-once replay — while a SECOND stream, or a restart with a
+    fresh checkpoint, gets a different namespace and can never collide
+    with (and silently skip against) another stream's epochs."""
     from ..sinks.warehouse import run_and_write
 
-    config = config or PipelineConfig()
     stream_id = stream_identity(checkpoint_dir)
-    legacy_mode = _legacy_epoch_mode(
-        checkpoint_dir, stream_id, spark=spark, warehouse=warehouse
-    )
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        run_id = f"{stream_id}-epoch-{epoch_id}"
-        # a committed epoch lists every sink, so a replay of it keeps
-        # no route; sinks an older build committed one by one (under
-        # "epoch-N" before namespacing) keep their rows
-        routes = [
-            r for r in config.routes
-            if not warehouse.has_run(r.sink, run_id)
-            and not (legacy_mode and warehouse.has_run(r.sink, f"epoch-{epoch_id}"))
-        ]
-        if routes:
-            run_and_write(
-                batch_df.sparkSession, batch_df, warehouse, run_id,
-                config=replace(config, routes=routes),
-            )
+        run_and_write(
+            batch_df.sparkSession, batch_df, warehouse,
+            run_id=f"{stream_id}-epoch-{epoch_id}", config=config,
+        )
 
     writer = (
         source.writeStream.foreachBatch(process_batch)

@@ -1,69 +1,18 @@
 """Warehouse sink layer: snapshot commits, lineage, metrics,
 idempotent resume — the durability contract of the north rule."""
 
-import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.sinks import Warehouse, run_and_write
-from opentelemetry_collector_spark.sinks.warehouse import _fingerprint
 from opentelemetry_collector_spark.plans.pipeline import PipelineConfig
 
 
 @pytest.fixture()
 def wh(tmp_path):
     return Warehouse(str(tmp_path / "warehouse"))
-
-
-class TestWarehouse:
-    def test_write_commit_and_count(self, spark, tiny_transcripts, wh):
-        r = wh.write_sink("archive", tiny_transcripts, "run1", lineage_keys=("conv_id",))
-        assert not r.skipped
-        assert r.rows == tiny_transcripts.count()
-        # manifest exists and is complete
-        m = wh.committed(r.snapshot_id)
-        assert list(m["sinks"]) == ["archive"]  # the one-entry manifest
-        e = m["sinks"]["archive"]
-        assert e["rows"] == r.rows
-        # lineage covers all partitions and sums to the total
-        assert sum(p["rows"] for p in e["lineage"]) == r.rows
-        assert all("min_conv_id" in p for p in e["lineage"])
-
-    def test_resume_skips_committed(self, spark, tiny_transcripts, wh):
-        r1 = wh.write_sink("archive", tiny_transcripts, "run1")
-        r2 = wh.write_sink("archive", tiny_transcripts, "run1")
-        assert not r1.skipped and r2.skipped
-        assert r2.rows == r1.rows
-        # reading back sees exactly one snapshot's rows
-        got = wh.read_sink(spark, "archive")
-        assert got.count() == r1.rows
-
-    def test_same_run_different_input_refuses(self, spark, tiny_transcripts, wh):
-        wh.write_sink("archive", tiny_transcripts, "run1", input_fingerprint="fpA")
-        with pytest.raises(ValueError, match="different input fingerprint"):
-            wh.write_sink("archive", tiny_transcripts, "run1", input_fingerprint="fpB")
-
-    def test_new_run_appends_snapshot(self, spark, tiny_transcripts, wh):
-        r1 = wh.write_sink("archive", tiny_transcripts, "run1")
-        r2 = wh.write_sink("archive", tiny_transcripts, "run2")
-        assert r1.snapshot_id != r2.snapshot_id
-        assert wh.read_sink(spark, "archive").count() == r1.rows + r2.rows
-
-    def test_orphan_snapshot_is_replaced_not_double_counted(
-        self, spark, tiny_transcripts, wh
-    ):
-        # simulate a crash: data directory exists but no commit manifest
-        r_probe = wh.write_sink("probe", tiny_transcripts, "runX")
-        orphan_dir = os.path.join(wh.root, "archive", f"snap={r_probe.snapshot_id}")
-        os.makedirs(orphan_dir)
-        with open(os.path.join(orphan_dir, "garbage.txt"), "w") as f:
-            f.write("partial write")
-        # same run_id/sink writes cleanly over the orphan
-        r = wh.write_sink("archive", tiny_transcripts, "runX")
-        assert not r.skipped
-        assert wh.read_sink(spark, "archive").count() == r.rows
 
 
 class TestRunAndWrite:
@@ -82,6 +31,11 @@ class TestRunAndWrite:
         m = {r["sink"]: r["sent"] for r in wh.metrics_table(spark).collect()}
         assert m["archive"] == n
         assert m["errors"] == results["errors"].rows
+        # a second run_id over the same input is a second snapshot, and
+        # the sink reads back both
+        second = run_and_write(spark, tiny_transcripts, wh, "run2")
+        assert second["archive"].snapshot_id != results["archive"].snapshot_id
+        assert wh.read_sink(spark, "archive").count() == 2 * n
 
     def test_one_manifest_commits_every_sink(self, spark, tiny_transcripts, wh):
         """One run, one manifest: an entry per sink, each with its own
@@ -102,6 +56,11 @@ class TestRunAndWrite:
             assert m["sinks"][name]["observed_sent"] == r.rows
             assert sum(f["rows"] for f in r.lineage) == r.rows
             files |= {os.path.join(r.path, f["file"]) for f in r.lineage}
+        # routed files carry their conv_id ranges from the parquet
+        # footers (ts is written as INT96, which has no statistics)
+        assert results["archive"].lineage
+        for f in results["archive"].lineage:
+            assert f["min_conv_id"] <= f["max_conv_id"]
         assert len(files) == sum(len(r.lineage) for r in results.values())
         sent = {r["sink"]: r["sent"] for r in wh.metrics_table(spark).collect()}
         assert sent == {name: r.rows for name, r in results.items()}
@@ -136,26 +95,18 @@ class TestRunAndWrite:
         os.remove(os.path.join(wh.root, "_commits", f"{first['errors'].snapshot_id}.json"))
         with pytest.raises(FileNotFoundError):
             wh.read_sink(spark, "errors")  # uncommitted data is invisible
+        stray = os.path.join(first["errors"].path, "part-stray.parquet")
+        with open(stray, "w") as f:
+            f.write("partial write")
         redo = run_and_write(spark, tiny_transcripts, wh, "run1", input_fingerprint="fpA")
         assert not any(r.skipped for r in redo.values())
+        assert not os.path.exists(stray)  # overwritten, not read
         assert wh.read_sink(spark, "errors").count() == n_errors  # not doubled
         assert wh.read_sink(spark, "errors_agg").count() == first["errors_agg"].rows
 
         # the same run_id over different input is a misuse, not a resume
         with pytest.raises(ValueError, match="different input fingerprint"):
             run_and_write(spark, tiny_transcripts, wh, "run1", input_fingerprint="fpB")
-
-    def test_refuses_run_id_with_per_sink_commits(self, spark, tiny_transcripts, wh):
-        """A sink already committed under the run_id by ``write_sink``
-        would be counted twice by a whole-run rewrite."""
-        wh.write_sink("errors", tiny_transcripts, "run1")
-        with pytest.raises(ValueError, match="per-sink commits"):
-            run_and_write(spark, tiny_transcripts, wh, "run1")
-        # an aggregate table counts too: a crash may leave only it committed
-        wh.write_sink("errors_agg", tiny_transcripts.limit(3), "run2")
-        with pytest.raises(ValueError, match="per-sink commits"):
-            run_and_write(spark, tiny_transcripts, wh, "run2")
-        assert wh.committed(_fingerprint("run2")) is None
 
     def test_lost_committed_directory_fails_the_read(self, spark, tiny_transcripts, wh):
         """Only a sink committed with 0 rows may lack its directory; a
@@ -198,30 +149,15 @@ class TestRunAndWrite:
         assert expect.subtract(got).count() == 0
 
 
-class TestPartitionedLayout:
-    def test_partitioned_write_prunes_on_read(self, spark, tiny_transcripts, wh):
-        r = wh.write_sink(
-            "part_archive", tiny_transcripts, "run1", partition_layout=True
-        )
-        assert r.rows == tiny_transcripts.count()
-        # directory layout is _day=/...,_bucket=/...
-        import os as _os
-
-        days = [d for d in _os.listdir(r.path) if d.startswith("_day=")]
-        assert days, _os.listdir(r.path)
-        # a day+bucket-filtered read shows PartitionFilters in the scan
-        raw = spark.read.parquet(r.path)
-        one_day = days[0].split("=", 1)[1]
-        q = raw.filter((F.col("_day") == one_day) & (F.col("_bucket") == 3))
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters: [" in plan and "_day" in plan, plan
-
-    def test_partitioned_read_back_round_trips(self, spark, tiny_transcripts, wh):
-        wh.write_sink("part_rt", tiny_transcripts, "run1", partition_layout=True)
-        got = wh.read_sink(spark, "part_rt")
-        key = ["conv_id", "turn_idx", "text"]
-        assert got.select(key).subtract(tiny_transcripts.select(key)).count() == 0
-        assert got.count() == tiny_transcripts.count()
+class TestManifestReader:
+    def test_manifest_without_sinks_is_refused(self, spark, wh):
+        """A manifest that is not a run manifest is refused as
+        malformed, not half-read."""
+        wh._commit({"snapshot_id": "x", "sink": "a", "rows": 1, "path": "p"})
+        with pytest.raises(ValueError, match="no sinks object"):
+            wh.read_sink(spark, "a")
+        with pytest.raises(ValueError, match="no sinks object"):
+            wh.metrics_table(spark)
 
 
 class TestIcebergGate:

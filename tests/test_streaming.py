@@ -123,26 +123,27 @@ class TestStreamingPipeline:
         assert got.subtract(want).count() == 0
         assert want.subtract(got).count() == 0
 
-    def test_epoch_with_per_sink_commit_keeps_its_rows(
+    def test_replayed_epoch_resumes_without_doubling(
         self, spark, tiny_transcripts, source_dir, tmp_path
     ):
-        """A warehouse from before epochs were whole runs may hold a
-        per-sink commit of an epoch: on replay that sink keeps its rows
-        and the other sinks commit as the epoch's run."""
-        from opentelemetry_collector_spark.streaming.pipeline import stream_identity
+        """An epoch Spark re-runs under the same id (its checkpoint
+        commit lost after the sink commit) resumes its committed run:
+        the rows are not written twice."""
+        wh = Warehouse(str(tmp_path / "wh_replay"))
+        ckpt = tmp_path / "ckpt_replay"
 
-        wh = Warehouse(str(tmp_path / "wh_upgrade"))
-        ckpt = str(tmp_path / "ckpt_upgrade")
-        run_id = f"{stream_identity(ckpt)}-epoch-0"
-        wh.write_sink("errors", tiny_transcripts.limit(3), run_id=run_id)
+        def run():
+            src = stream_transcripts(spark, source_dir)  # one epoch
+            _await(start_routed_stream(spark, src, wh, checkpoint_dir=str(ckpt)))
 
-        src = stream_transcripts(spark, source_dir)  # one epoch
-        q = start_routed_stream(spark, src, wh, checkpoint_dir=ckpt)
-        _await(q)  # raises if the epoch's run raised
-        assert wh.read_sink(spark, "errors").count() == 3
+        run()
+        (manifest,) = wh._manifests()
+        for f in ("0", ".0.crc"):  # the restart re-runs epoch 0
+            (ckpt / "commits" / f).unlink()
+        run()
+        assert (ckpt / "commits" / "0").exists()  # ... and it did
         assert wh.read_sink(spark, "archive").count() == tiny_transcripts.count()
-        assert wh.has_run("archive_agg", run_id)
-        assert not wh.has_run("errors_agg", run_id)
+        assert list(wh._manifests()) == [manifest]  # resumed, not rewritten
 
     # slow lane: stream==batch on sf parquet; streaming_parity driver row re-verifies
     @pytest.mark.slow
@@ -226,143 +227,6 @@ class TestStreamIdentity:
         other.mkdir()
         assert stream_identity(str(other)) != absolute
 
-    def test_legacy_epoch_snapshot_honored(self, spark, tiny_transcripts, source_dir, tmp_path):
-        """One-time migration: a sink epoch committed by a pre-
-        namespacing build under run_id 'epoch-N' must NOT be committed
-        a second time under the namespaced id when that epoch replays —
-        but ONLY for a checkpoint that provably predates namespacing
-        (Spark offsets already on disk, no marker yet)."""
-        wh = Warehouse(str(tmp_path / "wh_legacy"))
-        # simulate the pre-change build having committed epoch 0 for
-        # the archive sink (single availableNow epoch with no file cap)
-        legacy_rows = tiny_transcripts.limit(3).select("conv_id", "turn_idx")
-        wh.write_sink("archive", legacy_rows, run_id="epoch-0")
-        assert wh.has_run("archive", "epoch-0")
-
-        # a pre-namespacing checkpoint: offsets exist, marker does not
-        ckpt = tmp_path / "ckpt_legacy"
-        (ckpt / "offsets").mkdir(parents=True)
-        src = stream_transcripts(spark, source_dir)
-        q = start_routed_stream(spark, src, wh, checkpoint_dir=str(ckpt))
-        _await(q)
-        # archive kept the legacy snapshot (3 rows), no double commit;
-        # the other sinks committed normally under the new namespace
-        assert wh.read_sink(spark, "archive").count() == 3
-        assert wh.read_sink(spark, "errors").count() > 0
-
-    def test_fresh_checkpoint_ignores_legacy_snapshots(
-        self, spark, tiny_transcripts, source_dir, tmp_path
-    ):
-        """A brand-new stream (fresh checkpoint) must commit its own
-        epochs even when some OTHER pre-namespacing stream left an
-        'epoch-N' snapshot in the shared warehouse — the unscoped skip
-        was silent data loss."""
-        wh = Warehouse(str(tmp_path / "wh_fresh"))
-        foreign = tiny_transcripts.limit(3).select("conv_id", "turn_idx")
-        wh.write_sink("archive", foreign, run_id="epoch-0")
-
-        src = stream_transcripts(spark, source_dir)
-        q = start_routed_stream(
-            spark, src, wh, checkpoint_dir=str(tmp_path / "ckpt_fresh")
-        )
-        _await(q)
-        # the new stream's archive commit landed ON TOP of the foreign
-        # legacy snapshot instead of being silently skipped
-        assert wh.read_sink(spark, "archive").count() > 3
-
-    def test_namespaced_but_markerless_checkpoint_is_not_legacy(
-        self, tmp_path
-    ):
-        """A checkpoint written by a NAMESPACED build that predates
-        the marker (offsets on disk, no marker, but the warehouse
-        commit log already holds this stream's '<stream_id>-epoch-N'
-        runs) must classify legacy=False — pinning it legacy would
-        re-enable the silent epoch skip against any other stream's
-        true-legacy 'epoch-N' snapshot, forever."""
-        from opentelemetry_collector_spark.streaming.pipeline import (
-            _legacy_epoch_mode,
-        )
-
-        wh = Warehouse(str(tmp_path / "wh_mkless"))
-        # the previous (namespaced, marker-less) incarnation committed
-        commit = {"snapshot_id": "s1", "run_id": "abc-epoch-0",
-                  "sink": "archive", "rows": 1, "path": "p"}
-        wh._commit(commit)
-        ckpt = tmp_path / "ckpt_mkless"
-        (ckpt / "offsets").mkdir(parents=True)
-        assert _legacy_epoch_mode(str(ckpt), "abc", warehouse=wh) is False
-
-        # control: same checkpoint shape where the log holds a true
-        # unscoped 'epoch-N' snapshot and nothing namespaced for this
-        # stream stays legacy (genuinely pre-namespacing resume)
-        wh2 = Warehouse(str(tmp_path / "wh_mkless2"))
-        wh2._commit({"snapshot_id": "s2", "run_id": "epoch-0",
-                     "sink": "archive", "rows": 1, "path": "p"})
-        ckpt2 = tmp_path / "ckpt_mkless2"
-        (ckpt2 / "offsets").mkdir(parents=True)
-        assert _legacy_epoch_mode(str(ckpt2), "abc", warehouse=wh2) is True
-
-    def test_zero_commit_namespaced_checkpoint_is_not_legacy(self, tmp_path):
-        """A namespaced checkpoint that wrote offsets but stopped
-        BEFORE its first sink commit leaves neither a marker nor any
-        '<stream_id>-epoch-N' run in the log. When the warehouse holds
-        no unscoped 'epoch-N' snapshot at all, there is nothing a
-        legacy resume could double-commit — classifying it legacy
-        would pin the cross-stream epoch-skip forever, so it must be
-        non-legacy. (Residual window, documented in _legacy_epoch_mode:
-        if ANOTHER stream's true-legacy epoch-N snapshots share the
-        warehouse, the zero-commit case is indistinguishable from a
-        genuine legacy resume and still classifies legacy.)"""
-        from opentelemetry_collector_spark.streaming.pipeline import (
-            _legacy_epoch_mode,
-        )
-
-        wh = Warehouse(str(tmp_path / "wh_zero"))
-        ckpt = tmp_path / "ckpt_zero"
-        (ckpt / "offsets").mkdir(parents=True)
-        assert _legacy_epoch_mode(str(ckpt), "abc", warehouse=wh) is False
-        # and the marker pins it across later resumes
-        assert _legacy_epoch_mode(str(ckpt), "abc", warehouse=wh) is False
-
-    def test_has_legacy_epochs_probe(self, tmp_path):
-        """Scoped run_ids, null/corrupt manifests, and non-epoch runs
-        must not read as legacy; only an exact unscoped 'epoch-N' does."""
-        wh = Warehouse(str(tmp_path / "wh_probe"))
-        assert wh.has_legacy_epochs() is False
-        wh._commit({"snapshot_id": "a", "run_id": "abc-epoch-3",
-                    "sink": "s", "rows": 1, "path": "p"})
-        wh._commit({"snapshot_id": "b", "run_id": None,
-                    "sink": "s", "rows": 1, "path": "p"})
-        wh._commit({"snapshot_id": "c", "run_id": "batch-42",
-                    "sink": "s", "rows": 1, "path": "p"})
-        assert wh.has_legacy_epochs() is False
-        wh._commit({"snapshot_id": "d", "run_id": "epoch-7",
-                    "sink": "s", "rows": 1, "path": "p"})
-        assert wh.has_legacy_epochs() is True
-
-    def test_has_stream_runs_tolerates_null_run_id(self, tmp_path):
-        """A manifest with run_id: null (or a corrupt non-string) must
-        not abort the marker-less stream-start probe."""
-        wh = Warehouse(str(tmp_path / "wh_null"))
-        wh._commit({"snapshot_id": "n", "run_id": None,
-                    "sink": "s", "rows": 1, "path": "p"})
-        assert wh.has_stream_runs("abc") is False
-        wh._commit({"snapshot_id": "m", "run_id": "abc-epoch-0",
-                    "sink": "s", "rows": 1, "path": "p"})
-        assert wh.has_stream_runs("abc") is True
-
-    def test_marker_pins_mode_across_resume(self, tmp_path):
-        """Once a checkpoint records legacy=False, later resumes (which
-        now DO have offsets on disk) stay non-legacy."""
-        from opentelemetry_collector_spark.streaming.pipeline import (
-            _legacy_epoch_mode,
-        )
-
-        ckpt = tmp_path / "ckpt_pin"
-        assert _legacy_epoch_mode(str(ckpt), "abc") is False
-        (ckpt / "offsets").mkdir(parents=True)
-        assert _legacy_epoch_mode(str(ckpt), "abc") is False
-
     def test_identity_treats_file_uri_and_remote_uris_sanely(self, tmp_path):
         from opentelemetry_collector_spark.streaming.pipeline import (
             stream_identity,
@@ -377,40 +241,6 @@ class TestStreamIdentity:
         a = stream_identity("hdfs://nn/ckpt")
         assert a == stream_identity("hdfs://nn/ckpt/")
         assert a != stream_identity("hdfs://nn/other")
-
-    def test_remote_checkpoint_probed_via_hadoop_fs(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """Force the Hadoop FileSystem branch (what hdfs:// / s3a://
-        would take) against the local FS: offsets detection, marker
-        write, and marker re-read must behave exactly like the local
-        branch."""
-        import opentelemetry_collector_spark.streaming.pipeline as sp
-
-        monkeypatch.setattr(sp, "_local_path", lambda p: None)
-
-        fresh = tmp_path / "ckpt_remote_fresh"
-        uri = f"file:{fresh}"
-        assert sp._legacy_epoch_mode(uri, "abc", spark=spark) is False
-        assert (fresh / "_namespace_marker.json").exists()
-        # marker pins the mode even after offsets appear
-        (fresh / "offsets").mkdir()
-        assert sp._legacy_epoch_mode(uri, "abc", spark=spark) is False
-
-        legacy = tmp_path / "ckpt_remote_legacy"
-        (legacy / "offsets").mkdir(parents=True)
-        assert sp._legacy_epoch_mode(f"file:{legacy}", "abc", spark=spark) is True
-
-    def test_remote_checkpoint_without_session_raises(self, monkeypatch):
-        import opentelemetry_collector_spark.streaming.pipeline as sp
-        from pyspark.sql import SparkSession
-
-        monkeypatch.setattr(
-            SparkSession, "getActiveSession", staticmethod(lambda: None)
-        )
-        with pytest.raises(ValueError, match="active SparkSession"):
-            sp._legacy_epoch_mode("hdfs://nn/ckpt", "abc")
-
 
 class TestStreamingDedup:
     def test_duplicate_deliveries_dropped(self, spark, tiny_transcripts, tmp_path):
