@@ -7,12 +7,75 @@ import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.sinks import Warehouse, run_and_write
-from opentelemetry_collector_spark.plans.pipeline import PipelineConfig
+from opentelemetry_collector_spark.sinks.warehouse import _fingerprint
+from opentelemetry_collector_spark.plans.pipeline import PipelineConfig, RouteRule
+
+# the smallest route set: one sink, everything, and its aggregate
+ARCHIVE_ONLY = PipelineConfig(routes=[RouteRule("archive")])
 
 
 @pytest.fixture()
 def wh(tmp_path):
     return Warehouse(str(tmp_path / "warehouse"))
+
+
+class TestWarehouse:
+    """The commit contract of one run — manifest, resume, refusal,
+    snapshots — on the archive-only route set."""
+
+    def test_write_commit_and_count(self, spark, tiny_transcripts, wh):
+        r = run_and_write(spark, tiny_transcripts, wh, "run1", ARCHIVE_ONLY)["archive"]
+        assert not r.skipped
+        assert r.rows == tiny_transcripts.count()
+        # manifest exists and is complete
+        m = wh.committed(r.snapshot_id)
+        assert m["run_id"] == "run1"
+        assert m["sinks"]["archive"]["rows"] == r.rows
+        # lineage covers every file and sums to the total
+        assert sum(p["rows"] for p in m["sinks"]["archive"]["lineage"]) == r.rows
+        assert all("min_conv_id" in p for p in r.lineage)
+
+    def test_resume_skips_committed(self, spark, tiny_transcripts, wh):
+        first = run_and_write(spark, tiny_transcripts, wh, "run1", ARCHIVE_ONLY)
+        # a committed run comes back whole, every sink skipped
+        again = run_and_write(spark, tiny_transcripts, wh, "run1", ARCHIVE_ONLY)
+        assert not any(r.skipped for r in first.values())
+        assert set(again) == set(first) and all(r.skipped for r in again.values())
+        assert {k: r.rows for k, r in again.items()} == {k: r.rows for k, r in first.items()}
+        # reading back sees exactly one snapshot's rows
+        assert wh.read_sink(spark, "archive").count() == first["archive"].rows
+
+    def test_same_run_different_input_refuses(self, spark, tiny_transcripts, wh):
+        run_and_write(spark, tiny_transcripts, wh, "run1", ARCHIVE_ONLY, input_fingerprint="fpA")
+        # the same run_id over different input is a misuse, not a resume
+        with pytest.raises(ValueError, match="different input fingerprint"):
+            run_and_write(
+                spark, tiny_transcripts, wh, "run1", ARCHIVE_ONLY, input_fingerprint="fpB"
+            )
+
+    def test_new_run_appends_snapshot(self, spark, tiny_transcripts, wh):
+        # a second run_id over the same input is a second snapshot, and
+        # the sink reads back both
+        r1 = run_and_write(spark, tiny_transcripts, wh, "run1", ARCHIVE_ONLY)["archive"]
+        r2 = run_and_write(spark, tiny_transcripts, wh, "run2", ARCHIVE_ONLY)["archive"]
+        assert r1.snapshot_id != r2.snapshot_id
+        assert wh.read_sink(spark, "archive").count() == r1.rows + r2.rows
+
+    def test_orphan_snapshot_is_replaced_not_double_counted(
+        self, spark, tiny_transcripts, wh
+    ):
+        # a crashed attempt left a file in the run's snapshot directory
+        # and no commit manifest
+        orphan_dir = os.path.join(wh.root, "routed", f"snap={_fingerprint('runX')}", "sink=archive")
+        os.makedirs(orphan_dir)
+        stray = os.path.join(orphan_dir, "part-stray.parquet")
+        with open(stray, "w") as f:
+            f.write("partial write")
+        # the same run_id writes cleanly over the orphan
+        r = run_and_write(spark, tiny_transcripts, wh, "runX", ARCHIVE_ONLY)["archive"]
+        assert not r.skipped
+        assert not os.path.exists(stray)  # overwritten, not read
+        assert wh.read_sink(spark, "archive").count() == r.rows == tiny_transcripts.count()
 
 
 class TestRunAndWrite:
@@ -31,11 +94,6 @@ class TestRunAndWrite:
         m = {r["sink"]: r["sent"] for r in wh.metrics_table(spark).collect()}
         assert m["archive"] == n
         assert m["errors"] == results["errors"].rows
-        # a second run_id over the same input is a second snapshot, and
-        # the sink reads back both
-        second = run_and_write(spark, tiny_transcripts, wh, "run2")
-        assert second["archive"].snapshot_id != results["archive"].snapshot_id
-        assert wh.read_sink(spark, "archive").count() == 2 * n
 
     def test_one_manifest_commits_every_sink(self, spark, tiny_transcripts, wh):
         """One run, one manifest: an entry per sink, each with its own
@@ -85,28 +143,15 @@ class TestRunAndWrite:
         first = run_and_write(spark, tiny_transcripts, wh, "run1", input_fingerprint="fpA")
         n_errors = first["errors"].rows
 
-        # a committed run comes back whole, every sink skipped
-        again = run_and_write(spark, tiny_transcripts, wh, "run1", input_fingerprint="fpA")
-        assert set(again) == set(first) and all(r.skipped for r in again.values())
-        assert {k: r.rows for k, r in again.items()} == {k: r.rows for k, r in first.items()}
-
         # a crash between the data write and the manifest rename: the
         # data stays, the manifest does not; the rerun rewrites the run
         os.remove(os.path.join(wh.root, "_commits", f"{first['errors'].snapshot_id}.json"))
         with pytest.raises(FileNotFoundError):
             wh.read_sink(spark, "errors")  # uncommitted data is invisible
-        stray = os.path.join(first["errors"].path, "part-stray.parquet")
-        with open(stray, "w") as f:
-            f.write("partial write")
         redo = run_and_write(spark, tiny_transcripts, wh, "run1", input_fingerprint="fpA")
         assert not any(r.skipped for r in redo.values())
-        assert not os.path.exists(stray)  # overwritten, not read
         assert wh.read_sink(spark, "errors").count() == n_errors  # not doubled
         assert wh.read_sink(spark, "errors_agg").count() == first["errors_agg"].rows
-
-        # the same run_id over different input is a misuse, not a resume
-        with pytest.raises(ValueError, match="different input fingerprint"):
-            run_and_write(spark, tiny_transcripts, wh, "run1", input_fingerprint="fpB")
 
     def test_lost_committed_directory_fails_the_read(self, spark, tiny_transcripts, wh):
         """Only a sink committed with 0 rows may lack its directory; a
@@ -123,8 +168,6 @@ class TestRunAndWrite:
     def test_route_matching_nothing_commits_zero_rows(self, spark, tiny_transcripts, wh):
         """A sink no row reaches gets no partition directory: it commits
         0 rows, its aggregate too, and reading it finds no snapshot."""
-        from opentelemetry_collector_spark.plans.pipeline import RouteRule
-
         routes = [RouteRule("archive"), RouteRule("none", include=lambda df: F.lit(False))]
         results = run_and_write(
             spark, tiny_transcripts, wh, "run1", PipelineConfig(routes=routes)
