@@ -79,9 +79,6 @@ def _run_sf1_leg(spark, QUERIES, meter) -> dict | None:
         return None
     sys.path.insert(0, os.path.join(_REPO, "tools"))
     from make_sf1 import ensure_sf1
-    from opentelemetry_collector_spark.operators.rollup import (
-        clear_level_caches,
-    )
     from opentelemetry_collector_spark.trainingdata.dedup import (
         clear_signature_caches,
     )
@@ -167,7 +164,6 @@ def _run_sf1_leg(spark, QUERIES, meter) -> dict | None:
         attempts = []
         for _ in range(2):
             clear_signature_caches()
-            clear_level_caches()
             meter.start()
             force(fn(spark, sf1_dir))
             attempts.append(meter.stop())
@@ -208,9 +204,6 @@ def main() -> None:
     cpu_secs: dict[str, float] = {}
     contended: list[str] = []
     ext_max = 0.0
-    from opentelemetry_collector_spark.operators.rollup import (
-        clear_level_caches,
-    )
     from opentelemetry_collector_spark.trainingdata.dedup import (
         clear_signature_caches,
     )
@@ -229,11 +222,10 @@ def main() -> None:
         attempts = []
         for _ in range(3):
             # a retry must redo the SAME work: drop the dedup
-            # signature/band caches AND the rollup level caches so a
-            # contended first attempt doesn't turn the retry into a
-            # warm-cache measurement
+            # signature/band caches (the only persisted frames a query
+            # keeps between calls) so a contended first attempt doesn't
+            # turn the retry into a warm-cache measurement
             clear_signature_caches()
-            clear_level_caches()
             meter.start()
             force(QUERIES[name](spark, SF_DIR))
             attempts.append(meter.stop())

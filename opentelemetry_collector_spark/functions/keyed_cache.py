@@ -2,7 +2,7 @@
 
 The recurring problem it solves: an operator builds a frame that its
 RESULT plan references from several places (both sides of a
-self-join, several codec branches, a cascade of levels). The result
+self-join, the band and candidate frames of one dedup plan). The result
 must stay lazy, so the operator cannot unpersist for the caller — a
 bare ``.persist()`` per invocation therefore accumulates one orphaned
 cached copy per call in a long-lived session. The pool bounds that:
@@ -18,8 +18,9 @@ cached copy per call in a long-lived session. The pool bounds that:
     previous attempt's blocks — blocking so the eviction cannot bleed
     into the next timed window.
 
-One implementation, instantiated per subsystem (dedup signatures,
-rollup levels, wire-matrix sources) so the copies cannot drift.
+Its one user is the dedup subsystem (``trainingdata/dedup.py``): its
+MinHash-LSH and SimHash plans re-read their signature and band frames
+from several branches, and reusing the persisted frames pays there.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 from .asof import asof_join, asof_join_bucketed, numeric_axis
 from .attributes import Action, AttributesProcessor, apply_actions_to_map
 from .rangejoin import interval_overlap_join, point_in_interval_join
-from .rollup import clear_level_caches, percentile_rollup, rollup_cascade
+from .rollup import percentile_rollup, rollup_cascade
 from .filters import (
     AttributeCondition,
     MatchProperties,
@@ -36,7 +36,6 @@ __all__ = [
     "point_in_interval_join",
     "rollup_cascade",
     "percentile_rollup",
-    "clear_level_caches",
     "Action",
     "AttributesProcessor",
     "apply_actions_to_map",

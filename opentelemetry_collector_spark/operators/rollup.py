@@ -1,19 +1,20 @@
 """Hypertable-style rollup cascade: multi-resolution time-bucketed
-aggregates (1m → 1h → 1d …) where each coarser level is computed FROM
-THE NEXT FINER LEVEL, not from the raw table — the continuous-
+aggregates (1m → 1h → 1d …) where every level is computed FROM THE
+FINEST LEVEL'S AGGREGATE, not from the raw table — the continuous-
 aggregate pattern of time-series stores (TimescaleDB hypertables,
 Druid rollup segments), which neither Spark nor the reference has as
 an operator.
 
-Why cascading matters at 100 TB: the raw table is scanned ONCE (for
-the finest level); every coarser level aggregates the previous level's
-output, which is smaller by the bucket ratio (a 1h level re-aggregates
-60 one-minute rows per key, not 3.6 M raw events). Total work is
-O(raw + finest), versus O(raw × levels) for the naive
-one-GROUP-BY-per-resolution plan. The finest level is the only child
-of the scan, so Catalyst pushes filters/pruning into it as usual, and
-every cascaded step is a plain partial-aggregate shuffle on
-(keys, coarser bucket).
+Why cascading matters at 100 TB: the raw table is scanned ONCE and
+aggregated ONCE, to the finest level; every level (the finest
+included) is then built from those finest-level rows in one more
+aggregate — each finest row is exploded into one copy per level, its
+bucket floored to that level's width, and re-aggregated on
+(level, bucket, keys). Total work is O(raw + finest × levels), versus
+O(raw × levels) for the naive one-GROUP-BY-per-resolution plan, and
+the plan is two aggregate shuffles for any number of levels, with
+nothing persisted. The finest aggregate is the only child of the
+scan, so Catalyst pushes filters/pruning into it as usual.
 
 Only CASCADABLE aggregates are accepted — those with an exact
 re-aggregation rule:
@@ -59,68 +60,8 @@ from .asof import numeric_axis
 
 _CASCADABLE = ("count", "sum", "min", "max", "avg", "distinct", "approx_distinct")
 
-# Bounded FIFO of persisted intermediate levels: one shared
-# implementation (functions.keyed_cache) instantiated per subsystem —
-# repeated calls on the same input reuse one cached frame instead of
-# stacking a new persist per call, with no unbounded growth in a
-# long-lived session.
-from ..functions.keyed_cache import KeyedFrameCache, plan_key as _plan_key
 
-_LEVEL_CACHE = KeyedFrameCache(max_entries=8)
-
-
-def _keyed_persist(key: tuple, frame: DataFrame) -> DataFrame:
-    return _LEVEL_CACHE.get_or_persist(key, frame)
-
-
-def clear_level_caches() -> None:
-    """Unpersist and drop every cached rollup level — measurement
-    harnesses call this between benchmark attempts so a retry redoes
-    the same work (blocking, so eviction can't bleed into the next
-    timed window)."""
-    _LEVEL_CACHE.clear()
-
-
-def rollup_cascade(
-    df: DataFrame,
-    ts: str = "ts",
-    keys: str | list[str] | tuple = (),
-    measures: dict[str, tuple[str, str]] | None = None,
-    levels: list[float] = (60.0, 3600.0, 86400.0),
-    cache_levels: bool = True,
-) -> DataFrame:
-    """Multi-resolution rollup. ``measures`` maps output-column name →
-    (agg, input-column): e.g. ``{"n": ("count", "*"), "v_sum":
-    ("sum", "value"), "v_avg": ("avg", "value")}``. ``levels`` are
-    bucket widths in seconds (or plain axis units for numeric ``ts``),
-    finest first; each must divide the next so buckets nest exactly.
-
-    Returns one DataFrame: ``level_sec`` (double), ``bucket_start``
-    (long, epoch seconds / axis units), the ``keys``, and one column
-    per measure. avg is emitted as an exact derived column at every
-    level (total sum / total count), never an average of averages.
-
-    ``cache_levels`` persists every non-final level (hypertable
-    continuous aggregates are materialized by definition — each level
-    is a table the next level reads). Without it the union's branches
-    inline the finer levels and Spark re-runs the raw scan + finest
-    aggregate once per level (exchange reuse does not currently fire
-    across these AQE stages), turning O(raw + finest) into
-    O(raw × levels). The persisted frames are aggregates — smaller
-    than raw by the bucket ratio — and live in a bounded keyed FIFO
-    (repeat calls reuse them; eviction unpersists; harnesses reset
-    with ``clear_level_caches``).
-
-    Cache semantics are Spark persist semantics: entries are keyed by
-    the input's logical plan, so a repeat call over a table whose
-    FILES changed underneath the same plan can serve the previously
-    materialized levels (exactly as a bare ``df.persist()`` would).
-    After mutating an input table in a long-lived session, call
-    ``clear_level_caches()`` or pass ``cache_levels=False``.
-    """
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    if not measures:
-        raise ValueError("measures must name at least one aggregate")
+def _validated_levels(levels: list[float]) -> list[float]:
     levels = [float(w) for w in levels]
     if sorted(levels) != levels or len(set(levels)) != len(levels):
         raise ValueError(f"levels must be strictly increasing, got {levels}")
@@ -132,6 +73,50 @@ def rollup_cascade(
                 f"each level must divide the next so buckets nest exactly "
                 f"({coarse} % {fine} != 0)"
             )
+    return levels
+
+
+def _explode_levels(levels: list[float]):
+    """Generator column: one (level_sec, bucket_start) row per level,
+    the finest ``bucket_start`` floored to each level's width. The
+    finest level maps every bucket to itself."""
+    return F.inline(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(w).alias("level_sec"),
+                    (F.floor(F.col("bucket_start") / F.lit(int(w))) * F.lit(int(w)))
+                    .cast("long")
+                    .alias("bucket_start"),
+                )
+                for w in levels
+            ]
+        )
+    )
+
+
+def rollup_cascade(
+    df: DataFrame,
+    ts: str = "ts",
+    keys: str | list[str] | tuple = (),
+    measures: dict[str, tuple[str, str]] | None = None,
+    levels: list[float] = (60.0, 3600.0, 86400.0),
+) -> DataFrame:
+    """Multi-resolution rollup. ``measures`` maps output-column name →
+    (agg, input-column): e.g. ``{"n": ("count", "*"), "v_sum":
+    ("sum", "value"), "v_avg": ("avg", "value")}``. ``levels`` are
+    bucket widths in seconds (or plain axis units for numeric ``ts``),
+    finest first; each must divide the next so buckets nest exactly.
+
+    Returns one DataFrame: ``level_sec`` (double), ``bucket_start``
+    (long, epoch seconds / axis units), the ``keys``, and one column
+    per measure. avg is emitted as an exact derived column at every
+    level (total sum / total count), never an average of averages.
+    """
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    if not measures:
+        raise ValueError("measures must name at least one aggregate")
+    levels = _validated_levels(levels)
     for name, (agg, _col) in measures.items():
         if agg not in _CASCADABLE:
             raise ValueError(
@@ -143,17 +128,6 @@ def rollup_cascade(
             raise ValueError(
                 f"measure {name!r}: {agg} needs a concrete column, not '*'"
             )
-    if cache_levels and len(levels) - 1 > _LEVEL_CACHE.max_entries:
-        # a single cascade must not evict its OWN intermediate levels
-        # mid-build — that silently reintroduces the O(raw × levels)
-        # recompute the cache exists to prevent
-        raise ValueError(
-            f"{len(levels)} levels need {len(levels) - 1} cached"
-            f" intermediates but the level cache holds"
-            f" {_LEVEL_CACHE.max_entries}; use fewer levels or"
-            f" cache_levels=False"
-        )
-
     axis = numeric_axis(df, ts)
 
     # internal physical columns: every avg decomposes into (sum, count),
@@ -201,7 +175,7 @@ def rollup_cascade(
             return F.hll_sketch_agg(F.col(c))
         return getattr(F, agg)(F.col(c))
 
-    # re-aggregation of a physical column from the finer level; set
+    # re-aggregation of a physical column from the finest level; set
     # union = distinct of the flattened child sets (exact — union of
     # distinct sets IS the distinct set of the union), HLL union is the
     # sketch-level exact merge
@@ -218,64 +192,45 @@ def rollup_cascade(
     bucket = (F.floor(axis(F.col(ts)) / F.lit(fine_w)) * F.lit(int(fine_w))).cast(
         "long"
     )
-    level = (
-        df.groupBy(bucket.alias("bucket_start"), *keys)
-        .agg(*[base_agg(c, agg).alias(name) for name, (agg, c) in phys.items()])
-        .withColumn("level_sec", F.lit(fine_w))
+    finest = df.groupBy(bucket.alias("bucket_start"), *keys).agg(
+        *[base_agg(c, agg).alias(name) for name, (agg, c) in phys.items()]
     )
-    out = [level]
-    cache_key_base = (
-        "rollup", _plan_key(df), ts, tuple(keys),
-        tuple((n, a, c) for n, (a, c) in measures.items()), tuple(levels),
+
+    def reagg(name: str, agg: str):
+        c = _REAGG[agg](F.col(name))
+        return (c.cast("long") if agg == "count" else c).alias(name)
+
+    # every level in one aggregate over the finest rows; at the finest
+    # level each group holds one row, so its re-aggregation is the
+    # identity
+    rolled = (
+        finest.select(_explode_levels(levels), *keys, *phys)
+        .groupBy("level_sec", "bucket_start", *keys)
+        .agg(*[reagg(name, agg) for name, (agg, _c) in phys.items()])
     )
-    for li, w in enumerate(levels[1:]):
-        if cache_levels:
-            # materialize the level every coarser branch reads (and
-            # the union re-reads) exactly once
-            level = _keyed_persist(cache_key_base + (li,), level)
-            out[-1] = level
-        coarser = (F.floor(F.col("bucket_start") / F.lit(int(w))) * F.lit(int(w))).cast(
-            "long"
-        )
-        def reagg(name: str, agg: str):
-            c = _REAGG[agg](F.col(name))
-            return (c.cast("long") if agg == "count" else c).alias(name)
 
-        level = (
-            level.groupBy(coarser.alias("bucket_start"), *keys)
-            .agg(*[reagg(name, agg) for name, (agg, _c) in phys.items()])
-            .withColumn("level_sec", F.lit(w))
-        )
-        out.append(level)
-
-    def public(lv: DataFrame) -> DataFrame:
-        cols = [F.col("level_sec"), F.col("bucket_start"), *[F.col(k) for k in keys]]
-        for name, (agg, _col) in measures.items():
-            if agg == "avg":
-                cols.append(
-                    (
-                        F.col(f"_{name}_sum").cast("double")
-                        / F.col(f"_{name}_cnt").cast("double")
-                    ).alias(name)
-                )
-            elif agg == "distinct":
-                cols.append(F.size(F.col(f"_{name}_set")).cast("long").alias(name))
-            elif agg == "approx_distinct":
-                # all-null input groups yield a null/empty sketch —
-                # count(distinct) of nothing is 0, not null
-                cols.append(
-                    F.coalesce(
-                        F.hll_sketch_estimate(F.col(f"_{name}_hll")), F.lit(0)
-                    ).cast("long").alias(name)
-                )
-            else:
-                cols.append(F.col(name))
-        return lv.select(*cols)
-
-    result = public(out[0])
-    for lv in out[1:]:
-        result = result.unionByName(public(lv))
-    return result
+    cols = [F.col("level_sec"), F.col("bucket_start"), *[F.col(k) for k in keys]]
+    for name, (agg, _col) in measures.items():
+        if agg == "avg":
+            cols.append(
+                (
+                    F.col(f"_{name}_sum").cast("double")
+                    / F.col(f"_{name}_cnt").cast("double")
+                ).alias(name)
+            )
+        elif agg == "distinct":
+            cols.append(F.size(F.col(f"_{name}_set")).cast("long").alias(name))
+        elif agg == "approx_distinct":
+            # all-null input groups yield a null/empty sketch —
+            # count(distinct) of nothing is 0, not null
+            cols.append(
+                F.coalesce(
+                    F.hll_sketch_estimate(F.col(f"_{name}_hll")), F.lit(0)
+                ).cast("long").alias(name)
+            )
+        else:
+            cols.append(F.col(name))
+    return rolled.select(*cols)
 
 
 def percentile_rollup(
@@ -287,7 +242,6 @@ def percentile_rollup(
     percentiles: list[float] = (0.5, 0.95, 0.99),
     alpha: float = 0.01,
     names: list[str] | None = None,
-    cache_levels: bool = True,
 ) -> DataFrame:
     """Multi-resolution PERCENTILE rollup with a deterministic
     ≤ ``alpha`` relative-error bound — the cascade-safe answer to the
@@ -300,11 +254,11 @@ def percentile_rollup(
     format — rows of (level, bucket_start, keys…, bin, cnt). Adding
     ``bin`` to the group keys turns the non-cascadable percentile into
     a plain cascadable SUM: the finest level buckets raw values once
-    (one partial-aggregate shuffle, output ≤ #bins per group), every
-    coarser level is ``GROUP BY (coarser bucket, keys, bin) SUM(cnt)``
-    over the finer one — the exact histogram merge, zero added error
-    per level, raw scanned once (same O(raw + finest) shape as
-    ``rollup_cascade``, plan-tested).
+    (one partial-aggregate shuffle, output ≤ #bins per group), then
+    every level is ``GROUP BY (level, bucket, keys, bin) SUM(cnt)``
+    over the finest histogram exploded once per level — the exact
+    histogram merge, zero added error per level, raw scanned once
+    (the same two-shuffle shape as ``rollup_cascade``, plan-tested).
 
     Binning: gamma = (1+alpha)/(1-alpha); a value x > 0 lands in bin
     ceil(log_gamma(x)) whose representative 2·gamma^bin/(gamma+1) is
@@ -334,17 +288,7 @@ def percentile_rollup(
     driver-side or single-row blowup at any cardinality.
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
-    levels = [float(w) for w in levels]
-    if sorted(levels) != levels or len(set(levels)) != len(levels):
-        raise ValueError(f"levels must be strictly increasing, got {levels}")
-    if any(w != int(w) or w <= 0 for w in levels):
-        raise ValueError(f"levels must be positive whole units, got {levels}")
-    for fine, coarse in zip(levels, levels[1:]):
-        if coarse % fine != 0:
-            raise ValueError(
-                f"each level must divide the next so buckets nest exactly "
-                f"({coarse} % {fine} != 0)"
-            )
+    levels = _validated_levels(levels)
     if not 0 < alpha < 1:
         raise ValueError(f"alpha must be in (0, 1), got {alpha}")
     percentiles = [float(q) for q in percentiles]
@@ -385,34 +329,16 @@ def percentile_rollup(
     bucket = (F.floor(axis(F.col(ts)) / F.lit(fine_w)) * F.lit(int(fine_w))).cast(
         "long"
     )
-    level = (
+    finest = (
         df.filter(v.isNotNull())
         .groupBy(bucket.alias("bucket_start"), *keys, ordbin.alias("_bin"))
         .agg(F.count(F.lit(1)).alias("_cnt"))
-        .withColumn("level_sec", F.lit(fine_w))
     )
-    out = [level]
-    cache_key_base = (
-        "pct-rollup", _plan_key(df), ts, tuple(keys), value,
-        tuple(levels), alpha,
+    hist = (
+        finest.select(_explode_levels(levels), *keys, "_bin", "_cnt")
+        .groupBy("level_sec", "bucket_start", *keys, "_bin")
+        .agg(F.sum("_cnt").alias("_cnt"))
     )
-    for li, w in enumerate(levels[1:]):
-        if cache_levels:
-            level = _keyed_persist(cache_key_base + (li,), level)
-            out[-1] = level
-        coarser = (
-            F.floor(F.col("bucket_start") / F.lit(int(w))) * F.lit(int(w))
-        ).cast("long")
-        level = (
-            level.groupBy(coarser.alias("bucket_start"), *keys, "_bin")
-            .agg(F.sum("_cnt").alias("_cnt"))
-            .withColumn("level_sec", F.lit(w))
-        )
-        out.append(level)
-
-    hist = out[0]
-    for lv in out[1:]:
-        hist = hist.unionByName(lv)
 
     from pyspark.sql.window import Window
 

@@ -20,18 +20,6 @@ from pyspark.sql import functions as F
 
 from .shared_sql import _TRANSCRIPTS_FROM_EVENTS, _derive_transcripts, _register
 
-# bounded keyed persist (FIFO, unpersists evictees): the wire-matrix
-# queries fan one source frame out to every codec and must cache it,
-# but a bare .persist() per invocation would accumulate one orphaned
-# cached copy per correctness pass
-from ..functions.keyed_cache import KeyedFrameCache, plan_key as _plan_key
-
-_WIRE_SRC_CACHE = KeyedFrameCache(max_entries=4)
-
-
-def _matrix_src(tag: str, frame: DataFrame) -> DataFrame:
-    return _WIRE_SRC_CACHE.get_or_persist(("wire-src", tag, _plan_key(frame)), frame)
-
 # ---------------------------------------------------------------------------
 # shared SQL fragments
 # ---------------------------------------------------------------------------
@@ -670,7 +658,7 @@ FROM f
 # codec keeps a green CORRECTNESS row inside the driver's 50-query
 # budget (round-3 verdict item 1). Each codec still has its own
 # q_* function above (pytest + ad-hoc use); the matrix unions them
-# with a `format` tag over ONE persisted input frame.
+# with a `format` tag, every branch reading the same source frame.
 # ---------------------------------------------------------------------------
 
 
@@ -709,10 +697,9 @@ def _span_wire_codecs():
 
 def q_span_wire_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ALL ten trace wire formats as one tagged identity matrix: span
-    table → wire → back must be the identity per format. The spans
-    frame is persisted once and fans out to every codec, so the ten
-    branches share one parse instead of re-deriving it."""
-    sp = _matrix_src("spans", _spans(spark, sf_dir))
+    table → wire → back must be the identity per format. Each of the
+    ten branches reads the spans frame directly; nothing is persisted."""
+    sp = _spans(spark, sf_dir)
     out = None
     for name, fn in _span_wire_codecs().items():
         # tag FIRST — the oracle emits it first, and query/oracle
@@ -744,7 +731,7 @@ def q_log_wire_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.otlp_json import logs_from_otlp_json, logs_to_otlp_json
     from ..sources.otlp_proto import logs_from_otlp_proto, logs_to_otlp_proto
 
-    t = _matrix_src("transcripts", _derive_transcripts(spark, sf_dir))
+    t = _derive_transcripts(spark, sf_dir)
     codecs = {
         "otlp_json": lambda d: logs_from_otlp_json(logs_to_otlp_json(d)),
         "otlp_proto": lambda d: logs_from_otlp_proto(logs_to_otlp_proto(d)),
@@ -776,7 +763,7 @@ def q_fluentforward_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode."""
     from ..sources.fluentforward import fluent_to_transcripts, transcripts_to_fluent
 
-    t = _matrix_src("transcripts", _derive_transcripts(spark, sf_dir))
+    t = _derive_transcripts(spark, sf_dir)
     out = None
     for mode in ("message", "forward", "packed_forward", "packed_forward_gzip"):
         part = fluent_to_transcripts(transcripts_to_fluent(t, mode=mode)).select(
@@ -840,7 +827,7 @@ def q_metric_wire_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.otlp_proto import metrics_from_otlp_proto, metrics_to_otlp_proto
     from ..sources.prometheus_text import metrics_to_prom_text, prom_text_to_metrics
 
-    dps = _matrix_src("datapoints", _dp_rows(spark, sf_dir))
+    dps = _dp_rows(spark, sf_dir)
     codecs = {
         "otlp_json": lambda d: metrics_from_otlp_json(metrics_to_otlp_json(d)),
         "otlp_proto": lambda d: metrics_from_otlp_proto(metrics_to_otlp_proto(d)),
@@ -1335,7 +1322,7 @@ def q_hostmetrics_scrape(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[F.expr(sql).alias(name) for name, sql in _hm_counters().items()],
         )
     )
-    snaps = _matrix_src("hostmetrics", render_snapshots(counters, id_cols=_HM_IDS))
+    snaps = render_snapshots(counters, id_cols=_HM_IDS)
     dps = scrape_snapshots(snaps, id_cols=_HM_IDS)
     return dps.select(
         "host_id",

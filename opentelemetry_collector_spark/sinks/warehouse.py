@@ -24,7 +24,7 @@ Design (Iceberg-shaped, parquet-backed):
     overwrites — never double-counted data;
   * obsreport-style sent-counters are captured from ``df.observe``
     during the SAME action as the write; per-file lineage (file →
-    row count + key range) is harvested from the written parquet
+    row count + conv_id range) is harvested from the written parquet
     FOOTERS — metadata-only, no second data scan (the manifest-file
     role Iceberg's own manifests play). A commit requires each sink's
     footer row total to equal its observed sent count — a lost or
@@ -65,9 +65,11 @@ def _json_safe(v):
 
 def _footer_lineage(path: str, lineage_keys: tuple[str, ...]) -> list[dict]:
     """Per-file lineage from parquet footer metadata: row count plus
-    min/max of each lineage key, read without touching data pages.
-    String min/max may be writer-truncated bounds (parquet permits
-    truncated statistics) — still valid conservative key ranges.
+    min/max of each lineage key, read without touching data pages
+    (``run_and_write`` records the conv_id range; ``ts`` is written as
+    INT96, which carries no statistics). String min/max may be
+    writer-truncated bounds (parquet permits truncated statistics) —
+    still valid conservative key ranges.
     O(#files) driver-side metadata reads, exactly the cost profile of
     an Iceberg manifest scan."""
     import pyarrow.parquet as pq
@@ -306,7 +308,7 @@ def run_and_write(
 
     tagged, received = compile_routed(spark, transcripts, config)
     entries = warehouse.write_partitioned(
-        "routed", tagged, run_id, sinks, lineage_keys=("conv_id", "ts")
+        "routed", tagged, run_id, sinks, lineage_keys=("conv_id",)
     )
     counters = {k: int(v) for k, v in received.get.items()}
 

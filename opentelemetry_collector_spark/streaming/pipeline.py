@@ -115,7 +115,6 @@ def stream_identity(checkpoint_dir: str) -> str:
 
 
 def start_routed_stream(
-    spark: SparkSession,
     source: DataFrame,
     warehouse,
     checkpoint_dir: str,
@@ -126,7 +125,8 @@ def start_routed_stream(
     path's compile, one write partitioned by sink, the per-sink
     ``<s>_agg`` tables and one manifest per epoch carrying the receiver
     counters, with ``config`` (redaction included) honoured as in
-    batch. Resume is all-or-nothing per epoch.
+    batch. Resume is all-or-nothing per epoch. Each epoch runs on its
+    micro-batch's own session (``batch_df.sparkSession``).
 
     The run_id is namespaced by a stable stream identity (sha256 of the
     checkpoint dir) + epoch id, so a retried micro-batch (failure

@@ -38,6 +38,7 @@ MEASURES = {
     "v_max": ("max", "v"),
 }
 LEVELS = [60.0, 3600.0, 86400.0]
+LEVELS_5 = [60.0, 300.0, 3600.0, 21600.0, 86400.0]
 
 
 def direct_level(df, width):
@@ -57,6 +58,20 @@ def direct_level(df, width):
     )
 
 
+def by_key(rows):
+    """(bucket_start, k) → the measures, floats rounded to 6 places."""
+    return {
+        (r["bucket_start"], r["k"]): (
+            r["n"],
+            round(r["v_sum"] or 0, 6),
+            round(r["v_avg"], 6) if r["v_avg"] is not None else None,
+            r["v_min"],
+            r["v_max"],
+        )
+        for r in rows
+    }
+
+
 class TestCascadeExactness:
     @pytest.fixture(scope="class")
     def rolled(self, raw):
@@ -66,27 +81,8 @@ class TestCascadeExactness:
 
     @pytest.mark.parametrize("width", LEVELS)
     def test_level_equals_direct_groupby(self, raw, rolled, width):
-        got = {
-            (r["bucket_start"], r["k"]): (
-                r["n"],
-                round(r["v_sum"] or 0, 6),
-                round(r["v_avg"], 6) if r["v_avg"] is not None else None,
-                r["v_min"],
-                r["v_max"],
-            )
-            for r in rolled.filter(F.col("level_sec") == width).collect()
-        }
-        want = {
-            (r["bucket_start"], r["k"]): (
-                r["n"],
-                round(r["v_sum"] or 0, 6),
-                round(r["v_avg"], 6) if r["v_avg"] is not None else None,
-                r["v_min"],
-                r["v_max"],
-            )
-            for r in direct_level(raw, width).collect()
-        }
-        assert got == want
+        got = by_key(rolled.filter(F.col("level_sec") == width).collect())
+        assert got == by_key(direct_level(raw, width).collect())
 
     def test_avg_is_not_average_of_averages(self, spark):
         # two 1m buckets with very different counts inside one hour:
@@ -146,69 +142,62 @@ class TestValidation:
                 levels=[60],
             )
 
-    def test_rejects_more_levels_than_cache_slots(self, raw):
-        """A single cascade must not evict its own intermediates
-        mid-build (that silently reintroduces the O(raw x levels)
-        recompute); cache_levels=False opts out of the bound."""
-        from opentelemetry_collector_spark.operators.rollup import (
-            _LEVEL_CACHE,
-        )
+    def test_many_levels_each_equal_direct(self, raw):
+        """Ten levels in one call: the level count is unbounded, and
+        every level still equals a direct GROUP BY over raw."""
+        levels = [60 * 2 ** i for i in range(10)]
+        rows = rollup_cascade(
+            raw, ts="ts", keys="k", measures=MEASURES, levels=levels
+        ).collect()
+        assert sorted({r["level_sec"] for r in rows}) == levels
+        for w in levels:
+            got = by_key(r for r in rows if r["level_sec"] == w)
+            want = by_key(direct_level(raw, w).collect())
+            assert got.keys() == want.keys(), w
+            # summation order differs between the paths, so a 6-place
+            # rounding can land on either side of a tie
+            for k, row in want.items():
+                assert got[k] == pytest.approx(row, abs=2e-6), (w, k)
 
-        levels = [60 * 2 ** i for i in range(_LEVEL_CACHE.max_entries + 2)]
-        with pytest.raises(ValueError, match="cached"):
-            rollup_cascade(raw, keys="k", measures=MEASURES, levels=levels)
-        # opting out of caching lifts the bound (plan builds fine)
-        rollup_cascade(
-            raw, keys="k", measures=MEASURES, levels=levels,
-            cache_levels=False,
-        ).schema
+
+def _shuffle_plan(out):
+    """Run ``out`` and return (shuffle-stage count, parquet scans in
+    the final plan, the plan text)."""
+    import re
+
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    stages = set(re.findall(r"ShuffleQueryStage (\d+)", final))
+    return len(stages), final.count("FileScan parquet"), plan
+
+
+@pytest.fixture(scope="module")
+def parquet_raw(spark, tmp_path_factory):
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        (base + dt.timedelta(seconds=i * 37), "k", float(i % 100 + 1))
+        for i in range(400)
+    ]
+    path = str(tmp_path_factory.mktemp("rollup") / "raw")
+    spark.createDataFrame(rows, "ts timestamp, k string, v double").write.parquet(path)
+    return spark.read.parquet(path)
 
 
 class TestPlanShape:
-    def test_raw_input_aggregated_once(self, spark, tmp_path):
-        """Coarser levels must re-aggregate the finer level, not the
-        raw table: with cache_levels (the default) each level is
-        materialized once, so the raw relation feeds exactly ONE
-        scan + partial-aggregate — not one per level."""
-        base = dt.datetime(2024, 1, 1)
-        rows = [
-            (base + dt.timedelta(seconds=i * 37), "k", float(i % 10))
-            for i in range(400)
-        ]
-        path = str(tmp_path / "raw")
-        spark.createDataFrame(rows, "ts timestamp, k string, v double").write.parquet(path)
-        raw = spark.read.parquet(path)
-        out = rollup_cascade(
-            raw, ts="ts", keys="k", measures=MEASURES, levels=LEVELS
-        )
-        out.collect()
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        # cached relations RE-PRINT their build plan (twice: AQE-final
-        # and original) under every InMemoryTableScan, so FileScan and
-        # plan_id counts overcount. What executed is the set of AQE
-        # shuffle stages: a true cascade materializes exactly one
-        # aggregate shuffle per level; an uncached cascade re-derives
-        # the finer levels inside every branch (~2x the stages)
-        import re
-
-        stages = set(re.findall(r"ShuffleQueryStage (\d+)", plan))
-        assert len(stages) == len(LEVELS), plan
-        # and the cascade is real: coarser branches read the cached
-        # finer level
-        assert "InMemoryTableScan" in plan
-
-    def test_cache_levels_off_still_correct(self, raw):
-        a = rollup_cascade(
-            raw, ts="ts", keys="k", measures=MEASURES, levels=LEVELS,
-            cache_levels=False,
-        )
-        b = rollup_cascade(
-            raw, ts="ts", keys="k", measures=MEASURES, levels=LEVELS
-        )
-        key = lambda r: (r["level_sec"], r["bucket_start"], r["k"])
-        ra = sorted(map(lambda r: r.asDict(), a.collect()), key=key)
-        rb = sorted(map(lambda r: r.asDict(), b.collect()), key=key)
-        assert ra == rb
+    def test_raw_input_aggregated_once(self, parquet_raw):
+        """Every level comes from one finest aggregate: the raw table
+        is scanned once and the plan has exactly two aggregate
+        shuffles (finest, then all levels at once) for any number of
+        levels, with nothing persisted."""
+        for levels in (LEVELS, LEVELS_5):
+            out = rollup_cascade(
+                parquet_raw, ts="ts", keys="k", measures=MEASURES, levels=levels
+            )
+            stages, scans, plan = _shuffle_plan(out)
+            assert stages == 2, plan
+            assert scans == 1, plan
+            assert "InMemoryTableScan" not in plan
 
 
 class TestDistinctCascade:
@@ -291,7 +280,7 @@ class TestDistinctCascade:
         out = rollup_cascade(
             df, ts="ts", keys="k",
             measures={"u": ("distinct", "uid"), "ua": ("approx_distinct", "uid")},
-            levels=[60.0], cache_levels=False,
+            levels=[60.0],
         ).collect()
         assert len(out) == 1 and out[0]["u"] == 0 and out[0]["ua"] == 0
 
@@ -386,45 +375,32 @@ class TestPercentileRollup:
 
         casc = percentile_rollup(
             pct_raw, ts="ts", keys="k", value="v",
-            levels=[60.0, 86400.0], alpha=self.ALPHA, cache_levels=False,
+            levels=[60.0, 86400.0], alpha=self.ALPHA,
         ).filter(F.col("level_sec") == 86400.0)
         direct = percentile_rollup(
             pct_raw, ts="ts", keys="k", value="v",
-            levels=[86400.0], alpha=self.ALPHA, cache_levels=False,
+            levels=[86400.0], alpha=self.ALPHA,
         )
         key = lambda r: (r["bucket_start"], r["k"])
         assert sorted(map(tuple, casc.collect())) == sorted(
             map(tuple, direct.collect())
         )
 
-    def test_raw_scanned_once(self, spark, tmp_path):
-        """Same O(raw + finest) plan property as rollup_cascade: one
-        aggregate shuffle stage per level, coarser branches read the
-        cached finer histogram."""
-        import re
-
+    def test_raw_scanned_once(self, parquet_raw):
+        """Same two-aggregate-shuffle shape as rollup_cascade, plus the
+        quantile extraction's two: the window's exchange over the
+        histogram and the final extraction aggregate. The count does
+        not grow with the number of levels."""
         from opentelemetry_collector_spark.operators import percentile_rollup
 
-        base = dt.datetime(2024, 1, 1)
-        rows = [
-            (base + dt.timedelta(seconds=i * 37), "k", float(i % 100 + 1))
-            for i in range(400)
-        ]
-        path = str(tmp_path / "praw")
-        spark.createDataFrame(rows, "ts timestamp, k string, v double").write.parquet(path)
-        out = percentile_rollup(
-            spark.read.parquet(path), ts="ts", keys="k", value="v",
-            levels=LEVELS, alpha=0.01,
-        )
-        out.collect()
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        stages = set(re.findall(r"ShuffleQueryStage (\d+)", plan))
-        # one partial-agg shuffle per level + the extraction window's
-        # exchange over the unioned histogram + the final extraction
-        # aggregate; an uncached cascade re-derives the finer levels
-        # inside every branch (~2x the stages) and fails this bound
-        assert len(stages) <= len(LEVELS) + 2, plan
-        assert "InMemoryTableScan" in plan
+        for levels in (LEVELS, LEVELS_5):
+            out = percentile_rollup(
+                parquet_raw, ts="ts", keys="k", value="v", levels=levels, alpha=0.01,
+            )
+            stages, scans, plan = _shuffle_plan(out)
+            assert stages == 2 + 2, plan
+            assert scans == 1, plan
+            assert "InMemoryTableScan" not in plan
 
     def test_validation(self, pct_raw):
         from opentelemetry_collector_spark.operators import percentile_rollup

@@ -66,9 +66,7 @@ class TestStreamingPipeline:
     def test_routed_stream_counts_conserved(self, spark, tiny_transcripts, source_dir, tmp_path):
         wh = Warehouse(str(tmp_path / "wh"))
         src = stream_transcripts(spark, source_dir, max_files_per_trigger=2)
-        q = start_routed_stream(
-            spark, src, wh, checkpoint_dir=str(tmp_path / "ckpt_route")
-        )
+        q = start_routed_stream(src, wh, checkpoint_dir=str(tmp_path / "ckpt_route"))
         _await(q)
         n = tiny_transcripts.count()
         # archive = everything, summed across micro-batch epochs
@@ -108,7 +106,7 @@ class TestStreamingPipeline:
         wh = Warehouse(str(tmp_path / "wh_redact"))
         src = stream_transcripts(spark, source_dir)
         q = start_routed_stream(
-            spark, src, wh, checkpoint_dir=str(tmp_path / "ckpt_redact"),
+            src, wh, checkpoint_dir=str(tmp_path / "ckpt_redact"),
             config=PipelineConfig(redact_sensitive=True),
         )
         _await(q)
@@ -134,7 +132,7 @@ class TestStreamingPipeline:
 
         def run():
             src = stream_transcripts(spark, source_dir)  # one epoch
-            _await(start_routed_stream(spark, src, wh, checkpoint_dir=str(ckpt)))
+            _await(start_routed_stream(src, wh, checkpoint_dir=str(ckpt)))
 
         run()
         (manifest,) = wh._manifests()
@@ -168,9 +166,7 @@ class TestStreamingPipeline:
 
         wh = Warehouse(str(tmp_path / "wh_parity"))
         src = stream_transcripts(spark, src_dir, max_files_per_trigger=2)
-        q = start_routed_stream(
-            spark, src, wh, checkpoint_dir=str(tmp_path / "ckpt_parity")
-        )
+        q = start_routed_stream(src, wh, checkpoint_dir=str(tmp_path / "ckpt_parity"))
         _await(q)
 
         batch = run_pipeline(spark, transcripts)

@@ -39,6 +39,32 @@ def canonical(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per source table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def mismatch(got: pd.DataFrame, want: pd.DataFrame) -> str | None:
+    """Why ``got`` differs from ``want`` (column names, row count, then
+    order-insensitive values), or None when they agree."""
+    if sorted(got.columns) != sorted(want.columns):
+        return f"columns {sorted(got.columns)} != {sorted(want.columns)}"
+    if len(got) != len(want):
+        return f"rows {len(got)} != {len(want)}"
+    try:
+        pd.testing.assert_frame_equal(
+            canonical(got), canonical(want), check_dtype=False, check_exact=False, rtol=1e-6
+        )
+    except AssertionError as e:
+        return f"value mismatch: {str(e)[:300]}"
+    return None
+
+
 def main() -> int:
     import importlib.util as u
 
@@ -50,11 +76,7 @@ def main() -> int:
 
     spark = get_spark(app_name="check_oracles", cpus=8, shuffle_partitions=8)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = connect(SF_DIR)
 
     qs = mod.queries()
     oracles = mod.oracle_sql()
@@ -79,21 +101,11 @@ def main() -> int:
             print(f"FAIL  {name}: duckdb error: {e}")
             failed.append(name)
             continue
-        if sorted(got.columns) != sorted(want.columns):
-            print(f"FAIL  {name}: columns {sorted(got.columns)} != {sorted(want.columns)}")
-            failed.append(name)
-            continue
-        if len(got) != len(want):
-            print(f"FAIL  {name}: rows {len(got)} != {len(want)}")
-            failed.append(name)
-            continue
-        g, w = canonical(got), canonical(want)
-        try:
-            pd.testing.assert_frame_equal(g, w, check_dtype=False, check_exact=False, rtol=1e-6)
+        why = mismatch(got, want)
+        if why is None:
             print(f"ok    {name}: rows={len(got)} [{time.time()-t0:.1f}s]")
-        except AssertionError as e:
-            print(f"FAIL  {name}: value mismatch: {str(e)[:300]}")
-            diff_mask = None
+        else:
+            print(f"FAIL  {name}: {why}")
             failed.append(name)
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
     return 1 if failed else 0
