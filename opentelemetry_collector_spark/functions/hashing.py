@@ -69,20 +69,6 @@ def sha1_double_le(col: Column) -> Column:
     return _sha1_double_udf(col.cast("double"))
 
 
-def sha1_typed(col: Column, dtype: str) -> Column:
-    """Dispatch on the attribute's declared type, mirroring hasher.go's
-    type switch. ``dtype`` ∈ {string, int, double, bool}."""
-    if dtype == "string":
-        return sha1_string(col)
-    if dtype in ("int", "long", "bigint"):
-        return sha1_long_le(col)
-    if dtype == "double":
-        return sha1_double_le(col)
-    if dtype in ("bool", "boolean"):
-        return sha1_bool(col)
-    raise ValueError(f"unsupported HASH dtype: {dtype}")
-
-
 def sha1_typed_py(value) -> str:
     """Driver-side golden oracle for tests — same encodings in pure Python."""
     import struct

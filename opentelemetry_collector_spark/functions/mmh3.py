@@ -4,10 +4,10 @@ The reference's probabilistic sampler keeps a span iff
     murmur3_32(traceID bytes, seed) & 0x3FFF < rate% * 0x4000 / 100
 (processor/samplingprocessor/probabilisticsamplerprocessor/
 probabilisticsampler.go:103-112,184-234). Spark's built-in ``hash()``
-is also murmur3 but differs in seed/tail handling, so exact count
-parity requires this reimplementation. The hot path is an
-Arrow-vectorized numpy kernel over fixed-width (16-byte) keys — no
-per-row Python.
+gives the same murmur3_32 on 16-byte ids, but always with seed 42, so
+exact parity at a configured seed requires this reimplementation. The
+hot path is an Arrow-vectorized numpy kernel over fixed-width (16-byte)
+keys — no per-row Python.
 """
 
 from __future__ import annotations
@@ -92,15 +92,6 @@ def murmur3_32_fixed(mat: np.ndarray, seed: int = 0) -> np.ndarray:
 def _binary_series_to_mat(s: pd.Series, width: int = 16) -> np.ndarray:
     buf = b"".join(bytes(v) if v is not None else b"\x00" * width for v in s)
     return np.frombuffer(buf, dtype=np.uint8).reshape(len(s), width)
-
-
-@F.pandas_udf(T.LongType())
-def murmur3_32_udf(s: pd.Series) -> pd.Series:
-    """murmur3_32(seed=0) over a 16-byte binary column, vectorized."""
-    if len(s) == 0:
-        return pd.Series([], dtype="int64")
-    h = murmur3_32_fixed(_binary_series_to_mat(s), seed=0)
-    return pd.Series(h.astype(np.int64))
 
 
 def sampler_bucket_udf(seed: int):

@@ -10,7 +10,7 @@ from .filters import (
     include_exclude_keep,
 )
 from .sampler import ProbabilisticSampler
-from .batch import batch_counts, batch_trigger_metrics, split_batches
+from .batch import batch_trigger_metrics, split_batches
 from .span import (
     ResourceProcessor,
     ToAttributesRule,
@@ -45,7 +45,6 @@ __all__ = [
     "properties_predicate",
     "include_exclude_keep",
     "ProbabilisticSampler",
-    "batch_counts",
     "batch_trigger_metrics",
     "split_batches",
     "ResourceProcessor",

@@ -23,12 +23,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def batch_counts(df: DataFrame, keys: list[str]) -> DataFrame:
-    """LogRecordCount analog: one unit per record, per key
-    (consumer/pdata/log.go:85-97 → count(*))."""
-    return df.groupBy(*keys).agg(F.count(F.lit(1)).alias("record_count"))
-
-
 def batch_trigger_metrics(
     df: DataFrame, keys: list[str], send_batch_size: int
 ) -> DataFrame:

@@ -79,12 +79,15 @@ def _validated_levels(levels: list[float]) -> list[float]:
 def _explode_levels(levels: list[float]):
     """Generator column: one (level_sec, bucket_start) row per level,
     the finest ``bucket_start`` floored to each level's width. The
-    finest level maps every bucket to itself."""
+    finest level maps every bucket to itself. ``level_sec`` is an
+    integer here (the levels are whole units), so a window partitioned
+    on it needs no float normalisation and reuses the aggregate's
+    partitioning; the outputs cast it back to double."""
     return F.inline(
         F.array(
             *[
                 F.struct(
-                    F.lit(w).alias("level_sec"),
+                    F.lit(int(w)).alias("level_sec"),
                     (F.floor(F.col("bucket_start") / F.lit(int(w))) * F.lit(int(w)))
                     .cast("long")
                     .alias("bucket_start"),
@@ -209,7 +212,11 @@ def rollup_cascade(
         .agg(*[reagg(name, agg) for name, (agg, _c) in phys.items()])
     )
 
-    cols = [F.col("level_sec"), F.col("bucket_start"), *[F.col(k) for k in keys]]
+    cols = [
+        F.col("level_sec").cast("double").alias("level_sec"),
+        F.col("bucket_start"),
+        *[F.col(k) for k in keys],
+    ]
     for name, (agg, _col) in measures.items():
         if agg == "avg":
             cols.append(
@@ -364,7 +371,12 @@ def percentile_rollup(
             F.min(F.when(F.col("_cum") >= rank, F.col("_bin"))).alias(f"_q_{name}")
         )
     res = hist.groupBy(*grp).agg(*aggs)
-    sel = [F.col("level_sec"), F.col("bucket_start"), *[F.col(k) for k in keys], F.col("n")]
+    sel = [
+        F.col("level_sec").cast("double").alias("level_sec"),
+        F.col("bucket_start"),
+        *[F.col(k) for k in keys],
+        F.col("n"),
+    ]
     for name in names:
         sel.append(
             F.round(

@@ -9,8 +9,9 @@ probabilisticsampler.go):
     unparseable string or negative value defers to the hash decision.
 
 The murmur3 bucket is the one genuinely non-Catalyst computation
-(Spark's ``hash()`` is a different murmur3 variant), so it runs as an
-Arrow-vectorized numpy kernel. The priority parse and the final filter
+(Spark's ``hash()`` is the same murmur3_32 on 16-byte ids, but only at
+its fixed seed 42, and the sampler's seed is configurable), so it runs
+as an Arrow-vectorized numpy kernel. The priority parse and the final filter
 are plain Catalyst expressions.
 """
 

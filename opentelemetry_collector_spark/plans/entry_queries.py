@@ -626,12 +626,6 @@ def q_sampler_priority_override(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sampler(with_attrs).select("event_id")
 
 
-def _oracle_sampler_priority_override() -> str:
-    # base rate 0%: deferred rows (unparseable 'garbage') hash to
-    # bucket < 0 — impossible — so only priority>0 survives.
-    return "SELECT event_id FROM events WHERE event_type = 'error'"
-
-
 def q_sampler_murmur3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-based sampling at 15%/seed 22 over event ids — exact
     murmur3 keep-set. The oracle is a literal id-list materialized by
@@ -716,7 +710,9 @@ def q_sampler_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sampler_matrix_oracle_sql(sf_dir: str | None = None) -> str:
     """Matrix oracle: the murmur3 literal keep-set (strong,
     non-SQL-expressible half, see ``murmur3_oracle_sql``) unioned with
-    the priority-override arm's plain SQL."""
+    the priority-override arm's plain SQL. At a 0% base rate the
+    deferred rows (unparseable 'garbage') would need a bucket < 0,
+    which is impossible, so only priority>0 ('error') rows survive."""
     return (
         "SELECT 'murmur3_15pct' AS mode, event_id FROM ("
         + murmur3_oracle_sql(sf_dir)

@@ -77,6 +77,50 @@ def _spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return transcripts_to_spans(parse_stage(t, engine="jvm"))
 
 
+# datapoints derived from events, mirrored in both engines: the
+# metric wire matrix's source table and its expected rows.
+_DP_FROM_EVENTS_SPARK = """
+SELECT 'events.' || event_type AS name,
+       CASE WHEN event_type IN ('click', 'view') THEN 'IntSum' ELSE 'DoubleSum' END AS data_type,
+       CASE WHEN event_type IN ('click', 'view') THEN 'DELTA' ELSE 'CUMULATIVE' END AS temporality,
+       map('m', event_type) AS labels,
+       ts,
+       CASE WHEN event_type IN ('click', 'view')
+            THEN CAST(floor(value) AS BIGINT) END AS int_value,
+       CASE WHEN NOT event_type IN ('click', 'view')
+            THEN CAST(round(value, 6) AS DOUBLE) END AS double_value
+FROM events
+"""
+
+
+def _dp_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _register(spark, sf_dir, "events")
+    return spark.sql(_DP_FROM_EVENTS_SPARK)
+
+
+def _dp_roundtrip_select(back: DataFrame) -> DataFrame:
+    return back.select(
+        "name", "data_type", "temporality",
+        F.element_at(F.col("labels"), "m").alias("m"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+        "int_value",
+        F.round(F.col("double_value"), 6).alias("double_value"),
+    )
+
+
+_DP_ORACLE_BASE = """
+SELECT 'events.' || event_type AS name,
+       CASE WHEN event_type IN ('click', 'view') THEN 'IntSum' ELSE 'DoubleSum' END AS data_type,
+       CASE WHEN event_type IN ('click', 'view') THEN 'DELTA' ELSE 'CUMULATIVE' END AS temporality,
+       event_type AS m, epoch_us(ts) AS ts_us,
+       CASE WHEN event_type IN ('click', 'view')
+            THEN CAST(floor(value) AS BIGINT) END AS int_value,
+       CASE WHEN NOT event_type IN ('click', 'view')
+            THEN CAST(round(value, 6) AS DOUBLE) END AS double_value
+FROM events
+"""
+
+
 # ---------------------------------------------------------------------------
 # expr filter (internal/processor/filterexpr/matcher.go:29-62,148-164)
 # ---------------------------------------------------------------------------
@@ -305,261 +349,6 @@ GROUP BY 1
 
 
 # ---------------------------------------------------------------------------
-# translator round trips (OTLP / Zipkin / Jaeger / OpenCensus)
-# ---------------------------------------------------------------------------
-
-
-def q_otlp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fileexporter → otlpreceiver identity: transcripts → OTLP
-    protobuf-JSON (resourceLogs tree) → back to flat records; every
-    field including per-turn text and microsecond ts must survive."""
-    from ..sources.otlp_json import logs_from_otlp_json, logs_to_otlp_json
-
-    t = _derive_transcripts(spark, sf_dir)
-    back = logs_from_otlp_json(logs_to_otlp_json(t))
-    return back.select(
-        "conv_id", "turn_idx", "role", "text", "tool",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-
-
-def _oracle_otlp_roundtrip() -> str:
-    return f"""
-WITH t AS ({_TRANSCRIPTS_FROM_EVENTS})
-SELECT conv_id, turn_idx, role, text, tool, epoch_us(ts) AS ts_us FROM t
-"""
-
-
-def q_otlp_traces_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OTLP resourceSpans tree identity (the trace-signal sibling of
-    the logs path): span table → ExportTraceServiceRequest JSON →
-    back; jsonpb base64 ids, enum-name kinds, nano timestamps."""
-    from ..sources.otlp_json import otlp_json_to_spans, spans_to_otlp_json
-
-    return _span_roundtrip_select(
-        otlp_json_to_spans(spans_to_otlp_json(_spans(spark, sf_dir)))
-    )
-
-
-def q_zipkin_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipkin v2 JSON identity on the span table (translator/trace/
-    zipkin): kind drops to absence for INTERNAL and restores, status
-    rides otel.status_code, micros timestamp+duration."""
-    from ..sources.zipkin_json import spans_to_zipkin_json, zipkin_json_to_spans
-
-    return _span_roundtrip_select(
-        zipkin_json_to_spans(spans_to_zipkin_json(_spans(spark, sf_dir)))
-    )
-
-
-def q_jaeger_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jaeger JSON identity on the span table (translator/trace/
-    jaeger): typed tags coerce back, CHILD_OF restores the parent,
-    span.kind tag restores the kind."""
-    from ..sources.jaeger_json import jaeger_json_to_spans, spans_to_jaeger_json
-
-    return _span_roundtrip_select(
-        jaeger_json_to_spans(spans_to_jaeger_json(_spans(spark, sf_dir)))
-    )
-
-
-def q_zipkin_v1_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipkin v1 JSON identity on the span table (translator/trace/
-    zipkin/zipkinv1_to_protospan.go): kind as core annotations
-    (cs/cr, sr/ss), status through the census.status_code binary
-    annotation and the status mapper (status_code.go)."""
-    from ..sources.zipkin_v1_json import (
-        spans_to_zipkin_v1_json,
-        zipkin_v1_json_to_spans,
-    )
-
-    return _span_roundtrip_select(
-        zipkin_v1_json_to_spans(spans_to_zipkin_v1_json(_spans(spark, sf_dir)))
-    )
-
-
-def q_zipkin_thrift_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipkin v1 THRIFT wire identity (zipkinv1_thrift_to_protospan.go):
-    span table → TBinaryProtocol list<Span> blobs → back. Exercises the
-    pure-Python codec (Arrow-batched) + the shared v1 semantic layer."""
-    from ..sources.zipkin_thrift import (
-        spans_to_zipkin_thrift,
-        zipkin_thrift_to_spans,
-    )
-
-    return _span_roundtrip_select(
-        zipkin_thrift_to_spans(spans_to_zipkin_thrift(_spans(spark, sf_dir)))
-    )
-
-
-def q_jaeger_thrift_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jaeger THRIFT Batch wire identity: span table → TBinaryProtocol
-    Batch blobs → back through the shared Jaeger JSON semantics."""
-    from ..sources.jaeger_thrift import (
-        jaeger_thrift_to_spans,
-        spans_to_jaeger_thrift,
-    )
-
-    return _span_roundtrip_select(
-        jaeger_thrift_to_spans(spans_to_jaeger_thrift(_spans(spark, sf_dir)))
-    )
-
-
-def q_zipkin_proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipkin v2 binary protobuf wire identity (ListOfSpans — the
-    application/x-protobuf payload the Zipkin receiver parses,
-    receiver/zipkinreceiver/trace_receiver.go:166-171): raw-byte ids,
-    fixed64 micro timestamps, map<string,string> tags."""
-    from ..sources.zipkin_proto import spans_to_zipkin_proto, zipkin_proto_to_spans
-
-    return _span_roundtrip_select(
-        zipkin_proto_to_spans(spans_to_zipkin_proto(_spans(spark, sf_dir)))
-    )
-
-
-def q_jaeger_proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jaeger PROTOBUF Batch wire identity (jaegerproto_to_traces.go /
-    traces_to_jaegerproto.go): span table → binary model.proto Batch
-    blobs → back through the shared Jaeger JSON semantics. Same funnel
-    as the thrift wire, different codec (functions/proto_binary.py)."""
-    from ..sources.jaeger_proto import (
-        jaeger_proto_to_spans,
-        spans_to_jaeger_proto,
-    )
-
-    return _span_roundtrip_select(
-        jaeger_proto_to_spans(spans_to_jaeger_proto(_spans(spark, sf_dir)))
-    )
-
-
-def q_otlp_proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OTLP BINARY protobuf logs wire identity — the encoding a real
-    OTLP gRPC client ships (receiver/otlpreceiver/logs/otlp.go:53-77):
-    transcripts → binary ExportLogsServiceRequest blobs → back to flat
-    records; every field incl. per-turn text and µs ts must survive."""
-    from ..sources.otlp_proto import logs_from_otlp_proto, logs_to_otlp_proto
-
-    t = _derive_transcripts(spark, sf_dir)
-    back = logs_from_otlp_proto(logs_to_otlp_proto(t))
-    return back.select(
-        "conv_id", "turn_idx", "role", "text", "tool",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-
-
-def q_otlp_traces_proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OTLP BINARY protobuf trace wire identity: span table → binary
-    ExportTraceServiceRequest blobs → back (bytes ids, varint kinds,
-    fixed64 nanos on the wire; jsonpb layer restores semantics)."""
-    from ..sources.otlp_proto import otlp_proto_to_spans, spans_to_otlp_proto
-
-    return _span_roundtrip_select(
-        otlp_proto_to_spans(spans_to_otlp_proto(_spans(spark, sf_dir)))
-    )
-
-
-def q_oc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OpenCensus proto-JSON identity on the span table (translator/
-    internaldata/oc_to_traces.go): base64 ids, TruncatableString name,
-    RFC3339 times, span.kind attribute for non-native kinds."""
-    from ..sources.opencensus_json import oc_json_to_spans, spans_to_oc_json
-
-    return _span_roundtrip_select(
-        oc_json_to_spans(spans_to_oc_json(_spans(spark, sf_dir)))
-    )
-
-
-# ---------------------------------------------------------------------------
-# metric-signal translator round trips (OC / OTLP metric trees)
-# ---------------------------------------------------------------------------
-
-_DP_FROM_EVENTS_SPARK = """
-SELECT 'events.' || event_type AS name,
-       CASE WHEN event_type IN ('click', 'view') THEN 'IntSum' ELSE 'DoubleSum' END AS data_type,
-       CASE WHEN event_type IN ('click', 'view') THEN 'DELTA' ELSE 'CUMULATIVE' END AS temporality,
-       map('m', event_type) AS labels,
-       ts,
-       CASE WHEN event_type IN ('click', 'view')
-            THEN CAST(floor(value) AS BIGINT) END AS int_value,
-       CASE WHEN NOT event_type IN ('click', 'view')
-            THEN CAST(round(value, 6) AS DOUBLE) END AS double_value
-FROM events
-"""
-
-
-def _dp_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _register(spark, sf_dir, "events")
-    return spark.sql(_DP_FROM_EVENTS_SPARK)
-
-
-def _dp_roundtrip_select(back: DataFrame) -> DataFrame:
-    return back.select(
-        "name", "data_type", "temporality",
-        F.element_at(F.col("labels"), "m").alias("m"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        "int_value",
-        F.round(F.col("double_value"), 6).alias("double_value"),
-    )
-
-
-_DP_ORACLE_BASE = """
-SELECT 'events.' || event_type AS name,
-       CASE WHEN event_type IN ('click', 'view') THEN 'IntSum' ELSE 'DoubleSum' END AS data_type,
-       CASE WHEN event_type IN ('click', 'view') THEN 'DELTA' ELSE 'CUMULATIVE' END AS temporality,
-       event_type AS m, epoch_us(ts) AS ts_us,
-       CASE WHEN event_type IN ('click', 'view')
-            THEN CAST(floor(value) AS BIGINT) END AS int_value,
-       CASE WHEN NOT event_type IN ('click', 'view')
-            THEN CAST(round(value, 6) AS DOUBLE) END AS double_value
-FROM events
-"""
-
-
-def q_oc_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OC metric-tree identity (oc_to_metrics.go / metrics_to_oc.go):
-    datapoint rows → OC timeseries JSON → rows. DELTA has no OC
-    representation and must be DROPPED (not mangled) — the oracle
-    excludes the click/view DELTA rows, so a translator that leaks or
-    distorts them breaks the row count."""
-    from ..sources.opencensus_json import metrics_to_oc_json, oc_json_to_metrics
-
-    dps = _dp_rows(spark, sf_dir)
-    back = oc_json_to_metrics(metrics_to_oc_json(dps, label_keys=["m"]))
-    return _dp_roundtrip_select(back)
-
-
-def _oracle_oc_metrics_roundtrip() -> str:
-    return _DP_ORACLE_BASE + "WHERE event_type NOT IN ('click', 'view')"
-
-
-def q_otlp_metrics_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OTLP tagged-union Metric tree identity: every arm of the v0.17
-    union that the derived table produces (IntSum DELTA, DoubleSum
-    CUMULATIVE) must survive with labels, nanos, and typed values."""
-    from ..sources.otlp_json import metrics_from_otlp_json, metrics_to_otlp_json
-
-    dps = _dp_rows(spark, sf_dir)
-    back = metrics_from_otlp_json(metrics_to_otlp_json(dps))
-    return _dp_roundtrip_select(back)
-
-
-def _oracle_otlp_metrics_roundtrip() -> str:
-    return _DP_ORACLE_BASE
-
-
-def q_otlp_metrics_proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-wire sibling of otlp_metrics_roundtrip: datapoints →
-    ExportMetricsServiceRequest binary protobuf (fixed64 values/nanos,
-    StringKeyValue labels, temporality enum — metrics.pb.go:293-390,
-    889-1012) → back through the shared JSON semantic layer."""
-    from ..sources.otlp_proto import metrics_from_otlp_proto, metrics_to_otlp_proto
-
-    dps = _dp_rows(spark, sf_dir)
-    back = metrics_from_otlp_proto(metrics_to_otlp_proto(dps))
-    return _dp_roundtrip_select(back)
-
-
-# ---------------------------------------------------------------------------
 # config-compiled pipeline (service/builder/pipelines_builder.go:120-203)
 # ---------------------------------------------------------------------------
 
@@ -656,9 +445,9 @@ FROM f
 # ---------------------------------------------------------------------------
 # consolidated wire matrices — one driver row per wire FAMILY so every
 # codec keeps a green CORRECTNESS row inside the driver's 50-query
-# budget (round-3 verdict item 1). Each codec still has its own
-# q_* function above (pytest + ad-hoc use); the matrix unions them
-# with a `format` tag, every branch reading the same source frame.
+# budget (round-3 verdict item 1). Each matrix unions its codecs'
+# round trips with a `format` tag, every branch reading the same
+# source frame.
 # ---------------------------------------------------------------------------
 
 

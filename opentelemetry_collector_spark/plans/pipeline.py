@@ -170,46 +170,17 @@ def route_stage_tagged(df: DataFrame, routes: list[RouteRule]) -> DataFrame:
     At scale this is the Iceberg-native layout: write once PARTITIONED
     BY sink; each sink is then a partition-pruned view. It also lets
     ALL per-sink aggregates share one shuffle (see
-    ``aggregate_combined_tagged``) — 3 sinks × 4 groupings for one
-    exchange instead of three."""
+    ``aggregate_combined`` with ``by=("sink",)``) — 3 sinks × 4
+    groupings for one exchange instead of three."""
     matches = F.array(
         *[F.when(r.predicate(df), F.lit(r.sink)) for r in routes]
     )
     return df.withColumn("sink", F.explode(F.array_compact(matches)))
 
 
-def aggregate_combined_tagged(tagged: DataFrame, window: str = "5 minutes") -> DataFrame:
-    """All four aggregations for ALL sinks in one shuffle: the
-    grouping-sets aggregation of ``aggregate_combined`` with ``sink``
-    added to every grouping set."""
-    window_start = (
-        F.window("ts", window).start.cast("timestamp").cast("long").alias("window_start")
-    )
-    base = tagged.select("sink", "conv_id", "role", "tool", window_start)
-    gs = base.groupingSets(
-        [
-            ["sink", "conv_id"],
-            ["sink", "role"],
-            ["sink", "tool"],
-            ["sink", "window_start"],
-        ],
-        "sink", "conv_id", "role", "tool", "window_start",
-    ).agg(
-        F.count(F.lit(1)).alias("n_turns"),
-        F.concat_ws(
-            "",
-            F.when(F.grouping("conv_id") == 0, F.lit("by_conv")).otherwise(F.lit("")),
-            F.when(F.grouping("role") == 0, F.lit("by_role")).otherwise(F.lit("")),
-            F.when(F.grouping("tool") == 0, F.lit("by_tool")).otherwise(F.lit("")),
-            F.when(F.grouping("window_start") == 0, F.lit("by_window")).otherwise(F.lit("")),
-        ).alias("group_set"),
-    )
-    return gs.select(
-        "sink", "group_set", "conv_id", "role", "tool", "window_start", "n_turns"
-    )
-
-
-def aggregate_combined(df: DataFrame, window: str = "5 minutes") -> DataFrame:
+def aggregate_combined(
+    df: DataFrame, window: str = "5 minutes", by: tuple[str, ...] = ()
+) -> DataFrame:
     """All four north-star aggregations — by conv_id, by role, by tool,
     by event-time window — in ONE shuffle via GROUPING SETS.
 
@@ -219,27 +190,34 @@ def aggregate_combined(df: DataFrame, window: str = "5 minutes") -> DataFrame:
     groupings collapse to near-nothing in the map-side partial
     aggregation). ``group_set`` identifies which grouping a row belongs
     to (computed from Spark's grouping() indicator so NULL keys inside
-    a grouping — e.g. tool IS NULL — stay distinguishable)."""
+    a grouping — e.g. tool IS NULL — stay distinguishable).
+
+    ``by`` columns lead every grouping set and the output: with
+    ``by=("sink",)`` over ``route_stage_tagged``'s frame, every sink's
+    four aggregations share the one shuffle."""
     # via TIMESTAMP: parquet scans yield TIMESTAMP_NTZ in Spark 4,
     # which cannot cast straight to long
     window_start = (
         F.window("ts", window).start.cast("timestamp").cast("long").alias("window_start")
     )
-    base = df.select("conv_id", "role", "tool", window_start)
-    gs = base.groupingSets(
-        [["conv_id"], ["role"], ["tool"], ["window_start"]],
-        "conv_id", "role", "tool", "window_start",
-    ).agg(
+    tags = {
+        "conv_id": "by_conv",
+        "role": "by_role",
+        "tool": "by_tool",
+        "window_start": "by_window",
+    }
+    base = df.select(*by, "conv_id", "role", "tool", window_start)
+    gs = base.groupingSets([[*by, k] for k in tags], *by, *tags).agg(
         F.count(F.lit(1)).alias("n_turns"),
         F.concat_ws(
             "",
-            F.when(F.grouping("conv_id") == 0, F.lit("by_conv")).otherwise(F.lit("")),
-            F.when(F.grouping("role") == 0, F.lit("by_role")).otherwise(F.lit("")),
-            F.when(F.grouping("tool") == 0, F.lit("by_tool")).otherwise(F.lit("")),
-            F.when(F.grouping("window_start") == 0, F.lit("by_window")).otherwise(F.lit("")),
+            *[
+                F.when(F.grouping(k) == 0, F.lit(tag)).otherwise(F.lit(""))
+                for k, tag in tags.items()
+            ],
         ).alias("group_set"),
     )
-    return gs.select("group_set", "conv_id", "role", "tool", "window_start", "n_turns")
+    return gs.select(*by, "group_set", *tags, "n_turns")
 
 
 @dataclass

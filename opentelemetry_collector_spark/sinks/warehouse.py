@@ -126,9 +126,14 @@ def _results(snapshot_id: str, entries: dict[str, dict], skipped: bool = False):
 
 
 def _load_manifest(path: str) -> dict:
-    """The one manifest reader: a JSON object with a ``sinks`` object."""
+    """The one manifest reader: a JSON object with a ``sinks`` object.
+    A manifest that is not valid JSON (e.g. truncated) is refused by
+    name, failing every read of the warehouse closed."""
     with open(path) as f:
-        m = json.load(f)
+        try:
+            m = json.load(f)
+        except json.JSONDecodeError as e:
+            raise ValueError(f"manifest {path} is not valid JSON") from e
     if not isinstance(m, dict):
         raise ValueError(f"manifest {path} is not a JSON object")
     if not isinstance(m.get("sinks"), dict):
@@ -297,7 +302,7 @@ def run_and_write(
     Resume is all-or-nothing per run: a committed run is returned whole
     with every result ``skipped``; a run whose data landed but whose
     manifest did not is rewritten whole."""
-    from ..plans.pipeline import PipelineConfig, aggregate_combined_tagged, compile_routed
+    from ..plans.pipeline import PipelineConfig, aggregate_combined, compile_routed
 
     config = config or PipelineConfig()
     snapshot_id = _fingerprint(run_id)
@@ -316,9 +321,9 @@ def run_and_write(
     # written (no footer inference; a run that routed no rows reads empty)
     routed_dir = os.path.dirname(entries[sinks[0]]["path"])
     written = spark.read.schema(tagged.schema).parquet(routed_dir)
-    aggregates = aggregate_combined_tagged(written, config.window).withColumn(
-        "sink", F.concat(F.col("sink"), F.lit("_agg"))
-    )
+    aggregates = aggregate_combined(
+        written, config.window, by=("sink",)
+    ).withColumn("sink", F.concat(F.col("sink"), F.lit("_agg")))
     entries.update(
         warehouse.write_partitioned(
             "aggregates", aggregates, run_id, [f"{s}_agg" for s in sinks]

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from opentelemetry_collector_spark.plans.pipeline import (
     PipelineConfig,
     aggregate_combined,
-    aggregate_combined_tagged,
     compile_routed,
     parse_stage,
     route_stage,
@@ -30,7 +29,7 @@ class TestFusedEquivalence:
     def test_tagged_aggregates_match_per_sink(self, spark, tiny_transcripts):
         parsed = parse_stage(tiny_transcripts, engine="jvm")
         routes = PipelineConfig().routes
-        tagged_agg = aggregate_combined_tagged(route_stage_tagged(parsed, routes))
+        tagged_agg = aggregate_combined(route_stage_tagged(parsed, routes), by=("sink",))
         for sink, df in route_stage(parsed, routes).items():
             want = aggregate_combined(df)
             got = tagged_agg.filter(F.col("sink") == sink).drop("sink")
@@ -38,9 +37,12 @@ class TestFusedEquivalence:
             assert want.subtract(got).count() == 0, sink
 
     def test_single_exchange_for_all_aggregates(self, spark, tiny_transcripts):
+        """Every sink's four groupings are one Expand under one Exchange."""
         parsed = parse_stage(tiny_transcripts, engine="jvm")
-        agg = aggregate_combined_tagged(route_stage_tagged(parsed, PipelineConfig().routes))
+        tagged = route_stage_tagged(parsed, PipelineConfig().routes)
+        agg = aggregate_combined(tagged, by=("sink",))
         plan = agg._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Expand [") == 1, plan
         assert plan.count("Exchange") == 1, plan
 
     def test_compile_routed_counts(self, spark, tiny_transcripts):

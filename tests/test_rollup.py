@@ -387,10 +387,12 @@ class TestPercentileRollup:
         )
 
     def test_raw_scanned_once(self, parquet_raw):
-        """Same two-aggregate-shuffle shape as rollup_cascade, plus the
-        quantile extraction's two: the window's exchange over the
-        histogram and the final extraction aggregate. The count does
-        not grow with the number of levels."""
+        """Same two-aggregate-shuffle shape as rollup_cascade, plus one
+        for the quantile extraction: the cumsum window's exchange over
+        the histogram, whose partitioning on (level_sec, bucket_start,
+        keys) the extraction aggregate reuses because ``level_sec`` is
+        an integer there. The count does not grow with the number of
+        levels."""
         from opentelemetry_collector_spark.operators import percentile_rollup
 
         for levels in (LEVELS, LEVELS_5):
@@ -398,7 +400,7 @@ class TestPercentileRollup:
                 parquet_raw, ts="ts", keys="k", value="v", levels=levels, alpha=0.01,
             )
             stages, scans, plan = _shuffle_plan(out)
-            assert stages == 2 + 2, plan
+            assert stages == 2 + 1, plan
             assert scans == 1, plan
             assert "InMemoryTableScan" not in plan
 

@@ -2,6 +2,7 @@
 idempotent resume — the durability contract of the north rule."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -200,6 +201,21 @@ class TestManifestReader:
         with pytest.raises(ValueError, match="no sinks object"):
             wh.read_sink(spark, "a")
         with pytest.raises(ValueError, match="no sinks object"):
+            wh.metrics_table(spark)
+
+    def test_truncated_manifest_is_refused_by_name(self, spark, tiny_transcripts, wh):
+        """A truncated manifest fails every read closed, and the error
+        names the file rather than surfacing a bare JSON decode error."""
+        r = run_and_write(spark, tiny_transcripts, wh, "run1", ARCHIVE_ONLY)["archive"]
+        path = wh._commit_path(r.snapshot_id)
+        with open(path) as f:
+            text = f.read()
+        with open(path, "w") as f:
+            f.write(text[: len(text) // 2])
+        refused = f"manifest {re.escape(path)} is not valid JSON"
+        with pytest.raises(ValueError, match=refused):
+            wh.read_sink(spark, "archive")
+        with pytest.raises(ValueError, match=refused):
             wh.metrics_table(spark)
 
 
