@@ -6,7 +6,9 @@ queries()     — one entry per implemented operator from SURVEY.md §2
                 (+ training-data ops), each (spark, sf_dir) → DataFrame.
 oracle_sql()  — matching DuckDB SQL per query; the murmur3 sampler's
                 keep-set (not SQL-expressible) is materialized as a
-                literal IN-list from the pure-Python reference hash.
+                literal IN-list from the pure-Python reference hash,
+                and the embedding near-dup signature is sized to the
+                corpus, both from $SPARK_GRAFT_SF_DIR at call time.
 """
 
 from __future__ import annotations
@@ -59,7 +61,11 @@ def oracle_sql() -> dict[str, str]:
         ORACLES,
         sampler_matrix_oracle_sql,
     )
+    from opentelemetry_collector_spark.plans.trainingdata_queries import (
+        td_embed_near_dup_oracle_sql,
+    )
 
     out = dict(ORACLES)
     out["sampler_matrix"] = sampler_matrix_oracle_sql()
+    out["td_embed_near_dup"] = td_embed_near_dup_oracle_sql()
     return out

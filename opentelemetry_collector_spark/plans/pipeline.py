@@ -171,11 +171,14 @@ def route_stage_tagged(df: DataFrame, routes: list[RouteRule]) -> DataFrame:
     BY sink; each sink is then a partition-pruned view. It also lets
     ALL per-sink aggregates share one shuffle (see
     ``aggregate_combined`` with ``by=("sink",)``) — 3 sinks × 4
-    groupings for one exchange instead of three."""
-    matches = F.array(
-        *[F.when(r.predicate(df), F.lit(r.sink)) for r in routes]
-    )
-    return df.withColumn("sink", F.explode(F.array_compact(matches)))
+    groupings for one exchange instead of three.
+
+    A non-matching route leaves a NULL in the exploded array, dropped by
+    a filter on ``sink`` rather than by ``array_compact``: that rewrites
+    to ``filter(arr, x -> isnotnull(x))``, a lambda evaluated outside
+    whole-stage codegen, which cost the whole fan-out its codegen."""
+    matches = F.array(*[F.when(r.predicate(df), F.lit(r.sink)) for r in routes])
+    return df.withColumn("sink", F.explode(matches)).filter(F.col("sink").isNotNull())
 
 
 def aggregate_combined(
@@ -335,16 +338,25 @@ def compile_routed(
     """parse → enrich → tagged route: the frame ``run_and_write``
     commits in one write partitioned by ``sink``, and the Observation
     that counts, on the enriched frame before the fan-out clones rows,
-    the receiver's obsreport counters (obsreport_receiver.go:30-51):
+    the receiver's obsreport counters (obsreport_receiver.go:30-51) —
     ``accepted`` (every input row) and ``parse_refused`` (rows the parse
-    left unmatched). It rides the action that consumes the frame, so
-    the counters cost no job."""
+    left unmatched) — and, under each sink's name, the rows the fan-out
+    sends that sink (obsreport_exporter.go:29-44): ``count_if`` of the
+    route's predicate, which counts exactly the rows for which the
+    fan-out's ``when`` emits the sink, a NULL predicate in neither. It
+    rides the action that consumes the frame, so the counters cost no
+    job, and one metrics node over the input rows counts them all."""
     config = config or PipelineConfig()
+    sinks = [r.sink for r in config.routes]
+    if {"accepted", "parse_refused"} & set(sinks):
+        raise ValueError(f"route names {sinks} clash with the receiver counters")
     received = Observation()
-    enriched = _enriched(spark, transcripts, config).observe(
+    enriched = _enriched(spark, transcripts, config)
+    enriched = enriched.observe(
         received,
         F.count(F.lit(1)).alias("accepted"),
         F.count_if(~F.col("parsed")).alias("parse_refused"),
+        *[F.count_if(r.predicate(enriched)).alias(r.sink) for r in config.routes],
     )
     return route_stage_tagged(enriched, config.routes), received
 

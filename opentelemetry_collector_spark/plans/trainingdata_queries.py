@@ -294,18 +294,19 @@ def q_td_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_td_embed_near_dup() -> str:
-    # the Spark side auto-sizes the signature to the corpus
-    # (embedding_near_dup_pairs n_bits="auto"); mirror it from the
-    # parquet footer row count of the sf dir the driver points at
-    # (same env-derived-oracle pattern as the murmur3 keep-set)
+def td_embed_near_dup_oracle_sql(sf_dir: str | None = None) -> str:
+    """The Spark side auto-sizes the signature to the corpus
+    (embedding_near_dup_pairs n_bits="auto"); mirror it from the parquet
+    footer row count of ``sf_dir``, default $SPARK_GRAFT_SF_DIR read
+    when called (the murmur3 keep-set's pattern), so the oracle follows
+    the scale factor the comparison runs at."""
     import os
 
     import pyarrow.parquet as pq
 
     from ..trainingdata.dedup import hyperplane_bits_for, make_hyperplanes
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     n = pq.ParquetFile(os.path.join(sf_dir, "embeddings.parquet")).metadata.num_rows
     planes = make_hyperplanes(hyperplane_bits_for(n))
     dot_ab = _sql_dot("a.v", "b.v", "len(a.v)")
@@ -1397,7 +1398,8 @@ TD_ORACLES = {
     "td_chunk_dedup": _oracle_td_chunk_dedup(),
     "td_salted_conv_counts": _oracle_td_salted_conv_counts(),
     "td_ngram_jaccard": _oracle_td_ngram_jaccard(),
-    "td_embed_near_dup": _oracle_td_embed_near_dup(),
+    # td_embed_near_dup: oracle built in __spark_entry__ at call time
+    # (sized by the sf dir's embeddings, see td_embed_near_dup_oracle_sql)
     "td_topk": _oracle_td_topk(),
     "td_incremental_dedup": _oracle_td_incremental_dedup(),
     "td_doc_signals": _oracle_td_doc_signals(),

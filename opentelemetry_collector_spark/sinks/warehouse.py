@@ -23,12 +23,16 @@ Design (Iceberg-shaped, parquet-backed):
     leaves orphan directories that the next attempt of the same run_id
     overwrites — never double-counted data;
   * obsreport-style sent-counters are captured from ``df.observe``
-    during the SAME action as the write; per-file lineage (file →
-    row count + conv_id range) is harvested from the written parquet
-    FOOTERS — metadata-only, no second data scan (the manifest-file
-    role Iceberg's own manifests play). A commit requires each sink's
-    footer row total to equal its observed sent count — a lost or
-    truncated file fails the commit instead of under-counting silently;
+    during the SAME action as the write: a routed sink's on the input
+    rows before the fan-out (``compile_routed``), an aggregate sink's
+    on the aggregate frame. Per-file lineage (file → row count +
+    conv_id range) is harvested from the written parquet FOOTERS —
+    metadata-only, no second data scan (the manifest-file role
+    Iceberg's own manifests play). A commit requires each sink's footer
+    row total to equal its observed sent count, and each routed sink's
+    by-conversation aggregate to count every turn sent to it — a lost
+    or truncated file fails the commit instead of under-counting
+    silently;
   * on a real cluster the identical interface binds to Iceberg
     (``writeTo(...).append()`` within its snapshot/commit machinery,
     on a table PARTITIONED BY sink); ``sources.tables.iceberg_available``
@@ -218,6 +222,7 @@ class Warehouse:
         df: DataFrame,
         run_id: str,
         sinks: list[str],
+        sent: Observation,
         lineage_keys: tuple[str, ...] = (),
     ) -> dict[str, dict]:
         """Overwrite the run's one snapshot directory of ``table`` with
@@ -226,18 +231,19 @@ class Warehouse:
         ``sink=<s>`` directory; ``run_and_write`` commits them in the
         run's manifest.
 
-        The obsreport "sent" counters, one per sink, ride the write
-        itself via df.observe (obsreport_exporter.go:29-44 — never a
-        second scan). Lineage comes from the parquet footers:
-        metadata-only, no re-scan of the data just written (at 100 TB a
-        post-write re-read would double the write path's I/O). Overwrite
-        mode replaces an orphan directory left by a crashed attempt."""
+        The obsreport "sent" counters (obsreport_exporter.go:29-44) come
+        from the caller: ``sent`` is an Observation in ``df``'s plan that
+        counts each sink's rows under the sink's name, so the write's own
+        action fills it — never a second scan. ``run_and_write`` counts
+        the routed sinks on the input rows, before the fan-out these
+        files come from, and the aggregate sinks on the aggregate frame
+        itself. Lineage comes from the parquet footers: metadata-only,
+        no re-scan of the data just written (at 100 TB a post-write
+        re-read would double the write path's I/O). Overwrite mode
+        replaces an orphan directory left by a crashed attempt."""
         path = os.path.join(self.root, table, f"snap={_fingerprint(run_id)}")
-        obs = Observation()
-        counts = [F.count_if(F.col("sink") == s).alias(s) for s in sinks]
-        writer = df.observe(obs, *counts).write
-        writer.mode("overwrite").partitionBy("sink").parquet(path)
-        observed = obs.get
+        df.write.mode("overwrite").partitionBy("sink").parquet(path)
+        observed = sent.get
         entries = {}
         for sink in sinks:
             sink_path = os.path.join(path, f"sink={sink}")
@@ -299,6 +305,13 @@ def run_and_write(
     writes, commits all of it with the receiver counters (accepted,
     parse refused) observed on the first write.
 
+    Each write carries one observe. The first counts, before the
+    fan-out, the receiver counters and the rows routed to each sink;
+    the second counts each aggregate sink's rows and, per routed sink,
+    the turns of its ``by_conv`` grouping set. Every turn read back
+    falls in exactly one conversation group, so a routed file lost
+    between the two writes fails the commit.
+
     Resume is all-or-nothing per run: a committed run is returned whole
     with every result ``skipped``; a run whose data landed but whose
     manifest did not is rewritten whole."""
@@ -313,20 +326,39 @@ def run_and_write(
 
     tagged, received = compile_routed(spark, transcripts, config)
     entries = warehouse.write_partitioned(
-        "routed", tagged, run_id, sinks, lineage_keys=("conv_id",)
+        "routed", tagged, run_id, sinks, received, lineage_keys=("conv_id",)
     )
-    counters = {k: int(v) for k, v in received.get.items()}
+    counters = {k: int(v) for k, v in received.get.items() if k not in sinks}
 
     # the routed table's own directory: read back by the schema just
     # written (no footer inference; a run that routed no rows reads empty)
     routed_dir = os.path.dirname(entries[sinks[0]]["path"])
     written = spark.read.schema(tagged.schema).parquet(routed_dir)
-    aggregates = aggregate_combined(
-        written, config.window, by=("sink",)
-    ).withColumn("sink", F.concat(F.col("sink"), F.lit("_agg")))
+    aggregated = Observation()
+    by_conv = F.col("group_set") == "by_conv"
+    aggregates = (
+        aggregate_combined(written, config.window, by=("sink",))
+        .observe(
+            aggregated,
+            *[F.count_if(F.col("sink") == s).alias(f"{s}_agg") for s in sinks],
+            *[
+                F.sum(F.when(by_conv & (F.col("sink") == s), F.col("n_turns")))
+                .alias(f"{s}_by_conv")
+                for s in sinks
+            ],
+        )
+        .withColumn("sink", F.concat(F.col("sink"), F.lit("_agg")))
+    )
     entries.update(
         warehouse.write_partitioned(
-            "aggregates", aggregates, run_id, [f"{s}_agg" for s in sinks]
+            "aggregates", aggregates, run_id, [f"{s}_agg" for s in sinks], aggregated
         )
     )
+    for s in sinks:  # conservation: aggregated turns == sent rows
+        turns = int(aggregated.get[f"{s}_by_conv"] or 0)
+        if turns != entries[s]["observed_sent"]:
+            raise RuntimeError(
+                f"sink {s!r}: {entries[s]['observed_sent']} rows sent but its "
+                f"aggregate counts {turns} turns — refusing to commit"
+            )
     return warehouse._commit_sinks(snapshot_id, run_id, entries, input_fingerprint, counters)

@@ -55,3 +55,8 @@ class TestFusedEquivalence:
         assert per_sink["archive"] == n
         assert received.get["accepted"] == n
         assert set(per_sink) == {"errors", "tool_calls", "archive"}
+        # each route's sent count, taken before the fan-out, is exactly
+        # the rows the fan-out emits for it — the errors route's NULL
+        # predicate on unparsed rows included
+        assert {s: received.get[s] for s in per_sink} == per_sink
+        assert received.get["parse_refused"] > 0

@@ -41,3 +41,29 @@ def test_query_matches_oracle(spark, oracle, name):
     want = con.execute(oracles[name]).df()
     why = check.mismatch(got, want)
     assert why is None, why
+
+
+def test_embed_near_dup_oracle_follows_sf_dir(tmp_path, monkeypatch):
+    """The near-dup oracle sizes its signature when ``oracle_sql()`` is
+    called, from the embeddings of $SPARK_GRAFT_SF_DIR at that time."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from opentelemetry_collector_spark.plans.trainingdata_queries import (
+        _sql_hyperplane_bucket,
+    )
+    from opentelemetry_collector_spark.trainingdata.dedup import (
+        hyperplane_bits_for,
+        make_hyperplanes,
+    )
+
+    for n, bits in ((500, 1), (2_001, 2)):
+        assert hyperplane_bits_for(n) == bits
+        sf_dir = tmp_path / str(n)
+        sf_dir.mkdir()
+        pq.write_table(pa.table({"vec_id": range(n)}), str(sf_dir / "embeddings.parquet"))
+        # the sampler's oracle reads the same dir
+        pq.write_table(pa.table({"event_id": [1, 2]}), str(sf_dir / "events.parquet"))
+        monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(sf_dir))
+        sql = ENTRY.oracle_sql()["td_embed_near_dup"]
+        assert _sql_hyperplane_bucket("embedding", make_hyperplanes(bits)) in sql, n

@@ -192,6 +192,84 @@ class TestRunAndWrite:
         assert got.subtract(expect).count() == 0
         assert expect.subtract(got).count() == 0
 
+    def test_footer_rows_short_of_sent_refuse_commit(
+        self, spark, tiny_transcripts, wh, monkeypatch
+    ):
+        """A sink whose part-file footers hold fewer rows than were sent
+        to it (a file lost or truncated in the write) is not committed."""
+        from opentelemetry_collector_spark.sinks import warehouse
+
+        footers = warehouse._footer_lineage
+        monkeypatch.setattr(
+            warehouse, "_footer_lineage", lambda path, keys: footers(path, keys)[1:]
+        )
+        with pytest.raises(RuntimeError, match="lineage sums to .* refusing to commit"):
+            run_and_write(spark, tiny_transcripts, wh, "run1", ARCHIVE_ONLY)
+        assert os.listdir(os.path.join(wh.root, "_commits")) == []
+
+    def test_routed_file_lost_before_aggregate_refuses_commit(
+        self, spark, tiny_transcripts, wh, monkeypatch
+    ):
+        """The aggregate write's by-conversation turns must equal the rows
+        sent to each sink: a routed part file lost after the routed write
+        passed its footer check is caught at commit, not aggregated short."""
+        write = wh.write_partitioned
+
+        def lose_a_file(table, *args, **kwargs):
+            entries = write(table, *args, **kwargs)
+            if table == "routed":
+                e = entries["errors"]
+                os.remove(os.path.join(e["path"], e["lineage"][0]["file"]))
+            return entries
+
+        monkeypatch.setattr(wh, "write_partitioned", lose_a_file)
+        with pytest.raises(RuntimeError, match="sink 'errors'.* refusing to commit"):
+            run_and_write(spark, tiny_transcripts, wh, "run1")
+        assert os.listdir(os.path.join(wh.root, "_commits")) == []
+
+    def test_crash_before_manifest_rename_rewrites_both_tables(
+        self, spark, tiny_transcripts, wh, monkeypatch
+    ):
+        """A crash after both writes but before the manifest rename leaves
+        the routed and aggregate snapshot directories with no manifest; the
+        next attempt of the run rewrites both and commits once."""
+        commit, calls = wh._commit_sinks, []
+
+        def crash_once(*args, **kwargs):
+            calls.append(1)
+            if len(calls) == 1:
+                raise OSError("crashed before the manifest rename")
+            return commit(*args, **kwargs)
+
+        monkeypatch.setattr(wh, "_commit_sinks", crash_once)
+        with pytest.raises(OSError, match="crashed"):
+            run_and_write(spark, tiny_transcripts, wh, "run1")
+        snap = f"snap={_fingerprint('run1')}"
+        commits = os.path.join(wh.root, "_commits")
+
+        def part_files():
+            return {
+                os.path.join(d, f)
+                for table in ("routed", "aggregates")
+                for d, _dirs, files in os.walk(os.path.join(wh.root, table, snap))
+                for f in files
+                if f.endswith(".parquet")
+            }
+
+        orphans = part_files()
+        assert {os.path.dirname(os.path.dirname(f)) for f in orphans} == {
+            os.path.join(wh.root, "routed", snap),
+            os.path.join(wh.root, "aggregates", snap),
+        }
+        assert os.listdir(commits) == []
+        redo = run_and_write(spark, tiny_transcripts, wh, "run1")
+        assert not any(r.skipped for r in redo.values())
+        assert part_files() and not orphans & part_files()  # both rewritten
+        assert os.listdir(commits) == [f"{redo['archive'].snapshot_id}.json"]
+        assert redo["archive"].rows == tiny_transcripts.count()
+        for name, r in redo.items():  # nothing doubled
+            assert wh.read_sink(spark, name).count() == r.rows, name
+
 
 class TestManifestReader:
     def test_manifest_without_sinks_is_refused(self, spark, wh):
@@ -376,3 +454,28 @@ class TestCommitPlanShape:
         for plan in plans3 + plans5:
             for node in ("InMemoryRelation", "InMemoryTableScan", "TableCacheQueryStage"):
                 assert node not in plan, plan
+
+    def test_fanout_in_codegen_and_one_metrics_node_per_write(
+        self, spark, tiny_transcripts, wh, tmp_path
+    ):
+        """The routed write's fan-out runs inside whole-stage codegen
+        (``* Generate``), and each of the two writes carries exactly one
+        ``CollectMetrics``: the counters are one pass over the input rows,
+        not a second one over the cloned rows."""
+        from opentelemetry_collector_spark.plans.pipeline import default_routes
+
+        path = str(tmp_path / "in")
+        tiny_transcripts.write.parquet(path)
+        _, plans = self._run(spark, path, wh, "shape-codegen", default_routes())
+        # the executed operator tree: the text before the node details,
+        # AQE's final plan where there is one
+        trees = [
+            p.split("\n\n")[0].split("== Initial Plan ==")[0]
+            for p in plans
+            if "InsertIntoHadoopFsRelationCommand" in p
+        ]
+        assert len(trees) == 2, plans
+        routed = [t for t in trees if "Generate" in t]
+        assert len(routed) == 1 and "* Generate" in routed[0], routed
+        for tree in trees:
+            assert tree.count("CollectMetrics") == 1, tree
