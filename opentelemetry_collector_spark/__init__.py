@@ -15,3 +15,9 @@ reference requires it (murmur3 trace-id sampling, typed SHA-1 hashing).
 """
 
 __version__ = "0.1.0"
+
+# Python workers that unpickle a by-reference package UDF import this
+# __init__ first; zipcache keeps their per-task import-cache refresh
+# from re-reading every zip on sys.path. It imports nothing heavy, and
+# nothing else may be imported here for the same reason.
+from . import zipcache  # noqa: E402,F401

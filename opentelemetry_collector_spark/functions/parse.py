@@ -29,6 +29,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import zipcache
+
 _NAMED_GROUP = re.compile(r"\(\?P?<([A-Za-z][A-Za-z0-9_]*)>")
 
 
@@ -99,6 +101,9 @@ def extract_arrow_udf(pattern: str):
 
     @F.arrow_udf(out_type)
     def extract(s: pa.Array) -> pa.Array:
+        # referencing zipcache makes unpickling this UDF import it in
+        # the worker, which stops re-reading zip imports every task
+        zipcache.install()
         # flatten() pushes the no-match NULL down into each field; the
         # rebuilt struct itself is never NULL
         return pa.StructArray.from_arrays(

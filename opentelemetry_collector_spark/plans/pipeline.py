@@ -198,10 +198,16 @@ def aggregate_combined(
     ``by`` columns lead every grouping set and the output: with
     ``by=("sink",)`` over ``route_stage_tagged``'s frame, every sink's
     four aggregations share the one shuffle."""
-    # via TIMESTAMP: parquet scans yield TIMESTAMP_NTZ in Spark 4,
-    # which cannot cast straight to long
-    window_start = (
-        F.window("ts", window).start.cast("timestamp").cast("long").alias("window_start")
+    # Tumbling-window start by arithmetic, not F.window: F.window makes
+    # the analyzer filter NULL ts under the whole aggregate, dropping
+    # those turns from all four grouping sets; here only by_window sees
+    # a NULL window_start. Via TIMESTAMP: parquet scans yield
+    # TIMESTAMP_NTZ in Spark 4, which unix_micros does not take. The
+    # width is Spark's own parse of the interval, folded to a literal.
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    width = F.expr(f"unix_micros(timestamp_micros(0) + INTERVAL '{window}')")
+    window_start = F.unix_seconds(F.timestamp_micros(us - F.pmod(us, width))).alias(
+        "window_start"
     )
     tags = {
         "conv_id": "by_conv",

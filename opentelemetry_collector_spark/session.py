@@ -7,6 +7,8 @@ to cores, UTC so DuckDB-oracle comparisons are timezone-stable).
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import shutil
 import tempfile
@@ -14,6 +16,20 @@ import tempfile
 from pyspark.sql import SparkSession
 
 _SHIPPED: set[str] = set()
+
+
+@functools.cache
+def _package_zip() -> str:
+    """Zip the package once per process into a fresh temp dir, removed
+    at interpreter exit. Spark's file server reads it lazily, so it must
+    outlive ``addPyFile``, but not the process that shipped it."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    tmp_dir = tempfile.mkdtemp(prefix="otelcol_spark_pkg_")
+    atexit.register(shutil.rmtree, tmp_dir, ignore_errors=True)
+    return shutil.make_archive(
+        os.path.join(tmp_dir, "otelcol_spark_pkg"), "zip",
+        root_dir=os.path.dirname(pkg_dir), base_dir=os.path.basename(pkg_dir),
+    )
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -28,15 +44,7 @@ def ship_package(spark: SparkSession) -> None:
     app_id = spark.sparkContext.applicationId
     if app_id in _SHIPPED:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    zip_base = os.path.join(
-        tempfile.gettempdir(), f"otelcol_spark_pkg_{os.getpid()}"
-    )
-    zip_path = zip_base + ".zip"
-    if not os.path.exists(zip_path):
-        shutil.make_archive(zip_base, "zip", root_dir=root, base_dir=os.path.basename(pkg_dir))
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(_package_zip())
     _SHIPPED.add(app_id)
 
 

@@ -70,8 +70,10 @@ def _json_safe(v):
 def _footer_lineage(path: str, lineage_keys: tuple[str, ...]) -> list[dict]:
     """Per-file lineage from parquet footer metadata: row count plus
     min/max of each lineage key, read without touching data pages
-    (``run_and_write`` records the conv_id range; ``ts`` is written as
-    INT96, which carries no statistics). String min/max may be
+    (``run_and_write`` records the conv_id range). A TIMESTAMP_NTZ
+    column is written as INT64 ``TIMESTAMP(MICROS)`` with min/max; only
+    a TIMESTAMP column is written as INT96, which carries no
+    statistics. String min/max may be
     writer-truncated bounds (parquet permits truncated statistics) —
     still valid conservative key ranges.
     O(#files) driver-side metadata reads, exactly the cost profile of
@@ -88,6 +90,7 @@ def _footer_lineage(path: str, lineage_keys: tuple[str, ...]) -> list[dict]:
             ent: dict = {
                 "file": os.path.relpath(full, path),
                 "rows": md.num_rows,
+                "bytes": os.path.getsize(full),
             }
             # leaf-column dotted paths (robust to map/struct columns)
             col_idx = {
@@ -263,15 +266,27 @@ class Warehouse:
         return entries
 
     def read_sink(self, spark: SparkSession, sink: str) -> DataFrame:
-        """Read only committed snapshots of a sink table. A sink of a
-        partitioned run with no rows has no directory and adds none; a
-        committed snapshot with rows whose directory is gone still fails
-        the read."""
-        entries = [m["sinks"][sink] for m in self._manifests() if sink in m["sinks"]]
-        paths = [e["path"] for e in entries if e["rows"] > 0 or os.path.isdir(e["path"])]
-        if not paths:
+        """Read only committed snapshots of a sink table: exactly the
+        files their manifests list, never the directory, so a stray file
+        beside them is never read. A committed file that is gone fails
+        the read (PATH_NOT_FOUND) and one whose size differs from the
+        manifest's is refused by name, rather than under-counting. A sink
+        of a partitioned run with no rows lists no files and adds none."""
+        files = []
+        for m in self._manifests():
+            e = m["sinks"].get(sink)
+            for f in e["lineage"] if e else ():
+                full = os.path.join(e["path"], f["file"])
+                want = f.get("bytes")  # None in manifests older than the field
+                if want is not None and os.path.exists(full) and os.path.getsize(full) != want:
+                    raise ValueError(
+                        f"committed file {full} is {os.path.getsize(full)} bytes, "
+                        f"its manifest lists {want}"
+                    )
+                files.append(full)
+        if not files:
             raise FileNotFoundError(f"no committed snapshots for sink {sink!r}")
-        return spark.read.parquet(*paths)
+        return spark.read.parquet(*files)
 
     def metrics_table(self, spark: SparkSession) -> DataFrame:
         """obsreport-parity view over the commit log: per-sink sent

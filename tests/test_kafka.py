@@ -47,13 +47,12 @@ class TestKafkaConfig:
     def test_e2e_gate_is_environmental_not_code(self):
         """Why no Kafka round trip has ever executed here, recorded
         mechanically: the spark-sql-kafka jar is not in the local
-        Spark distribution AND the sandbox has no network to fetch it
-        (or to reach a broker). If either probe starts passing, this
-        test fails — the signal to replace the gate with a real
-        readStream→writeStream round trip."""
+        Spark distribution. If it appears, this test fails — the signal
+        to replace the gate with a real readStream→writeStream round
+        trip. The network half of the gate is
+        ``test_e2e_gate_has_no_egress``."""
         import glob
         import os
-        import socket
 
         import pyspark
 
@@ -61,6 +60,14 @@ class TestKafkaConfig:
             os.path.join(os.path.dirname(pyspark.__file__), "jars", "*kafka*")
         )
         assert not jars, f"kafka jar now present: {jars} — wire the e2e test"
+
+    @pytest.mark.slow
+    def test_e2e_gate_has_no_egress(self):
+        """The other half of the gate: no network to fetch the jar or
+        reach a broker. It opens an outbound socket, so it runs only in
+        the full lane."""
+        import socket
+
         try:
             socket.create_connection(("repo1.maven.org", 443), timeout=3).close()
             reachable = True

@@ -116,7 +116,9 @@ class TestRunAndWrite:
             assert sum(f["rows"] for f in r.lineage) == r.rows
             files |= {os.path.join(r.path, f["file"]) for f in r.lineage}
         # routed files carry their conv_id ranges from the parquet
-        # footers (ts is written as INT96, which has no statistics)
+        # footers; run_and_write asks for no ts range (this fixture's
+        # TIMESTAMP ts is written as INT96, without statistics; a
+        # TIMESTAMP_NTZ ts is INT64 TIMESTAMP(MICROS) with min/max)
         assert results["archive"].lineage
         for f in results["archive"].lineage:
             assert f["min_conv_id"] <= f["max_conv_id"]
@@ -165,6 +167,75 @@ class TestRunAndWrite:
         shutil.rmtree(results["errors"].path)
         with pytest.raises(Exception, match="PATH_NOT_FOUND"):
             wh.read_sink(spark, "errors").count()
+
+    def test_deleted_part_file_fails_the_read(self, spark, tiny_transcripts, wh):
+        """read_sink reads the files the manifest lists: one deleted after
+        the commit fails the read instead of being counted as absent."""
+        r = run_and_write(spark, tiny_transcripts, wh, "run1")["archive"]
+        assert len(r.lineage) > 1  # the other files would still read
+        os.remove(os.path.join(r.path, r.lineage[0]["file"]))
+        with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+            wh.read_sink(spark, "archive").count()
+
+    def test_truncated_part_file_is_refused_by_name(self, spark, tiny_transcripts, wh):
+        """A committed file cut short after the commit is refused before
+        any scan, by its size against the manifest's."""
+        r = run_and_write(spark, tiny_transcripts, wh, "run1")["archive"]
+        part = os.path.join(r.path, r.lineage[0]["file"])
+        os.truncate(part, os.path.getsize(part) // 2)
+        with pytest.raises(ValueError, match=f"committed file {re.escape(part)} is"):
+            wh.read_sink(spark, "archive")
+
+    def test_stray_file_in_committed_directory_is_not_read(
+        self, spark, tiny_transcripts, wh
+    ):
+        r = run_and_write(spark, tiny_transcripts, wh, "run1")["archive"]
+        tiny_transcripts.limit(5).write.parquet(os.path.join(wh.root, "stray"))
+        (stray,) = [
+            f for f in os.listdir(os.path.join(wh.root, "stray")) if f.endswith(".parquet")
+        ]
+        os.rename(
+            os.path.join(wh.root, "stray", stray),
+            os.path.join(r.path, "part-99999-stray.snappy.parquet"),
+        )
+        assert wh.read_sink(spark, "archive").count() == r.rows
+
+    def test_null_ts_turn_counted_in_every_grouping_set(self, spark, tiny_transcripts, wh):
+        """A turn without a timestamp has no event-time window, but it is
+        still a turn of its conversation, role and tool: only ``by_window``
+        sees it as a NULL key, so the run commits and conserves."""
+        first = tiny_transcripts.orderBy("conv_id", "turn_idx").first()
+        null_ts = (F.col("conv_id") == first.conv_id) & (F.col("turn_idx") == first.turn_idx)
+        df = tiny_transcripts.withColumn(
+            "ts", F.when(null_ts, F.lit(None)).otherwise(F.col("ts"))
+        )
+        results = run_and_write(spark, df, wh, "run1")
+        agg = wh.read_sink(spark, "archive_agg")
+        assert results["archive"].rows == tiny_transcripts.count()
+        for group_set, key in [
+            ("by_conv", "conv_id"),
+            ("by_role", "role"),
+            ("by_tool", "tool"),
+            ("by_window", "window_start"),
+        ]:
+            rows = agg.filter(F.col("group_set") == group_set)
+            assert rows.agg(F.sum("n_turns")).first()[0] == results["archive"].rows, group_set
+        (conv,) = agg.filter(
+            (F.col("group_set") == "by_conv") & (F.col("conv_id") == first.conv_id)
+        ).collect()
+        assert conv.n_turns == tiny_transcripts.filter(F.col("conv_id") == first.conv_id).count()
+        (no_window,) = agg.filter(
+            (F.col("group_set") == "by_window") & F.col("window_start").isNull()
+        ).collect()
+        assert no_window.n_turns == 1
+        for s in ("archive", "errors", "tool_calls"):
+            by_conv = (
+                wh.read_sink(spark, f"{s}_agg")
+                .filter(F.col("group_set") == "by_conv")
+                .agg(F.sum("n_turns"))
+                .first()[0]
+            )
+            assert by_conv == results[s].rows, s
 
     def test_route_matching_nothing_commits_zero_rows(self, spark, tiny_transcripts, wh):
         """A sink no row reaches gets no partition directory: it commits
@@ -309,12 +380,11 @@ class TestIcebergGate:
         """Why no query has ever run against real Iceberg metadata here,
         recorded mechanically (mirror of test_kafka's e2e gate): the
         iceberg-spark-runtime jar is in neither the pyspark wheel's jars
-        nor $SPARK_HOME/jars, AND the sandbox has no network to fetch
-        it. If either probe starts passing this test fails — the signal
-        to bind the warehouse interface to a real Iceberg catalog."""
+        nor $SPARK_HOME/jars. If it appears this test fails — the signal
+        to bind the warehouse interface to a real Iceberg catalog. The
+        network half of the gate is ``test_gate_has_no_egress``."""
         import glob
         import os
-        import socket
 
         import pyspark
 
@@ -326,6 +396,13 @@ class TestIcebergGate:
             j for d in jar_dirs for j in glob.glob(os.path.join(d, "*iceberg*"))
         ]
         assert not jars, f"iceberg jar now present: {jars} — wire a real catalog"
+
+    @pytest.mark.slow
+    def test_gate_has_no_egress(self):
+        """The other half of the gate: no network to fetch the jar. It
+        opens an outbound socket, so it runs only in the full lane."""
+        import socket
+
         try:
             socket.create_connection(("repo1.maven.org", 443), timeout=3).close()
             reachable = True
