@@ -56,6 +56,16 @@ class Reader:
     def string(self) -> str:
         return self.binary().decode("utf-8", "replace")
 
+    def _list_count(self) -> int:
+        n = self.i32()
+        if n < 0 or n > len(self.buf) - self.pos:
+            # every element takes at least one byte, so a count beyond
+            # the bytes left is corrupt; refusing it up front keeps a
+            # garbage count (up to 2**31 - 1) from spinning ``skip``
+            # over fixed-width elements it never reads
+            raise ValueError("thrift list count out of bounds")
+        return n
+
     def skip(self, ftype: int) -> None:
         if ftype in (BOOL, BYTE):
             self.pos += 1
@@ -76,7 +86,7 @@ class Reader:
                 self.skip(t)
         elif ftype == LIST:
             et = self.byte()
-            for _ in range(self.i32()):
+            for _ in range(self._list_count()):
                 self.skip(et)
         else:
             raise ValueError(f"unsupported thrift type {ftype}")
@@ -94,7 +104,7 @@ class Reader:
         et = self.byte()
         if et != expect:
             raise ValueError(f"expected list<{expect}>, got elem type {et}")
-        return self.i32()
+        return self._list_count()
 
 
 class Writer:

@@ -9,9 +9,11 @@ from __future__ import annotations
 
 import atexit
 import functools
+import glob
 import os
 import shutil
 import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
 
@@ -20,16 +22,20 @@ _SHIPPED: set[str] = set()
 
 @functools.cache
 def _package_zip() -> str:
-    """Zip the package once per process into a fresh temp dir, removed
-    at interpreter exit. Spark's file server reads it lazily, so it must
-    outlive ``addPyFile``, but not the process that shipped it."""
+    """Zip the package's ``.py`` files once per process into a fresh
+    temp dir, removed at interpreter exit. Spark's file server reads it
+    lazily, so it must outlive ``addPyFile``, but not the process that
+    shipped it. ``__pycache__`` stays out: zipimport never reads
+    bytecode from an archive's ``__pycache__``."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg_dir)
     tmp_dir = tempfile.mkdtemp(prefix="otelcol_spark_pkg_")
     atexit.register(shutil.rmtree, tmp_dir, ignore_errors=True)
-    return shutil.make_archive(
-        os.path.join(tmp_dir, "otelcol_spark_pkg"), "zip",
-        root_dir=os.path.dirname(pkg_dir), base_dir=os.path.basename(pkg_dir),
-    )
+    path = os.path.join(tmp_dir, "otelcol_spark_pkg.zip")
+    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
+        for src in sorted(glob.glob(os.path.join(pkg_dir, "**", "*.py"), recursive=True)):
+            zf.write(src, os.path.relpath(src, root))
+    return path
 
 
 def ship_package(spark: SparkSession) -> None:

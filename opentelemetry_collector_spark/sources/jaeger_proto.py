@@ -27,14 +27,12 @@ the dependency the reference's translator consumes):
 
 from __future__ import annotations
 
-import json
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.proto_binary import FIXED64, LEN, VARINT, Reader, Writer
+from .wirebridge import decode_blobs, encode_lines
 
 # proto ValueType ordinal ↔ this repo's Jaeger-JSON tag type names
 _VTYPE_NAMES = {0: "string", 1: "bool", 2: "int64", 3: "float64", 4: "binary"}
@@ -226,31 +224,16 @@ def encode_batch(spans: list[dict], service_name: str | None = None) -> bytes:
 
 
 # -- Spark surface ----------------------------------------------------------
-
-
-def jaeger_proto_to_json(df: DataFrame, bin_col: str = "proto") -> DataFrame:
-    """Binary Batch blobs → one Jaeger JSON line per span
-    (Arrow-batched mapInPandas)."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for blob in pdf[bin_col]:
-                if blob is None:
-                    continue
-                for sp in decode_batch(bytes(blob)):
-                    rows.append(json.dumps(sp))
-            yield pd.DataFrame({"jaeger": rows})
-
-    return df.mapInPandas(decode, schema="jaeger string")
+# The shared bridge (sources/wirebridge.py) carries the Jaeger JSON lines of
+# sources/jaeger_json.py across the Python boundary.
 
 
 def jaeger_proto_to_spans(df: DataFrame, bin_col: str = "proto") -> DataFrame:
     """Proto Batch wire → span table via the shared Jaeger JSON
-    semantic layer."""
+    semantic layer (one JSON line per decoded span)."""
     from .jaeger_json import jaeger_json_to_spans
 
-    return jaeger_json_to_spans(jaeger_proto_to_json(df, bin_col))
+    return jaeger_json_to_spans(decode_blobs(df, bin_col, decode_batch, "jaeger"))
 
 
 def spans_to_jaeger_proto(
@@ -259,14 +242,9 @@ def spans_to_jaeger_proto(
     """Span table → one proto-encoded single-span Batch per row."""
     from .jaeger_json import spans_to_jaeger_json
 
-    j = spans_to_jaeger_json(spans, service_name)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [
-                encode_batch([json.loads(line)], service_name)
-                for line in pdf["jaeger"]
-            ]
-            yield pd.DataFrame({"proto": blobs})
-
-    return j.mapInPandas(encode, schema="proto binary")
+    return encode_lines(
+        spans_to_jaeger_json(spans, service_name),
+        "jaeger",
+        lambda sp: encode_batch([sp], service_name),
+        "proto",
+    )

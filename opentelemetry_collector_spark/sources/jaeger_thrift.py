@@ -24,10 +24,6 @@ jaeger.thrift field ids:
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.thrift_binary import (
@@ -43,6 +39,7 @@ from ..functions.thrift_binary import (
     hex16,
     signed64,
 )
+from .wirebridge import decode_blobs, encode_lines
 
 _VTYPE_NAMES = {0: "string", 1: "float64", 2: "bool", 3: "int64", 4: "binary"}
 
@@ -241,31 +238,16 @@ def encode_batch(spans: list[dict], service_name: str | None = None) -> bytes:
 
 
 # -- Spark surface ----------------------------------------------------------
-
-
-def jaeger_thrift_to_json(df: DataFrame, bin_col: str = "thrift") -> DataFrame:
-    """Binary thrift Batch blobs → one Jaeger JSON line per span
-    (Arrow-batched mapInPandas)."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for blob in pdf[bin_col]:
-                if blob is None:
-                    continue
-                for sp in decode_batch(bytes(blob)):
-                    rows.append(json.dumps(sp))
-            yield pd.DataFrame({"jaeger": rows})
-
-    return df.mapInPandas(decode, schema="jaeger string")
+# The shared bridge (sources/wirebridge.py) carries the Jaeger JSON lines of
+# sources/jaeger_json.py across the Python boundary.
 
 
 def jaeger_thrift_to_spans(df: DataFrame, bin_col: str = "thrift") -> DataFrame:
     """Thrift Batch wire → span table via the shared Jaeger JSON
-    semantic layer."""
+    semantic layer (one JSON line per decoded span)."""
     from .jaeger_json import jaeger_json_to_spans
 
-    return jaeger_json_to_spans(jaeger_thrift_to_json(df, bin_col))
+    return jaeger_json_to_spans(decode_blobs(df, bin_col, decode_batch, "jaeger"))
 
 
 def spans_to_jaeger_thrift(
@@ -274,14 +256,9 @@ def spans_to_jaeger_thrift(
     """Span table → one thrift-encoded single-span Batch per row."""
     from .jaeger_json import spans_to_jaeger_json
 
-    j = spans_to_jaeger_json(spans, service_name)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [
-                encode_batch([json.loads(line)], service_name)
-                for line in pdf["jaeger"]
-            ]
-            yield pd.DataFrame({"thrift": blobs})
-
-    return j.mapInPandas(encode, schema="thrift binary")
+    return encode_lines(
+        spans_to_jaeger_json(spans, service_name),
+        "jaeger",
+        lambda sp: encode_batch([sp], service_name),
+        "thrift",
+    )

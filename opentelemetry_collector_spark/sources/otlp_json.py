@@ -14,7 +14,9 @@ Spark mapping (SURVEY.md §1.4): one conversation = one resource group,
 so the flat transcript table round-trips through
 ``groupBy(conv_id).collect_list`` on the way out and
 ``from_json → explode ×3`` on the way back — all JVM-side json/struct
-expressions, no Python.
+expressions, no Python. A Metric line's four union arms explode in one
+pass, so its source is read once. The binary OTLP codec reaches these
+functions through the shared bridge (``wirebridge.py``).
 
 Scale note: a resource group's records must fit one row on the way
 out (collect_list per conv_id) — exactly the batch granularity the
@@ -500,7 +502,13 @@ def metrics_to_otlp_json(dps: DataFrame) -> DataFrame:
 
 def metrics_from_otlp_json(df: DataFrame, json_col: str = "otlp") -> DataFrame:
     """OTLP-JSON Metric lines → datapoint rows: the union field picks
-    (data_type, value column); gauges restore UNSPECIFIED temporality."""
+    (data_type, value column); gauges restore UNSPECIFIED temporality.
+
+    One pass: each line becomes four ``(data_type, temporality,
+    int_side, dataPoints)`` arms, one per union field, and their points
+    explode once (an absent arm's NULL points explode to nothing). The
+    double points are cast to the int points' string-valued type so the
+    arms share one type; Spark's double → string → double is exact."""
     m = df.select(F.from_json(F.col(json_col), _OTLP_METRIC_SCHEMA).alias("m")).select(
         "m.*"
     )
@@ -514,44 +522,39 @@ def metrics_from_otlp_json(df: DataFrame, json_col: str = "otlp") -> DataFrame:
             == name,
             F.lit(t),
         ).otherwise(temp_back)
-
-    def flat(dtype: str, dp_col, int_side: bool):
-        base = m.filter(F.col(dp_col).isNotNull()).select(
-            "name",
-            F.lit(dtype).alias("data_type"),
-            (
-                temp_back if dtype.endswith("Sum") else F.lit("UNSPECIFIED")
-            ).alias("temporality"),
-            F.explode(f"{dp_col}.dataPoints").alias("dp"),
+    points_type = T.ArrayType(_INT_DP)
+    arms = F.array(
+        *(
+            F.struct(
+                F.lit(dtype).alias("data_type"),
+                (temp_back if dtype.endswith("Sum") else F.lit("UNSPECIFIED")).alias(
+                    "temporality"
+                ),
+                F.lit(int_side).alias("int_side"),
+                F.col(f"{union_col}.dataPoints").cast(points_type).alias("dataPoints"),
+            )
+            for dtype, union_col, int_side in (
+                ("IntGauge", "intGauge", True),
+                ("DoubleGauge", "doubleGauge", False),
+                ("IntSum", "intSum", True),
+                ("DoubleSum", "doubleSum", False),
+            )
         )
-        return base.select(
-            "name", "data_type", "temporality",
-            F.map_from_entries(
-                F.coalesce(F.col("dp.labels"), F.array().cast(_LABELS_SCHEMA))
-            ).alias("labels"),
-            F.timestamp_micros(
-                _ns_string_to_micros(F.col("dp.timeUnixNano"))
-            ).alias("ts"),
-            (
-                F.col("dp.value").cast("long")
-                if int_side
-                else F.lit(None).cast("long")
-            ).alias("int_value"),
-            (
-                F.col("dp.value").cast("double")
-                if not int_side
-                else F.lit(None).cast("double")
-            ).alias("double_value"),
-        )
-
-    out = flat("IntGauge", "intGauge", True)
-    for dtype, col, int_side in (
-        ("DoubleGauge", "doubleGauge", False),
-        ("IntSum", "intSum", True),
-        ("DoubleSum", "doubleSum", False),
-    ):
-        out = out.unionByName(flat(dtype, col, int_side))
-    return out
+    )
+    dp = m.select("name", F.inline(arms)).select(
+        "name", "data_type", "temporality", "int_side",
+        F.explode("dataPoints").alias("dp"),
+    )
+    int_side = F.col("int_side")
+    return dp.select(
+        "name", "data_type", "temporality",
+        F.map_from_entries(
+            F.coalesce(F.col("dp.labels"), F.array().cast(_LABELS_SCHEMA))
+        ).alias("labels"),
+        F.timestamp_micros(_ns_string_to_micros(F.col("dp.timeUnixNano"))).alias("ts"),
+        F.when(int_side, F.col("dp.value").cast("long")).alias("int_value"),
+        F.when(~int_side, F.col("dp.value").cast("double")).alias("double_value"),
+    )
 
 
 def logs_from_otlp_json(df: DataFrame, json_col: str = "otlp") -> DataFrame:

@@ -36,14 +36,12 @@ Field numbers (from the generated pb.go files above):
 from __future__ import annotations
 
 import base64
-import json
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.proto_binary import FIXED64, LEN, VARINT, Reader, Writer
+from .wirebridge import decode_blobs, encode_lines
 
 _SPAN_KINDS = [
     "SPAN_KIND_UNSPECIFIED",
@@ -364,30 +362,9 @@ def encode_traces_request(req: dict) -> bytes:
 
 
 # ---------------------------------------------------------------------------
-# Spark surface (Arrow-batched mapInPandas, like the thrift sources)
+# Spark surface: the shared bridge (sources/wirebridge.py) carries the
+# jsonpb lines of sources/otlp_json.py across the Python boundary
 # ---------------------------------------------------------------------------
-
-
-def _json_to_proto(df: DataFrame, json_col: str, encode_fn) -> DataFrame:
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [encode_fn(json.loads(line)) for line in pdf[json_col]]
-            yield pd.DataFrame({"proto": blobs})
-
-    return df.mapInPandas(encode, schema="proto binary")
-
-
-def _proto_to_json(df: DataFrame, bin_col: str, decode_fn) -> DataFrame:
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lines = [
-                json.dumps(decode_fn(bytes(blob)))
-                for blob in pdf[bin_col]
-                if blob is not None
-            ]
-            yield pd.DataFrame({"otlp": lines})
-
-    return df.mapInPandas(decode, schema="otlp string")
 
 
 def logs_to_otlp_proto(
@@ -398,7 +375,7 @@ def logs_to_otlp_proto(
     from .otlp_json import logs_to_otlp_json
 
     j = logs_to_otlp_json(df, resource_key, library_name)
-    return _json_to_proto(j, "otlp", encode_logs_request)
+    return encode_lines(j, "otlp", encode_logs_request, "proto")
 
 
 def logs_from_otlp_proto(df: DataFrame, bin_col: str = "proto") -> DataFrame:
@@ -406,7 +383,9 @@ def logs_from_otlp_proto(df: DataFrame, bin_col: str = "proto") -> DataFrame:
     protobuf-JSON semantic layer (the otlpreceiver path)."""
     from .otlp_json import logs_from_otlp_json
 
-    return logs_from_otlp_json(_proto_to_json(df, bin_col, decode_logs_request))
+    return logs_from_otlp_json(
+        decode_blobs(df, bin_col, lambda b: [decode_logs_request(b)], "otlp")
+    )
 
 
 def spans_to_otlp_proto(
@@ -417,14 +396,16 @@ def spans_to_otlp_proto(
     from .otlp_json import spans_to_otlp_json
 
     j = spans_to_otlp_json(spans, library_name)
-    return _json_to_proto(j, "otlp", encode_traces_request)
+    return encode_lines(j, "otlp", encode_traces_request, "proto")
 
 
 def otlp_proto_to_spans(df: DataFrame, bin_col: str = "proto") -> DataFrame:
     """Binary OTLP trace request blobs → span table."""
     from .otlp_json import otlp_json_to_spans
 
-    return otlp_json_to_spans(_proto_to_json(df, bin_col, decode_traces_request))
+    return otlp_json_to_spans(
+        decode_blobs(df, bin_col, lambda b: [decode_traces_request(b)], "otlp")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -623,16 +604,9 @@ def metrics_to_otlp_proto(dps: DataFrame) -> DataFrame:
     per metric (the otlp exporter's metric wire payload)."""
     from .otlp_json import metrics_to_otlp_json
 
-    j = metrics_to_otlp_json(dps)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [
-                encode_metrics_request([json.loads(line)]) for line in pdf["otlp"]
-            ]
-            yield pd.DataFrame({"proto": blobs})
-
-    return j.mapInPandas(encode, schema="proto binary")
+    return encode_lines(
+        metrics_to_otlp_json(dps), "otlp", lambda m: encode_metrics_request([m]), "proto"
+    )
 
 
 def metrics_from_otlp_proto(df: DataFrame, bin_col: str = "proto") -> DataFrame:
@@ -641,14 +615,6 @@ def metrics_from_otlp_proto(df: DataFrame, bin_col: str = "proto") -> DataFrame:
     the shared JSON semantic layer."""
     from .otlp_json import metrics_from_otlp_json
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lines = [
-                json.dumps(m)
-                for blob in pdf[bin_col]
-                if blob is not None
-                for m in decode_metrics_request(bytes(blob))
-            ]
-            yield pd.DataFrame({"otlp": lines})
-
-    return metrics_from_otlp_json(df.mapInPandas(decode, schema="otlp string"))
+    return metrics_from_otlp_json(
+        decode_blobs(df, bin_col, decode_metrics_request, "otlp")
+    )

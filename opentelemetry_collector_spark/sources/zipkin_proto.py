@@ -25,13 +25,10 @@ absent, status tag riding, micro timestamps) stay single-sourced."""
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.proto_binary import FIXED64, LEN, VARINT, Reader, Writer
+from .wirebridge import decode_blobs, encode_lines
 
 _KIND_ENUM = {"CLIENT": 1, "SERVER": 2, "PRODUCER": 3, "CONSUMER": 4}
 _KIND_BY_ENUM = {v: k for k, v in _KIND_ENUM.items()}
@@ -139,20 +136,23 @@ def decode_list_of_spans(blob: bytes) -> list[dict]:
     return spans
 
 
+# -- Spark surface ----------------------------------------------------------
+# The shared bridge (sources/wirebridge.py) carries the v2 JSON lines of
+# sources/zipkin_json.py across the Python boundary.
+
+
 def spans_to_zipkin_proto(spans: DataFrame, service_name: str = "transcripts") -> DataFrame:
     """Span table → one binary single-span ``ListOfSpans`` per row
     (the receiver accepts any batching; one-per-row mirrors the other
     proto encoders)."""
     from .zipkin_json import spans_to_zipkin_json
 
-    j = spans_to_zipkin_json(spans, service_name)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [encode_list_of_spans([json.loads(line)]) for line in pdf["zipkin"]]
-            yield pd.DataFrame({"proto": blobs})
-
-    return j.mapInPandas(encode, schema="proto binary")
+    return encode_lines(
+        spans_to_zipkin_json(spans, service_name),
+        "zipkin",
+        lambda sp: encode_list_of_spans([sp]),
+        "proto",
+    )
 
 
 def zipkin_proto_to_spans(df: DataFrame, bin_col: str = "proto") -> DataFrame:
@@ -160,14 +160,6 @@ def zipkin_proto_to_spans(df: DataFrame, bin_col: str = "proto") -> DataFrame:
     JSON semantic layer (a multi-span list fans out)."""
     from .zipkin_json import zipkin_json_to_spans
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            lines = [
-                json.dumps(sp)
-                for blob in pdf[bin_col]
-                if blob is not None
-                for sp in decode_list_of_spans(bytes(blob))
-            ]
-            yield pd.DataFrame({"zipkin": lines})
-
-    return zipkin_json_to_spans(df.mapInPandas(decode, schema="zipkin string"))
+    return zipkin_json_to_spans(
+        decode_blobs(df, bin_col, decode_list_of_spans, "zipkin")
+    )

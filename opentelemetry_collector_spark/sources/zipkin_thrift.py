@@ -6,8 +6,8 @@ reporter posts, decoded without any thrift library dependency.
 Layering: this module ONLY handles the wire encoding — the shared
 pure-Python TBinaryProtocol codec (functions/thrift_binary.py) applied
 to the zipkincore structs (Span, Annotation, BinaryAnnotation,
-Endpoint), Arrow-batched via mapInPandas (binary parsing is the
-legitimate Python slow path, SURVEY §4). Each decoded span is
+Endpoint), Arrow-batched by the shared bridge (sources/wirebridge.py;
+binary parsing is the legitimate Python slow path, SURVEY §4). Each decoded span is
 re-emitted as a Zipkin v1 JSON line and the SEMANTIC translation
 (annotation kinds, status mapper, lc rename) is delegated to
 ``zipkin_v1_json.zipkin_v1_json_to_spans`` — one semantic layer, two
@@ -26,11 +26,8 @@ zipkincore.thrift field ids (openzipkin/zipkin-api):
 
 from __future__ import annotations
 
-import json
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.thrift_binary import (
@@ -44,6 +41,7 @@ from ..functions.thrift_binary import (
     hex16,
     signed64,
 )
+from .wirebridge import decode_blobs, encode_lines
 
 
 def _read_endpoint(r: Reader) -> dict:
@@ -209,34 +207,20 @@ def encode_span_list(spans: list[dict]) -> bytes:
 
 
 # -- Spark surface ----------------------------------------------------------
-
-
-def zipkin_thrift_to_v1_json(df: DataFrame, bin_col: str = "thrift") -> DataFrame:
-    """Binary thrift blobs (one encoded span LIST per row — one posted
-    request body) → one v1 JSON line per span. Arrow-batched
-    mapInPandas; the per-request blob is the reference's unit of work
-    too (the HTTP body), so batch shape matches the receiver's."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for blob in pdf[bin_col]:
-                if blob is None:
-                    continue
-                for sp in decode_span_list(bytes(blob)):
-                    rows.append(json.dumps(sp))
-            yield pd.DataFrame({"zipkin_v1": rows})
-
-    return df.mapInPandas(decode, schema="zipkin_v1 string")
+# The shared bridge (sources/wirebridge.py) carries the v1 JSON lines of
+# sources/zipkin_v1_json.py across the Python boundary.
 
 
 def zipkin_thrift_to_spans(df: DataFrame, bin_col: str = "thrift") -> DataFrame:
-    """Thrift wire → span table: wire decode (here) + the SHARED v1
-    semantic translation (zipkin_v1_json.py) — the same two-stage
-    funnel as the reference's thrift receiver."""
+    """Thrift wire → span table: wire decode (here; one encoded span
+    list per row, one posted request body, the reference's unit of
+    work too) + the SHARED v1 semantic translation (zipkin_v1_json.py)
+    — the same two-stage funnel as the reference's thrift receiver."""
     from .zipkin_v1_json import zipkin_v1_json_to_spans
 
-    return zipkin_v1_json_to_spans(zipkin_thrift_to_v1_json(df, bin_col))
+    return zipkin_v1_json_to_spans(
+        decode_blobs(df, bin_col, decode_span_list, "zipkin_v1")
+    )
 
 
 def spans_to_zipkin_thrift(spans: DataFrame, service_name: str = "transcripts") -> DataFrame:
@@ -246,13 +230,9 @@ def spans_to_zipkin_thrift(spans: DataFrame, service_name: str = "transcripts") 
     wire formats share the annotation/binary-annotation semantics."""
     from .zipkin_v1_json import spans_to_zipkin_v1_json
 
-    v1 = spans_to_zipkin_v1_json(spans, service_name)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [
-                encode_span_list([json.loads(line)]) for line in pdf["zipkin_v1"]
-            ]
-            yield pd.DataFrame({"thrift": blobs})
-
-    return v1.mapInPandas(encode, schema="thrift binary")
+    return encode_lines(
+        spans_to_zipkin_v1_json(spans, service_name),
+        "zipkin_v1",
+        lambda sp: encode_span_list([sp]),
+        "thrift",
+    )

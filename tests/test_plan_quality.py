@@ -359,3 +359,65 @@ class TestPlanQuality:
         )
         plan = plan_of(q)
         assert "TakeOrderedAndProject" in plan, plan
+
+
+class TestWireCodecPlans:
+    """A wire round trip reads its source once and crosses into Python
+    once per direction: the OTLP metric decoder explodes its four
+    union arms in one pass instead of unioning one branch per arm,
+    which re-ran the scan (and, for the proto arm, both Python maps)
+    once per branch."""
+
+    @pytest.fixture(scope="class")
+    def parquet_dps(self, spark, tmp_path_factory):
+        p = str(tmp_path_factory.mktemp("wire") / "dps")
+        spark.createDataFrame(
+            [
+                ("a", "IntGauge", "UNSPECIFIED", {"k": "v"}, 1, None),
+                ("b", "DoubleGauge", "UNSPECIFIED", {}, None, 0.5),
+                ("c", "IntSum", "DELTA", None, 2, None),
+                ("d", "DoubleSum", "CUMULATIVE", {}, None, 1.5),
+            ],
+            "name string, data_type string, temporality string,"
+            " labels map<string,string>, int_value long, double_value double",
+        ).withColumn("ts", F.current_timestamp()).write.parquet(p)
+        return spark.read.parquet(p)
+
+    @pytest.fixture(scope="class")
+    def parquet_spans(self, spark, tiny_transcripts, tmp_path_factory):
+        from opentelemetry_collector_spark.operators.traces import transcripts_to_spans
+
+        p = str(tmp_path_factory.mktemp("wire") / "spans")
+        transcripts_to_spans(parse_stage(tiny_transcripts, engine="jvm")).write.parquet(p)
+        return spark.read.parquet(p)
+
+    def test_metric_arms_scan_once(self, parquet_dps):
+        from opentelemetry_collector_spark.sources import otlp_json, otlp_proto
+
+        arms = {
+            "otlp_json": otlp_json.metrics_from_otlp_json(
+                otlp_json.metrics_to_otlp_json(parquet_dps)
+            ),
+            "otlp_proto": otlp_proto.metrics_from_otlp_proto(
+                otlp_proto.metrics_to_otlp_proto(parquet_dps)
+            ),
+        }
+        for name, df in arms.items():
+            plan = plan_of(df)
+            assert plan.count("FileScan parquet") == 1, f"{name}\n{plan}"
+            python_maps = 2 if name == "otlp_proto" else 0
+            assert plan.count("MapInPandas") == python_maps, f"{name}\n{plan}"
+
+    def test_binary_span_arms_cross_python_once_each_way(self, parquet_spans):
+        from opentelemetry_collector_spark.plans.operator_queries import (
+            _span_wire_codecs,
+        )
+
+        codecs = _span_wire_codecs()
+        for name in (
+            "otlp_proto", "zipkin_v2_proto", "zipkin_v1_thrift",
+            "jaeger_thrift", "jaeger_proto",
+        ):
+            plan = plan_of(codecs[name](parquet_spans))
+            assert plan.count("FileScan parquet") == 1, f"{name}\n{plan}"
+            assert plan.count("MapInPandas") == 2, f"{name}\n{plan}"

@@ -68,3 +68,19 @@ def test_shipped_zip_is_built_once_and_removed_at_exit(tmp_path):
     assert len(shipped) == 2 and shipped[0] == shipped[1]
     assert shipped[0].startswith(str(tmp_path) + os.sep)
     assert os.listdir(tmp_path) == []
+
+
+def test_shipped_zip_carries_sources_only():
+    """The zip holds the package's ``.py`` files and nothing else: no
+    ``__pycache__`` bytecode, which zipimport never reads from an
+    archive but every worker would fetch."""
+    import zipfile
+
+    from opentelemetry_collector_spark.session import _package_zip
+
+    with zipfile.ZipFile(_package_zip()) as zf:
+        files = [i.filename for i in zf.infolist() if not i.is_dir()]
+    assert "opentelemetry_collector_spark/sources/wirebridge.py" in files, files
+    assert all(f.endswith(".py") for f in files), [
+        f for f in files if not f.endswith(".py")
+    ]

@@ -84,6 +84,27 @@ class TestCodec:
         back = decode_span_list(bytes(w.out))
         assert back[0]["binaryAnnotations"][0]["value"] == "12345"
 
+    @pytest.mark.parametrize("count", [50_000_000, 2**31 - 1, -1])
+    def test_garbage_list_count_refused_not_spun(self, count):
+        # 13 bytes: list<struct>[1] whose span opens with an unknown
+        # field holding a list<bool> of ``count`` elements; skipping it
+        # must refuse the count, not step the cursor ``count`` times
+        import time
+
+        from opentelemetry_collector_spark.functions.thrift_binary import (
+            BOOL, LIST, Writer,
+        )
+
+        w = Writer()
+        w.list_header(1)
+        w.field(99, LIST)
+        w.list_header(count, BOOL)
+        assert len(w.out) == 13
+        t0 = time.perf_counter()
+        with pytest.raises(ValueError, match="list count"):
+            decode_span_list(bytes(w.out))
+        assert time.perf_counter() - t0 < 1.0
+
 
 class TestSparkPath:
     # slow lane: thrift wire roundtrips; span_wire_roundtrips driver row re-verifies
