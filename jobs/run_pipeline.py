@@ -45,7 +45,6 @@ def main() -> None:
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--partitions", type=int, default=0,
                     help="explicit conv_id hash partitions (0 = defaultParallelism)")
-    ap.add_argument("--parse-engine", choices=["arrow", "jvm"], default="arrow")
     ap.add_argument("--window", default="5 minutes")
     ap.add_argument("--master", default="",
                     help="override master for local runs (cluster: set by spark-submit)")
@@ -80,7 +79,7 @@ def main() -> None:
         transcripts,
         Warehouse(args.warehouse),
         args.run_id,
-        config=PipelineConfig(parse_engine=args.parse_engine, window=args.window),
+        config=PipelineConfig(window=args.window),
         input_fingerprint=input_fp,
     )
     wall = time.time() - t0

@@ -21,7 +21,12 @@ garbage.
 from __future__ import annotations
 
 import struct
+from contextlib import contextmanager
 from dataclasses import dataclass
+
+# nested array/map levels ``Unpacker`` descends before refusing the
+# payload, well inside Python's recursion limit
+MAX_DEPTH = 64
 
 
 @dataclass(frozen=True)
@@ -72,6 +77,7 @@ class Unpacker:
     def __init__(self, buf: bytes):
         self.buf = buf
         self.pos = 0
+        self._depth = 0
 
     def _need(self, n: int) -> None:
         if self.pos + n > len(self.buf):
@@ -173,21 +179,33 @@ class Unpacker:
         except UnicodeDecodeError as e:
             raise ValueError(f"invalid UTF-8 in msgpack str: {e}") from None
 
+    @contextmanager
+    def _nested(self):
+        if self._depth >= MAX_DEPTH:
+            raise ValueError(f"msgpack nesting deeper than {MAX_DEPTH}")
+        self._depth += 1
+        try:
+            yield
+        finally:
+            self._depth -= 1
+
     def _array(self, n: int) -> list:
-        return [self.unpack() for _ in range(n)]
+        with self._nested():
+            return [self.unpack() for _ in range(n)]
 
     def _map(self, n: int) -> dict:
         out = {}
-        for _ in range(n):
-            k = self.unpack()
-            # wire-legal but container-keyed maps (array/map/ext keys)
-            # have no Python-dict representation; keep the codec's
-            # single-exception contract (ValueError, not TypeError)
-            if isinstance(k, (list, dict, Ext)):
-                raise ValueError(
-                    f"unsupported msgpack map key type {type(k).__name__}"
-                )
-            out[k] = self.unpack()
+        with self._nested():
+            for _ in range(n):
+                k = self.unpack()
+                # wire-legal but container-keyed maps (array/map/ext keys)
+                # have no Python-dict representation; keep the codec's
+                # single-exception contract (ValueError, not TypeError)
+                if isinstance(k, (list, dict, Ext)):
+                    raise ValueError(
+                        f"unsupported msgpack map key type {type(k).__name__}"
+                    )
+                out[k] = self.unpack()
         return out
 
     def _ext(self, n: int) -> Ext:

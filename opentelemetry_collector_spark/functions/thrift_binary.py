@@ -8,16 +8,23 @@ from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 # TBinaryProtocol type codes
 STOP, BOOL, BYTE, DOUBLE = 0, 2, 3, 4
 I16, I32, I64, STRING, STRUCT, LIST = 6, 8, 10, 11, 12, 15
+
+# nested STRUCT/LIST levels ``skip`` descends before refusing the
+# payload: Go thrift's DEFAULT_RECURSION_DEPTH, well inside Python's
+# recursion limit
+MAX_DEPTH = 64
 
 
 class Reader:
     def __init__(self, buf: bytes):
         self.buf = buf
         self.pos = 0
+        self._depth = 0
 
     def _unpack(self, fmt: str, size: int):
         v = struct.unpack_from(fmt, self.buf, self.pos)[0]
@@ -78,18 +85,30 @@ class Reader:
         elif ftype == STRING:
             self.binary()
         elif ftype == STRUCT:
-            while True:
-                t = self.byte()
-                if t == STOP:
-                    break
-                self.i16()
-                self.skip(t)
+            with self._nested():
+                while True:
+                    t = self.byte()
+                    if t == STOP:
+                        break
+                    self.i16()
+                    self.skip(t)
         elif ftype == LIST:
-            et = self.byte()
-            for _ in range(self._list_count()):
-                self.skip(et)
+            with self._nested():
+                et = self.byte()
+                for _ in range(self._list_count()):
+                    self.skip(et)
         else:
             raise ValueError(f"unsupported thrift type {ftype}")
+
+    @contextmanager
+    def _nested(self):
+        if self._depth >= MAX_DEPTH:
+            raise ValueError(f"thrift nesting deeper than {MAX_DEPTH}")
+        self._depth += 1
+        try:
+            yield
+        finally:
+            self._depth -= 1
 
     def fields(self) -> Iterator[tuple[int, int]]:
         """(field_id, type) until STOP; caller must read or skip the

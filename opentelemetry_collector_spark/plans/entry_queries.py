@@ -128,9 +128,10 @@ WHERE regexp_extract(text, '\\[(\\w+)\\]', 1) IN ('warn', 'error')
 def q_route_fanout_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Include/exclude routing (filterlog semantics) fanning the
     transcripts to 3 sinks; per-sink sent counts — the obsreport
-    exporter counters (obsreport_exporter.go:29-44)."""
+    exporter counters (obsreport_exporter.go:29-44), all counted in one
+    aggregate by the commit's own ``route_counts``."""
     from ..operators.filters import AttributeCondition, MatchProperties, matcher
-    from .pipeline import RouteRule, parse_stage, route_stage
+    from .pipeline import RouteRule, parse_stage, route_counts
 
     t = _derive_transcripts(spark, sf_dir)
     parsed = parse_stage(t, TRANSCRIPT_PATTERN, engine="jvm").withColumn(
@@ -162,15 +163,8 @@ def q_route_fanout_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         RouteRule("archive"),
     ]
-    routed = route_stage(parsed, routes)
-    parts = [
-        df.agg(F.lit(sink).alias("sink"), F.count(F.lit(1)).alias("sent"))
-        for sink, df in routed.items()
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    sinks = [r.sink for r in routes]
+    return parsed.agg(*route_counts(parsed, routes)).unpivot([], sinks, "sink", "sent")
 
 
 def _oracle_route_fanout_counts() -> str:
@@ -871,36 +865,29 @@ def q_obsreport_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     obsreport_processor.go:29-38, obsreport_exporter.go:29-44) for the
     flagship pipeline: receiver accepted, parse-stage parsed/unparsed
     (the EXTRACT no-op path), severity enrich, and per-sink sent —
-    one (stage, name, n) row each, unioned in a single plan."""
+    all counted in one aggregate as the data passes, then one
+    (stage, name, n) row each."""
     from ..functions.severity import severity_number
-    from .pipeline import PipelineConfig, parse_stage, route_stage
+    from .pipeline import PipelineConfig, parse_stage, route_counts
 
     t = _derive_transcripts(spark, sf_dir)
     parsed = parse_stage(t, engine="jvm")
-
-    def one(stage: str, name: str, df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.lit(stage).alias("stage"),
-            F.lit(name).alias("name"),
-            F.count(F.lit(1)).alias("n"),
-        )
-
-    parts = [
-        one("receiver", "accepted", t),
-        one("processor", "parsed", parsed.filter(F.col("parsed"))),
-        one("processor", "unparsed", parsed.filter(~F.col("parsed"))),
-        one(
-            "processor",
-            "error_severity",
-            parsed.filter(severity_number(F.col("level")) >= 17),
-        ),
+    routes = PipelineConfig().routes
+    counts = [
+        ("receiver", "accepted", F.count(F.lit(1))),
+        ("processor", "parsed", F.count_if(F.col("parsed"))),
+        ("processor", "unparsed", F.count_if(~F.col("parsed"))),
+        ("processor", "error_severity",
+         F.count_if(severity_number(F.col("level")) >= 17)),
+    ] + [
+        ("exporter", f"sent_{r.sink}", n)
+        for r, n in zip(routes, route_counts(parsed, routes))
     ]
-    for sink, df in route_stage(parsed, PipelineConfig().routes).items():
-        parts.append(one("exporter", f"sent_{sink}", df))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    rows = F.array(*[
+        F.struct(F.lit(stage).alias("stage"), F.lit(name).alias("name"), n.alias("n"))
+        for stage, name, n in counts
+    ])
+    return parsed.agg(rows.alias("rows")).select(F.inline("rows"))
 
 
 def _oracle_obsreport_counts() -> str:

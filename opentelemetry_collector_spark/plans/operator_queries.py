@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .shared_sql import _TRANSCRIPTS_FROM_EVENTS, _derive_transcripts, _register
@@ -358,9 +358,10 @@ def q_config_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly like the SQL the oracle states: attributes (upsert+insert)
     → filter (regexp include + strict exclude) → two routed sinks with
     per-sink counts and an inserted-attribute count proving the
-    attributes stage ran before the filter."""
+    attributes stage ran before the filter, every sink counted in one
+    aggregate."""
     from .config import compile_spec
-    from .pipeline import parse_stage, route_stage
+    from .pipeline import parse_stage, route_counts
 
     t = _derive_transcripts(spark, sf_dir)
     parsed = parse_stage(t, engine="jvm")
@@ -401,24 +402,21 @@ def q_config_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     chain, routes = compile_spec(spec)
     filtered = chain(with_attrs)
-    parts = []
-    for sink, df in route_stage(filtered, routes).items():
-        parts.append(
-            df.agg(
-                F.lit(sink).alias("sink"),
-                F.count(F.lit(1)).alias("sent"),
-                F.sum(
-                    (F.element_at(F.col("attrs"), "chan") == "default").cast("long")
-                ).alias("n_chan_default"),
-                F.sum(
-                    (F.element_at(F.col("attrs"), "src") == "cfg").cast("long")
-                ).alias("n_src_cfg"),
-            )
+
+    def attr_is(key: str, value: str) -> Column:
+        return (F.element_at(F.col("attrs"), key) == value).cast("long")
+
+    def sink_row(r, sent: Column) -> Column:
+        keep = r.predicate(filtered)
+        return F.struct(
+            F.lit(r.sink).alias("sink"),
+            sent.alias("sent"),
+            F.sum(F.when(keep, attr_is("chan", "default"))).alias("n_chan_default"),
+            F.sum(F.when(keep, attr_is("src", "cfg"))).alias("n_src_cfg"),
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+
+    rows = F.array(*map(sink_row, routes, route_counts(filtered, routes)))
+    return filtered.agg(rows.alias("rows")).select(F.inline("rows"))
 
 
 def _oracle_config_pipeline() -> str:

@@ -159,6 +159,15 @@ def route_stage(df: DataFrame, routes: list[RouteRule]) -> dict[str, DataFrame]:
     return {r.sink: df.filter(r.predicate(df)) for r in routes}
 
 
+def route_counts(df: DataFrame, routes: list[RouteRule]) -> list[Column]:
+    """Each sink's sent count as an aggregate named after the sink
+    (obsreport_exporter.go:29-44): ``count_if`` of its route's
+    predicate, exactly the rows ``route_stage`` and
+    ``route_stage_tagged`` send it, a NULL predicate in neither. All
+    sinks count in one pass over ``df``."""
+    return [F.count_if(r.predicate(df)).alias(r.sink) for r in routes]
+
+
 def route_stage_tagged(df: DataFrame, routes: list[RouteRule]) -> DataFrame:
     """Fan-out as ONE operator: each row explodes into one copy per
     matching sink, tagged with a ``sink`` column. Same rows as
@@ -232,10 +241,10 @@ def aggregate_combined(
 @dataclass
 class PipelineConfig:
     """The YAML-config analog (configmodels.Config): declarative stage
-    settings compiled once into a DataFrame DAG by ``compile_routed``."""
+    settings compiled once into a DataFrame DAG by ``compile_routed``,
+    whose parse is always the Arrow RE2 one (the reference's dialect)."""
 
     pattern: str = TRANSCRIPT_PATTERN
-    parse_engine: str = "arrow"
     routes: list[RouteRule] = field(default_factory=default_routes)
     window: str = "5 minutes"
     redact_sensitive: bool = False
@@ -327,7 +336,7 @@ def materialize_concurrent(actions: dict, max_threads: int = 8) -> dict:
 
 
 def _enriched(spark, transcripts, config) -> DataFrame:
-    parsed = parse_stage(transcripts, config.pattern, engine=config.parse_engine)
+    parsed = parse_stage(transcripts, config.pattern)
     return enrich_stage(
         parsed,
         datagen.role_lookup_df(spark),
@@ -346,12 +355,10 @@ def compile_routed(
     that counts, on the enriched frame before the fan-out clones rows,
     the receiver's obsreport counters (obsreport_receiver.go:30-51) —
     ``accepted`` (every input row) and ``parse_refused`` (rows the parse
-    left unmatched) — and, under each sink's name, the rows the fan-out
-    sends that sink (obsreport_exporter.go:29-44): ``count_if`` of the
-    route's predicate, which counts exactly the rows for which the
-    fan-out's ``when`` emits the sink, a NULL predicate in neither. It
-    rides the action that consumes the frame, so the counters cost no
-    job, and one metrics node over the input rows counts them all."""
+    left unmatched) — and each sink's ``route_counts``, the rows the
+    fan-out sends it. It rides the action that consumes the frame, so
+    the counters cost no job, and one metrics node over the input rows
+    counts them all."""
     config = config or PipelineConfig()
     sinks = [r.sink for r in config.routes]
     if {"accepted", "parse_refused"} & set(sinks):
@@ -362,7 +369,7 @@ def compile_routed(
         received,
         F.count(F.lit(1)).alias("accepted"),
         F.count_if(~F.col("parsed")).alias("parse_refused"),
-        *[F.count_if(r.predicate(enriched)).alias(r.sink) for r in config.routes],
+        *route_counts(enriched, config.routes),
     )
     return route_stage_tagged(enriched, config.routes), received
 

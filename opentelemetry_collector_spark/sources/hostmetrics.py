@@ -77,15 +77,16 @@ text sections, with a fixed 2-cpu / sda / eth0 / one-mount topology
 (the parser itself is layout-generic — any number of cpu lines,
 devices, interfaces, or mounts).
 
-Scale: every section parse is whole-stage-codegen expression work;
-the only exchange in the whole source is the tiny
-(id, tcp-state)-keyed count for system.network.connections, which
-partial-aggregates map-side.  Nothing here shuffles snapshot text.
+Scale: each scraper is an expression over its snapshot row that
+builds an array of datapoint structs, and ``scrape_snapshots``
+inlines their concatenation in one generator, so the source is read
+once and nothing shuffles: even the connection counts are counted
+within each row.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -159,61 +160,25 @@ SECTION_COLS = (
     "nettcp", "vmstat", "statfs",
 )
 
-_DP_COLS = (
-    "name", "unit", "data_type", "monotonic", "temporality",
-    "labels", "int_value", "double_value",
-)
 
-
-def _lines(col: str) -> Column:
-    return F.explode(F.split(F.col(col), "\n")).alias("_line")
-
-
-def _fields() -> Column:
-    # whitespace-split with leading-blank drop (/proc pads columns)
-    return F.split(F.trim(F.col("_line")), r"\s+").alias("_f")
-
-
-def _fld(i: int) -> Column:
-    """1-based field of the whitespace-split line."""
-    return F.element_at(F.col("_f"), i)
-
-
-def _meta(
-    name: str, unit: str, dtype: str, mono: bool,
-) -> list[Column]:
-    temporality = "CUMULATIVE" if dtype.endswith("Sum") else "UNSPECIFIED"
-    return [
+def _dp(
+    name: str, unit: str, dtype: str, mono: bool, labels: Column, value: Column,
+) -> Column:
+    """One datapoint struct: Int* types carry ``int_value``, Double*
+    types ``double_value``."""
+    is_int = dtype.startswith("Int")
+    return F.struct(
         F.lit(name).alias("name"),
         F.lit(unit).alias("unit"),
         F.lit(dtype).alias("data_type"),
         F.lit(1 if mono else 0).cast("bigint").alias("monotonic"),
-        F.lit(temporality).alias("temporality"),
-    ]
-
-
-def _int_dp(value: Column) -> list[Column]:
-    return [
-        value.cast("bigint").alias("int_value"),
-        F.lit(None).cast("double").alias("double_value"),
-    ]
-
-
-def _double_dp(value: Column) -> list[Column]:
-    return [
-        F.lit(None).cast("bigint").alias("int_value"),
-        value.cast("double").alias("double_value"),
-    ]
-
-
-def _emit(df: DataFrame, ids: Sequence[str], rows: list[list[Column]]) -> DataFrame:
-    """Fan one parsed row out to its datapoints: rows is a list of
-    full dp column lists (name…double_value); pack them into one
-    array<struct> and explode once — one generate, no per-dp
-    rescans."""
-    arr = F.array(*[F.struct(*r) for r in rows])
-    out = df.select(*ids, F.explode(arr).alias("_dp"))
-    return out.select(*ids, *[F.col(f"_dp.{c}").alias(c) for c in _DP_COLS])
+        F.lit("CUMULATIVE" if dtype.endswith("Sum") else "UNSPECIFIED").alias(
+            "temporality"
+        ),
+        labels.alias("labels"),
+        (value if is_int else F.lit(None)).cast("bigint").alias("int_value"),
+        (F.lit(None) if is_int else value).cast("double").alias("double_value"),
+    )
 
 
 def _labels(*pairs: tuple[str, Column | str]) -> Column:
@@ -229,51 +194,71 @@ def _labels(*pairs: tuple[str, Column | str]) -> Column:
     return F.concat_ws(",", *parts)
 
 
+def _fields(line: Column) -> Column:
+    # whitespace-split with leading-blank drop (/proc pads columns)
+    return F.split(F.trim(line), r"\s+")
+
+
+def _lines(
+    section: str,
+    keep: Callable[[Column], Column],
+    parse: Callable[[Column], Column] = _fields,
+) -> Column:
+    """The kept lines of a multi-line section, each parsed once."""
+    return F.transform(F.filter(F.split(F.col(section), "\n"), keep), parse)
+
+
+def _per_line(lines: Column, dps: Callable[[Column], list[Column]]) -> Column:
+    """Every parsed line's datapoints in one array. A NULL section
+    gives an empty array, not NULL, so that it cannot null out the
+    other scrapers' datapoints in ``scrape_snapshots``'s concat."""
+    return F.coalesce(
+        F.flatten(F.transform(lines, lambda f: F.array(*dps(f)))), F.array()
+    )
+
+
+def _keyed(section: str, pattern: str) -> Column:
+    """The first group of ``pattern`` in a keyed section, as bigint. A
+    missing key is NULL: ``regexp_extract`` gives ``''`` there, which
+    an ANSI cast would refuse for the whole query."""
+    return F.nullif(F.regexp_extract(F.col(section), pattern, 1), F.lit("")).cast(
+        "bigint"
+    )
+
+
 # ---------------------------------------------------------------------------
 # /proc/stat → system.cpu.time + system.processes.*
 # ---------------------------------------------------------------------------
 
 
-def _cpu_time(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
+def _cpu_time() -> Column:
     """cpu_scraper.go:58-95 over every ``cpuN`` line (percpu=true —
     the aggregate ``cpu `` line is skipped, cpu_scraper.go:63)."""
-    lines = (
-        snaps.select(*ids, _lines("proc_stat"))
-        .filter(F.col("_line").rlike(r"^cpu[0-9]+\s"))
-        .select(*ids, _fields())
-    )
-    rows = []
-    for fld_idx, state in CPU_STATES:
-        rows.append(
-            _meta("system.cpu.time", "s", "DoubleSum", True)
-            + [_labels(("cpu", _fld(1)), ("state", state)).alias("labels")]
-            + _double_dp(_fld(1 + fld_idx).cast("double") / USER_HZ)
-        )
-    return _emit(lines, ids, rows)
+    lines = _lines("proc_stat", lambda line: line.rlike(r"^cpu[0-9]+\s"))
+    return _per_line(lines, lambda f: [
+        _dp("system.cpu.time", "s", "DoubleSum", True,
+            _labels(("cpu", F.element_at(f, 1)), ("state", state)),
+            F.element_at(f, 1 + fld_idx).cast("double") / USER_HZ)
+        for fld_idx, state in CPU_STATES
+    ])
 
 
-def _processes(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
+def _processes() -> Column:
     """processes_scraper.go:38-42 + processes_scraper_linux.go:36-49:
     count(running/blocked) is a point-in-time gauge-like sum, created
     is the monotonic fork counter."""
 
     def stat_val(key: str) -> Column:
-        return F.regexp_extract(
-            F.col("proc_stat"), rf"(?m)^{key} (\d+)", 1
-        ).cast("bigint")
+        return _keyed("proc_stat", rf"(?m)^{key} (\d+)")
 
-    rows = [
-        _meta("system.processes.count", "{processes}", "IntSum", False)
-        + [_labels(("status", "running")).alias("labels")]
-        + _int_dp(stat_val("procs_running")),
-        _meta("system.processes.count", "{processes}", "IntSum", False)
-        + [_labels(("status", "blocked")).alias("labels")]
-        + _int_dp(stat_val("procs_blocked")),
-        _meta("system.processes.created", "{processes}", "IntSum", True)
-        + [_labels().alias("labels")]
-        + _int_dp(stat_val("processes")),
-    ]
-    return _emit(snaps, ids, rows)
+    return F.array(
+        _dp("system.processes.count", "{processes}", "IntSum", False,
+            _labels(("status", "running")), stat_val("procs_running")),
+        _dp("system.processes.count", "{processes}", "IntSum", False,
+            _labels(("status", "blocked")), stat_val("procs_blocked")),
+        _dp("system.processes.created", "{processes}", "IntSum", True,
+            _labels(), stat_val("processes")),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -282,12 +267,10 @@ def _processes(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
 
 
 def _meminfo_val(key: str) -> Column:
-    return F.regexp_extract(
-        F.col("meminfo"), rf"(?m)^{key}:\s+(\d+) kB", 1
-    ).cast("bigint")
+    return _keyed("meminfo", rf"(?m)^{key}:\s+(\d+) kB")
 
 
-def _memory_usage(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
+def _memory_usage() -> Column:
     """memory_scraper_linux.go:29-34 with gopsutil v3.20.12
     VirtualMemory linux semantics (Cached includes SReclaimable;
     Used = Total - Free - Buffers - Cached)."""
@@ -303,30 +286,26 @@ def _memory_usage(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
         ("slab_reclaimable", _meminfo_val("SReclaimable") * 1024),
         ("slab_unreclaimable", _meminfo_val("SUnreclaim") * 1024),
     )
-    rows = [
-        _meta("system.memory.usage", "By", "IntSum", False)
-        + [_labels(("state", state)).alias("labels")]
-        + _int_dp(value)
+    return F.array(*[
+        _dp("system.memory.usage", "By", "IntSum", False,
+            _labels(("state", state)), value)
         for state, value in state_values
-    ]
-    return _emit(snaps, ids, rows)
+    ])
 
 
-def _paging_usage(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
+def _paging_usage() -> Column:
     """paging_scraper_others.go:96-101: swap states from the virtual
     memory snapshot (meminfo Swap* fields, bytes)."""
     total = _meminfo_val("SwapTotal") * 1024
     free = _meminfo_val("SwapFree") * 1024
     cached = _meminfo_val("SwapCached") * 1024
-    rows = [
-        _meta("system.paging.usage", "By", "IntSum", False)
-        + [_labels(("state", state)).alias("labels")]
-        + _int_dp(value)
+    return F.array(*[
+        _dp("system.paging.usage", "By", "IntSum", False,
+            _labels(("state", state)), value)
         for state, value in (
             ("used", total - free - cached), ("free", free), ("cached", cached),
         )
-    ]
-    return _emit(snaps, ids, rows)
+    ])
 
 
 # ---------------------------------------------------------------------------
@@ -334,18 +313,12 @@ def _paging_usage(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _load(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
-    rows = []
-    for idx, minutes in ((1, "1m"), (2, "5m"), (3, "15m")):
-        value = F.element_at(
-            F.split(F.trim(F.col("loadavg")), r"\s+"), idx
-        ).cast("double")
-        rows.append(
-            _meta(f"system.cpu.load_average.{minutes}", "1", "DoubleGauge", False)
-            + [_labels().alias("labels")]
-            + _double_dp(value)
-        )
-    return _emit(snaps, ids, rows)
+def _load() -> Column:
+    return F.array(*[
+        _dp(f"system.cpu.load_average.{minutes}", "1", "DoubleGauge", False,
+            _labels(), F.element_at(_fields(F.col("loadavg")), idx))
+        for idx, minutes in ((1, "1m"), (2, "5m"), (3, "15m"))
+    ])
 
 
 # ---------------------------------------------------------------------------
@@ -353,52 +326,42 @@ def _load(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _disk(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
+def _disk() -> Column:
     """disk_scraper.go over /proc/diskstats fields (gopsutil
     disk_linux IOCounters): f4..f14 = reads rmerged rsectors rms
     writes wmerged wsectors wms inflight ioms weightedms."""
-    lines = (
-        snaps.select(*ids, _lines("diskstats"))
-        .filter(F.trim(F.col("_line")) != "")
-        .select(*ids, _fields())
-    )
-    dev = _fld(3)
 
-    def dd(name, unit, mono, direction, value):
-        return (
-            _meta(name, unit, "IntSum", mono)
-            + [_labels(("device", dev), ("direction", direction)).alias("labels")]
-            + _int_dp(value)
-        )
+    def dps(f: Column) -> list[Column]:
+        dev = F.element_at(f, 3)
 
-    rows = [
-        dd("system.disk.io", "By", True, "read",
-           _fld(6).cast("bigint") * SECTOR_BYTES),
-        dd("system.disk.io", "By", True, "write",
-           _fld(10).cast("bigint") * SECTOR_BYTES),
-        dd("system.disk.operations", "{operations}", True, "read",
-           _fld(4).cast("bigint")),
-        dd("system.disk.operations", "{operations}", True, "write",
-           _fld(8).cast("bigint")),
-        dd("system.disk.merged", "{operations}", True, "read",
-           _fld(5).cast("bigint")),
-        dd("system.disk.merged", "{operations}", True, "write",
-           _fld(9).cast("bigint")),
-        # io_time / operation_time are DoubleSums in seconds
-        _meta("system.disk.io_time", "s", "DoubleSum", True)
-        + [_labels(("device", dev)).alias("labels")]
-        + _double_dp(_fld(13).cast("double") / 1e3),
-        _meta("system.disk.operation_time", "s", "DoubleSum", True)
-        + [_labels(("device", dev), ("direction", "read")).alias("labels")]
-        + _double_dp(_fld(7).cast("double") / 1e3),
-        _meta("system.disk.operation_time", "s", "DoubleSum", True)
-        + [_labels(("device", dev), ("direction", "write")).alias("labels")]
-        + _double_dp(_fld(11).cast("double") / 1e3),
-        _meta("system.disk.pending_operations", "{operations}", "IntSum", False)
-        + [_labels(("device", dev)).alias("labels")]
-        + _int_dp(_fld(12).cast("bigint")),
-    ]
-    return _emit(lines, ids, rows)
+        def fld(i: int, kind: str) -> Column:
+            return F.element_at(f, i).cast(kind)
+
+        def dd(name, unit, direction, value):
+            return _dp(name, unit, "IntSum", True,
+                       _labels(("device", dev), ("direction", direction)), value)
+
+        return [
+            dd("system.disk.io", "By", "read", fld(6, "bigint") * SECTOR_BYTES),
+            dd("system.disk.io", "By", "write", fld(10, "bigint") * SECTOR_BYTES),
+            dd("system.disk.operations", "{operations}", "read", fld(4, "bigint")),
+            dd("system.disk.operations", "{operations}", "write", fld(8, "bigint")),
+            dd("system.disk.merged", "{operations}", "read", fld(5, "bigint")),
+            dd("system.disk.merged", "{operations}", "write", fld(9, "bigint")),
+            # io_time / operation_time are DoubleSums in seconds
+            _dp("system.disk.io_time", "s", "DoubleSum", True,
+                _labels(("device", dev)), fld(13, "double") / 1e3),
+            _dp("system.disk.operation_time", "s", "DoubleSum", True,
+                _labels(("device", dev), ("direction", "read")),
+                fld(7, "double") / 1e3),
+            _dp("system.disk.operation_time", "s", "DoubleSum", True,
+                _labels(("device", dev), ("direction", "write")),
+                fld(11, "double") / 1e3),
+            _dp("system.disk.pending_operations", "{operations}", "IntSum", False,
+                _labels(("device", dev)), fld(12, "bigint")),
+        ]
+
+    return _per_line(_lines("diskstats", lambda line: F.trim(line) != ""), dps)
 
 
 # ---------------------------------------------------------------------------
@@ -406,20 +369,13 @@ def _disk(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _network(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
-    lines = (
-        snaps.select(*ids, _lines("netdev"))
-        .filter(F.col("_line").rlike(r"^\s*[A-Za-z0-9]+:"))
-        .select(
-            *ids,
-            F.split(
-                F.trim(F.regexp_replace(F.col("_line"), r"^\s*[A-Za-z0-9]+:", "")),
-                r"\s+",
-            ).alias("_f"),
-            F.regexp_extract(F.col("_line"), r"^\s*([A-Za-z0-9]+):", 1).alias("_dev"),
+def _network() -> Column:
+    def parse(line: Column) -> Column:
+        return F.struct(
+            F.regexp_extract(line, r"^\s*([A-Za-z0-9]+):", 1).alias("dev"),
+            _fields(F.regexp_replace(line, r"^\s*[A-Za-z0-9]+:", "")).alias("f"),
         )
-    )
-    dev = F.col("_dev")
+
     # rx: bytes packets errs drop = f1..f4; tx: f9..f12
     spec = (
         ("system.network.packets", "{packets}", "receive", 2),
@@ -431,37 +387,36 @@ def _network(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
         ("system.network.io", "By", "receive", 1),
         ("system.network.io", "By", "transmit", 9),
     )
-    rows = [
-        _meta(name, unit, "IntSum", True)
-        + [_labels(("device", dev), ("direction", direction)).alias("labels")]
-        + _int_dp(_fld(idx).cast("bigint"))
+    lines = _lines("netdev", lambda line: line.rlike(r"^\s*[A-Za-z0-9]+:"), parse)
+    return _per_line(lines, lambda p: [
+        _dp(name, unit, "IntSum", True,
+            _labels(("device", p["dev"]), ("direction", direction)),
+            F.element_at(p["f"], idx).cast("bigint"))
         for name, unit, direction, idx in spec
-    ]
-    return _emit(lines, ids, rows)
+    ])
 
 
-def _connections(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
+def _connections() -> Column:
     """network_scraper.go:170-210: count tcp connections by state.
     The hex ``st`` column of /proc/net/tcp maps to gopsutil's state
-    names; the count is the one (tiny, map-side-combining) exchange
-    in this source."""
+    names; a code outside that map counts under a NULL state (label
+    ``protocol=tcp`` alone). Counted within each snapshot row, so no
+    exchange."""
     st_map = F.create_map(
         *[F.lit(x) for kv in TCP_STATES.items() for x in kv]
     )
-    lines = (
-        snaps.select(*ids, _lines("nettcp"))
-        .filter(F.col("_line").rlike(r"^\s*\d+:"))
-        .select(*ids, _fields())
-        .select(*ids, st_map[F.upper(_fld(4))].alias("_state"))
+    states = _lines(
+        "nettcp",
+        lambda line: line.rlike(r"^\s*\d+:"),
+        lambda line: st_map[F.upper(F.element_at(_fields(line), 4))],
     )
-    counted = lines.groupBy(*ids, "_state").agg(
-        F.count(F.lit(1)).alias("_n")
-    )
-    return counted.select(
-        *ids,
-        *_meta("system.network.connections", "{connections}", "IntSum", False),
-        _labels(("protocol", "tcp"), ("state", F.col("_state"))).alias("labels"),
-        *_int_dp(F.col("_n")),
+    return F.coalesce(
+        F.transform(F.array_distinct(states), lambda s: _dp(
+            "system.network.connections", "{connections}", "IntSum", False,
+            _labels(("protocol", "tcp"), ("state", s)),
+            F.size(F.filter(states, lambda x: x.eqNullSafe(s))),
+        )),
+        F.array(),
     )
 
 
@@ -470,31 +425,29 @@ def _connections(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _paging_ops(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
+def _paging_ops() -> Column:
     def vm(key: str) -> Column:
-        return F.regexp_extract(
-            F.col("vmstat"), rf"(?m)^{key} (\d+)", 1
-        ).cast("bigint")
+        return _keyed("vmstat", rf"(?m)^{key} (\d+)")
 
-    rows = [
-        _meta("system.paging.operations", "{operations}", "IntSum", True)
-        + [_labels(("direction", direction), ("type", typ)).alias("labels")]
-        + _int_dp(vm(key) * PAGE_BYTES)
+    operations = [
+        _dp("system.paging.operations", "{operations}", "IntSum", True,
+            _labels(("direction", direction), ("type", typ)), vm(key) * PAGE_BYTES)
         for typ, direction, key in (
             ("major", "page_in", "pswpin"),
             ("major", "page_out", "pswpout"),
             ("minor", "page_in", "pgpgin"),
             ("minor", "page_out", "pgpgout"),
         )
-    ] + [
-        _meta("system.paging.faults", "{faults}", "IntSum", True)
-        + [_labels(("type", "major")).alias("labels")]
-        + _int_dp(vm("pgmajfault")),
-        _meta("system.paging.faults", "{faults}", "IntSum", True)
-        + [_labels(("type", "minor")).alias("labels")]
-        + _int_dp(vm("pgfault") - vm("pgmajfault")),
     ]
-    return _emit(snaps, ids, rows)
+    faults = [
+        _dp("system.paging.faults", "{faults}", "IntSum", True,
+            _labels(("type", typ)), value)
+        for typ, value in (
+            ("major", vm("pgmajfault")),
+            ("minor", vm("pgfault") - vm("pgmajfault")),
+        )
+    ]
+    return F.array(*operations, *faults)
 
 
 # ---------------------------------------------------------------------------
@@ -502,7 +455,7 @@ def _paging_ops(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _filesystem(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
+def _filesystem() -> Column:
     """Line format (headerless, whitespace-separated):
     device mountpoint fstype opts total_b free_b avail_b inodes_total
     inodes_free — free_b is the kernel free (bfree), avail_b the
@@ -510,44 +463,40 @@ def _filesystem(snaps: DataFrame, ids: Sequence[str]) -> DataFrame:
     Used = total - free_b, Free = avail_b, so the reference's
     ``reserved`` state (filesystem_scraper_unix.go:28) is the root
     reserve free_b - avail_b."""
-    lines = (
-        snaps.select(*ids, _lines("statfs"))
-        .filter(F.trim(F.col("_line")) != "")
-        .select(*ids, _fields())
-    )
-    # getMountMode (filesystem_scraper.go:117-133)
-    opts = F.split(_fld(4), ",")
-    mode = (
-        F.when(F.array_contains(opts, "rw"), F.lit("rw"))
-        .when(F.array_contains(opts, "ro"), F.lit("ro"))
-        .otherwise(F.lit("unknown"))
-    )
-    total, free_k, avail = (
-        _fld(5).cast("bigint"), _fld(6).cast("bigint"), _fld(7).cast("bigint"),
-    )
-    itotal, ifree = _fld(8).cast("bigint"), _fld(9).cast("bigint")
 
-    def fs_labels(state: str) -> Column:
-        return _labels(
-            ("device", _fld(1)), ("mode", mode), ("mountpoint", _fld(2)),
-            ("state", state), ("type", _fld(3)),
+    def dps(f: Column) -> list[Column]:
+        # getMountMode (filesystem_scraper.go:117-133)
+        opts = F.split(F.element_at(f, 4), ",")
+        mode = (
+            F.when(F.array_contains(opts, "rw"), F.lit("rw"))
+            .when(F.array_contains(opts, "ro"), F.lit("ro"))
+            .otherwise(F.lit("unknown"))
+        )
+        total, free_k, avail, itotal, ifree = (
+            F.element_at(f, i).cast("bigint") for i in (5, 6, 7, 8, 9)
         )
 
-    rows = [
-        _meta("system.filesystem.usage", "By", "IntSum", False)
-        + [fs_labels(state).alias("labels")]
-        + _int_dp(value)
-        for state, value in (
-            ("used", total - free_k), ("free", avail),
-            ("reserved", free_k - avail),
-        )
-    ] + [
-        _meta("system.filesystem.inodes.usage", "{inodes}", "IntSum", False)
-        + [fs_labels(state).alias("labels")]
-        + _int_dp(value)
-        for state, value in (("used", itotal - ifree), ("free", ifree))
-    ]
-    return _emit(lines, ids, rows)
+        def fs_labels(state: str) -> Column:
+            return _labels(
+                ("device", F.element_at(f, 1)), ("mode", mode),
+                ("mountpoint", F.element_at(f, 2)), ("state", state),
+                ("type", F.element_at(f, 3)),
+            )
+
+        return [
+            _dp("system.filesystem.usage", "By", "IntSum", False,
+                fs_labels(state), value)
+            for state, value in (
+                ("used", total - free_k), ("free", avail),
+                ("reserved", free_k - avail),
+            )
+        ] + [
+            _dp("system.filesystem.inodes.usage", "{inodes}", "IntSum", False,
+                fs_labels(state), value)
+            for state, value in (("used", itotal - ifree), ("free", ifree))
+        ]
+
+    return _per_line(_lines("statfs", lambda line: F.trim(line) != ""), dps)
 
 
 # ---------------------------------------------------------------------------
@@ -573,23 +522,19 @@ def scrape_snapshots(
 
     Mirrors the receiver's per-scraper enablement: a missing section
     column simply doesn't run that scraper (hostmetricsreceiver
-    config.go scrapers map).  Callers fanning many scrapers over a
-    non-trivial source should persist ``snaps`` first (one pass of
-    text rendering, N cheap parse branches).
+    config.go scrapers map). Each scraper builds its datapoints as an
+    array column of the snapshot row, and one ``inline`` over their
+    concatenation emits them, so the source is read once. Connection
+    counts are per snapshot row: two rows with equal ids count apart.
     """
-    ids = list(id_cols)
     present = [c for c in SECTION_COLS if c in snaps.columns]
     if not present:
         raise ValueError(
             f"no snapshot sections among columns {snaps.columns}; "
             f"expected one of {SECTION_COLS}"
         )
-    out: DataFrame | None = None
-    for section in present:
-        for scraper in _SECTION_SCRAPERS[section]:
-            part = scraper(snaps, ids)
-            out = part if out is None else out.unionByName(part)
-    return out
+    arrays = [scraper() for s in present for scraper in _SECTION_SCRAPERS[s]]
+    return snaps.select(*id_cols, F.inline(F.concat(*arrays)))
 
 
 def render_snapshots(

@@ -129,6 +129,18 @@ class TestCodecStrictness:
         with pytest.raises(ValueError, match="invalid UTF-8"):
             Unpacker(bytes([0xA1, 0x92])).unpack()
 
+    def test_deep_nesting_refused_not_recursed(self):
+        # 3,001 bytes of nested one-element arrays: refused at the depth
+        # limit with ValueError, not RecursionError; 64 levels still decode
+        with pytest.raises(ValueError, match="nesting deeper than 64"):
+            unpackb(b"\x91" * 3000 + b"\x00")
+        v = unpackb(b"\x91" * 64 + b"\x00")
+        for _ in range(64):
+            (v,) = v
+        assert v == 0
+        with pytest.raises(ValueError, match="nesting deeper than 64"):
+            unpackb(b"\x81\x00" * 65 + b"\x00")
+
     def test_raw_bin_or_str_keeps_bytes(self):
         from opentelemetry_collector_spark.functions.msgpack_binary import (
             Unpacker,

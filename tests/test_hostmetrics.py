@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.sources.hostmetrics import (
     COUNTER_COLS,
+    CPU_STATES,
     render_snapshots,
     scrape_snapshots,
 )
@@ -200,9 +201,74 @@ def test_section_enablement(spark):
 
 def test_no_python_in_row_path(spark):
     """Everything is Catalyst expression work: the scrape plan must
-    contain no Python/Arrow eval nodes, and its only exchange is the
-    tiny connections count."""
+    contain no Python/Arrow eval nodes, no exchange (connections are
+    counted within each snapshot row) and one generator for every
+    scraper's datapoints."""
     snaps = render_snapshots(_counters(spark, {"tcp_established": 1}))
     plan = scrape_snapshots(snaps)._jdf.queryExecution().executedPlan().toString()
     assert "PythonUDF" not in plan and "ArrowEval" not in plan
-    assert plan.count("Exchange") <= 2  # connections groupBy (partial+final)
+    assert "Exchange" not in plan, plan
+    assert plan.count("Generate") == 1, plan
+
+
+def _tcp_line(st: str) -> str:
+    return (f"   0: 0100007F:0016 00000000:0000 {st} "
+            "00000000:00000000 00:00000000 00000000")
+
+
+def test_null_section_keeps_other_datapoints(spark):
+    """A NULL section emits none of its scraper's datapoints and keeps
+    every other scraper's datapoints of the row. An ``st`` code outside
+    the state map counts under no state label; a lowercase code maps."""
+    nettcp = "\n".join(
+        ["  sl  local_address rem_address   st tx_queue rx_queue"]
+        + [_tcp_line(st) for st in ("01", "0a", "0C", "0C")]
+    )
+    snaps = spark.createDataFrame(
+        [("h0", 0, None, nettcp),
+         ("h1", 1, "processes 3\nprocs_running 1\nprocs_blocked 0", None)],
+        "host_id string, ts bigint, proc_stat string, nettcp string",
+    )
+    got = sorted(
+        (r["host_id"], r["name"], r["labels"], r["int_value"])
+        for r in scrape_snapshots(snaps).collect()
+    )
+    conns, procs = "system.network.connections", "system.processes.count"
+    assert got == [
+        ("h0", conns, "protocol=tcp", 2),
+        ("h0", conns, "protocol=tcp,state=ESTABLISHED", 1),
+        ("h0", conns, "protocol=tcp,state=LISTEN", 1),
+        ("h0", procs, "status=blocked", None),
+        ("h0", procs, "status=running", None),
+        ("h0", "system.processes.created", "", None),
+        ("h1", procs, "status=blocked", 0),
+        ("h1", procs, "status=running", 1),
+        ("h1", "system.processes.created", "", 3),
+    ]
+
+
+def test_missing_key_is_null_not_a_failed_query(spark):
+    """A keyed section without some of its keys: each missing key's
+    datapoint is NULL (regexp_extract's ``''`` would fail the ANSI cast
+    of the whole query); present keys keep their values."""
+    snaps = spark.createDataFrame(
+        [("h0", 0, "cpu0 1 2 3 4 5 6 7 8\nprocesses 3",
+          "MemTotal:  100 kB\nSwapFree:  4 kB", "pswpin 2")],
+        "host_id string, ts bigint, proc_stat string, meminfo string,"
+        " vmstat string",
+    )
+    m = _dp_map(scrape_snapshots(snaps))
+    values = {
+        k: r["int_value"] if r["data_type"].startswith("Int") else r["double_value"]
+        for k, r in m.items()
+    }
+    cpu = {("system.cpu.time", f"cpu=cpu0,state={state}"): i / 100
+           for i, state in CPU_STATES}
+    assert {k: v for k, v in values.items() if v is not None} == {
+        **cpu,
+        ("system.processes.created", ""): 3,
+        ("system.paging.usage", "state=free"): 4 * 1024,
+        ("system.paging.operations", "direction=page_in,type=major"): 2 * 4096,
+    }
+    # 8 cpu + 3 processes + 6 memory + 3 paging usage + 6 paging ops
+    assert len(values) == 26

@@ -40,7 +40,7 @@ def result(spark):
     from opentelemetry_collector_spark.datagen import make_transcripts_df
 
     df = make_transcripts_df(spark, n_convs=30, seed=42)
-    res = run_pipeline(spark, df, PipelineConfig(parse_engine="arrow"))
+    res = run_pipeline(spark, df, PipelineConfig())
     yield res
     res["enriched"].unpersist()
 
@@ -115,7 +115,7 @@ def test_metrics_conservation(spark, oracle_pdf, tmp_path):
 
     wh = Warehouse(str(tmp_path / "wh"))
     df = make_transcripts_df(spark, n_convs=30, seed=42)
-    results = run_and_write(spark, df, wh, "run1", PipelineConfig(parse_engine="arrow"))
+    results = run_and_write(spark, df, wh, "run1", PipelineConfig())
     m = wh.committed(results["archive"].snapshot_id)
     sent = {sink: e["observed_sent"] for sink, e in m["sinks"].items()}
     assert m["counters"]["accepted"] == len(oracle_pdf)
@@ -148,7 +148,7 @@ def test_disk_only_storage_level_equivalent(spark):
     from opentelemetry_collector_spark.datagen import make_transcripts_df
 
     df = make_transcripts_df(spark, n_convs=30, seed=43)
-    base = run_pipeline(spark, df, PipelineConfig(parse_engine="arrow"))
+    base = run_pipeline(spark, df, PipelineConfig())
     expected = {s: r.count() for s, r in base["routed"].items()}
     archive_pdf = (
         base["routed"]["archive"].select("conv_id", "turn_idx", "text").toPandas()
@@ -156,7 +156,7 @@ def test_disk_only_storage_level_equivalent(spark):
     base["enriched"].unpersist()
 
     res = run_pipeline(
-        spark, df, PipelineConfig(parse_engine="arrow", storage_level="DISK_ONLY")
+        spark, df, PipelineConfig(storage_level="DISK_ONLY")
     )
     assert res["enriched"].storageLevel == StorageLevel.DISK_ONLY
     for sink, routed in res["routed"].items():

@@ -421,3 +421,23 @@ class TestWireCodecPlans:
             plan = plan_of(codecs[name](parquet_spans))
             assert plan.count("FileScan parquet") == 1, f"{name}\n{plan}"
             assert plan.count("MapInPandas") == 2, f"{name}\n{plan}"
+
+
+class TestSingleScanPlans:
+    """The hostmetrics scrape and the per-sink count queries read their
+    source once: every scraper's datapoints explode from one array, and
+    every count is one aggregate, where each used to be a union with
+    one branch (and one scan) per scraper or per sink."""
+
+    @pytest.mark.parametrize(
+        "name",
+        ["hostmetrics_scrape", "route_fanout_counts", "obsreport_counts",
+         "config_pipeline"],
+    )
+    def test_source_scanned_once(self, spark, name):
+        from opentelemetry_collector_spark.plans.entry_queries import QUERIES
+
+        df = QUERIES[name](spark, "/root/testdata/sf0.001")
+        plan = plan_of(df)
+        assert plan.count("FileScan parquet") == 1, plan
+        assert "Union" not in optimized_of(df), optimized_of(df)

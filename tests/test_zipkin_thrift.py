@@ -105,6 +105,22 @@ class TestCodec:
             decode_span_list(bytes(w.out))
         assert time.perf_counter() - t0 < 1.0
 
+    def test_deep_nesting_refused_not_recursed(self):
+        # 6,005 bytes: list<struct>[1] whose span opens 2,000 nested
+        # unknown struct fields; skipping them must stop at the depth
+        # limit with ValueError, not raise RecursionError
+        from opentelemetry_collector_spark.functions.thrift_binary import (
+            STRUCT, Writer,
+        )
+
+        w = Writer()
+        w.list_header(1)
+        for _ in range(2000):
+            w.field(99, STRUCT)
+        assert len(w.out) == 6005
+        with pytest.raises(ValueError, match="nesting deeper than 64"):
+            decode_span_list(bytes(w.out))
+
 
 class TestSparkPath:
     # slow lane: thrift wire roundtrips; span_wire_roundtrips driver row re-verifies

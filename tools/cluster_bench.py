@@ -125,8 +125,7 @@ def one_pass():
     # the two cluster sizes at equal bus headroom. Both measurements
     # are reported in BENCH/BASELINE.md.
     res = run_pipeline(spark, transcripts,
-                       PipelineConfig(parse_engine="arrow",
-                                      storage_level="DISK_ONLY"))
+                       PipelineConfig(storage_level="DISK_ONLY"))
     for sink, df in res["routed"].items():
         df.write.format("noop").mode("overwrite").save()
     for sink, agg_df in res["aggregates_combined"].items():
