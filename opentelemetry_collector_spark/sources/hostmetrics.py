@@ -199,6 +199,15 @@ def _fields(line: Column) -> Column:
     return F.split(F.trim(line), r"\s+")
 
 
+def _field(fields: Column, idx: int, kind: str | None = None) -> Column:
+    """Field ``idx`` (1-based) of a split line, cast to ``kind`` if
+    given. A truncated line or a non-numeric field gives NULL: an ANSI
+    ``element_at`` past the end or a plain cast of garbage would fail
+    the whole scrape query."""
+    value = F.try_element_at(fields, F.lit(idx))
+    return value if kind is None else value.try_cast(kind)
+
+
 def _lines(
     section: str,
     keep: Callable[[Column], Column],
@@ -219,11 +228,10 @@ def _per_line(lines: Column, dps: Callable[[Column], list[Column]]) -> Column:
 
 def _keyed(section: str, pattern: str) -> Column:
     """The first group of ``pattern`` in a keyed section, as bigint. A
-    missing key is NULL: ``regexp_extract`` gives ``''`` there, which
-    an ANSI cast would refuse for the whole query."""
-    return F.nullif(F.regexp_extract(F.col(section), pattern, 1), F.lit("")).cast(
-        "bigint"
-    )
+    missing key or a value past the bigint range is NULL: an ANSI cast
+    of ``regexp_extract``'s ``''`` or of an overflowing digit run would
+    fail the whole query."""
+    return F.regexp_extract(F.col(section), pattern, 1).try_cast("bigint")
 
 
 # ---------------------------------------------------------------------------
@@ -237,8 +245,8 @@ def _cpu_time() -> Column:
     lines = _lines("proc_stat", lambda line: line.rlike(r"^cpu[0-9]+\s"))
     return _per_line(lines, lambda f: [
         _dp("system.cpu.time", "s", "DoubleSum", True,
-            _labels(("cpu", F.element_at(f, 1)), ("state", state)),
-            F.element_at(f, 1 + fld_idx).cast("double") / USER_HZ)
+            _labels(("cpu", _field(f, 1)), ("state", state)),
+            _field(f, 1 + fld_idx, "double") / USER_HZ)
         for fld_idx, state in CPU_STATES
     ])
 
@@ -316,7 +324,7 @@ def _paging_usage() -> Column:
 def _load() -> Column:
     return F.array(*[
         _dp(f"system.cpu.load_average.{minutes}", "1", "DoubleGauge", False,
-            _labels(), F.element_at(_fields(F.col("loadavg")), idx))
+            _labels(), _field(_fields(F.col("loadavg")), idx, "double"))
         for idx, minutes in ((1, "1m"), (2, "5m"), (3, "15m"))
     ])
 
@@ -332,33 +340,30 @@ def _disk() -> Column:
     writes wmerged wsectors wms inflight ioms weightedms."""
 
     def dps(f: Column) -> list[Column]:
-        dev = F.element_at(f, 3)
-
-        def fld(i: int, kind: str) -> Column:
-            return F.element_at(f, i).cast(kind)
+        dev = _field(f, 3)
 
         def dd(name, unit, direction, value):
             return _dp(name, unit, "IntSum", True,
                        _labels(("device", dev), ("direction", direction)), value)
 
         return [
-            dd("system.disk.io", "By", "read", fld(6, "bigint") * SECTOR_BYTES),
-            dd("system.disk.io", "By", "write", fld(10, "bigint") * SECTOR_BYTES),
-            dd("system.disk.operations", "{operations}", "read", fld(4, "bigint")),
-            dd("system.disk.operations", "{operations}", "write", fld(8, "bigint")),
-            dd("system.disk.merged", "{operations}", "read", fld(5, "bigint")),
-            dd("system.disk.merged", "{operations}", "write", fld(9, "bigint")),
+            dd("system.disk.io", "By", "read", _field(f, 6, "bigint") * SECTOR_BYTES),
+            dd("system.disk.io", "By", "write", _field(f, 10, "bigint") * SECTOR_BYTES),
+            dd("system.disk.operations", "{operations}", "read", _field(f, 4, "bigint")),
+            dd("system.disk.operations", "{operations}", "write", _field(f, 8, "bigint")),
+            dd("system.disk.merged", "{operations}", "read", _field(f, 5, "bigint")),
+            dd("system.disk.merged", "{operations}", "write", _field(f, 9, "bigint")),
             # io_time / operation_time are DoubleSums in seconds
             _dp("system.disk.io_time", "s", "DoubleSum", True,
-                _labels(("device", dev)), fld(13, "double") / 1e3),
+                _labels(("device", dev)), _field(f, 13, "double") / 1e3),
             _dp("system.disk.operation_time", "s", "DoubleSum", True,
                 _labels(("device", dev), ("direction", "read")),
-                fld(7, "double") / 1e3),
+                _field(f, 7, "double") / 1e3),
             _dp("system.disk.operation_time", "s", "DoubleSum", True,
                 _labels(("device", dev), ("direction", "write")),
-                fld(11, "double") / 1e3),
+                _field(f, 11, "double") / 1e3),
             _dp("system.disk.pending_operations", "{operations}", "IntSum", False,
-                _labels(("device", dev)), fld(12, "bigint")),
+                _labels(("device", dev)), _field(f, 12, "bigint")),
         ]
 
     return _per_line(_lines("diskstats", lambda line: F.trim(line) != ""), dps)
@@ -391,7 +396,7 @@ def _network() -> Column:
     return _per_line(lines, lambda p: [
         _dp(name, unit, "IntSum", True,
             _labels(("device", p["dev"]), ("direction", direction)),
-            F.element_at(p["f"], idx).cast("bigint"))
+            _field(p["f"], idx, "bigint"))
         for name, unit, direction, idx in spec
     ])
 
@@ -408,15 +413,21 @@ def _connections() -> Column:
     states = _lines(
         "nettcp",
         lambda line: line.rlike(r"^\s*\d+:"),
-        lambda line: st_map[F.upper(F.element_at(_fields(line), 4))],
+        lambda line: st_map[F.upper(_field(_fields(line), 4))],
     )
-    return F.coalesce(
-        F.transform(F.array_distinct(states), lambda s: _dp(
+
+    def count_states(st: Column) -> Column:
+        return F.transform(F.array_distinct(st), lambda s: _dp(
             "system.network.connections", "{connections}", "IntSum", False,
             _labels(("protocol", "tcp"), ("state", s)),
-            F.size(F.filter(states, lambda x: x.eqNullSafe(s))),
-        )),
-        F.array(),
+            F.size(F.filter(st, lambda x: x.eqNullSafe(s))),
+        ))
+
+    # let-bound, as trainingdata.text.let_col binds: Spark does not
+    # share subexpressions inside lambdas, so an outer reference in the
+    # counting lambda would re-derive `states` once per distinct state
+    return F.coalesce(
+        F.get(F.transform(F.array(states), count_states), 0), F.array()
     )
 
 
@@ -466,21 +477,21 @@ def _filesystem() -> Column:
 
     def dps(f: Column) -> list[Column]:
         # getMountMode (filesystem_scraper.go:117-133)
-        opts = F.split(F.element_at(f, 4), ",")
+        opts = F.split(_field(f, 4), ",")
         mode = (
             F.when(F.array_contains(opts, "rw"), F.lit("rw"))
             .when(F.array_contains(opts, "ro"), F.lit("ro"))
             .otherwise(F.lit("unknown"))
         )
         total, free_k, avail, itotal, ifree = (
-            F.element_at(f, i).cast("bigint") for i in (5, 6, 7, 8, 9)
+            _field(f, i, "bigint") for i in (5, 6, 7, 8, 9)
         )
 
         def fs_labels(state: str) -> Column:
             return _labels(
-                ("device", F.element_at(f, 1)), ("mode", mode),
-                ("mountpoint", F.element_at(f, 2)), ("state", state),
-                ("type", F.element_at(f, 3)),
+                ("device", _field(f, 1)), ("mode", mode),
+                ("mountpoint", _field(f, 2)), ("state", state),
+                ("type", _field(f, 3)),
             )
 
         return [

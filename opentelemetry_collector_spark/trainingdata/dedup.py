@@ -134,33 +134,6 @@ def exact_dedup_clusters(df: DataFrame, text_col: str = "text", id_col: str = "d
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-# signature-table cache (see minhash_lsh_pairs cache_signatures):
-# keyed by (input plan, knobs) so two concurrent pipelines in one
-# driver never unpersist each other's signatures; bounded FIFO so
-# repeated invocations don't accumulate executor storage. One shared
-# implementation (functions.keyed_cache) instantiated per subsystem —
-# capacity sized for up to three entries (bands + exploded + cand-sh)
-# per input.
-from ..functions.keyed_cache import KeyedFrameCache, plan_key as _plan_key
-
-_SIG_CACHE = KeyedFrameCache(max_entries=12)
-
-
-def clear_signature_caches() -> None:
-    """Unpersist and drop every cached signature / capped-band frame.
-    For measurement harnesses: a retried benchmark attempt must redo
-    the same work as the first, not read the first attempt's persisted
-    frames (bench.py calls this between attempts). Blocking eviction:
-    the caller is about to start a timed window, and an async eviction
-    would run the previous attempt's block cleanup inside it."""
-    _SIG_CACHE.clear()
-
-
-def _keyed_persist(key: tuple, frame: DataFrame) -> DataFrame:
-    """Persist ``frame`` under ``key`` in the bounded FIFO pool (or
-    return the already-persisted frame for the same key)."""
-    return _SIG_CACHE.get_or_persist(key, frame)
-
 def shingles_col(col: Column, k: int = MINHASH_K) -> Column:
     """Distinct k-token shingles; documents shorter than k tokens fall
     back to one whole-text shingle so they still get a signature.
@@ -240,7 +213,6 @@ def _signature_frame(
     text_col: str,
     id_col: str,
     hash_fn,
-    cache_signatures: bool,
 ) -> DataFrame:
     """(id, sh, bands) signature table — the ONE staging path shared by
     batch ``minhash_lsh_pairs`` and the incremental ``minhash_index``:
@@ -251,13 +223,10 @@ def _signature_frame(
     The shingle array is staged as a real column so the signature
     references it instead of re-deriving tokens/shingles per use
     (multi-referenced non-cheap expressions are not re-inlined by
-    CollapseProject). With ``cache_signatures`` the frame is persisted
-    under a keyed FIFO — the result DataFrame must stay lazy, so the
-    caller can't unpersist for us: same input + knobs reuses the
-    already-persisted table, a DIFFERENT concurrent pipeline gets its
-    own entry (never evicting another's mid-flight), and the bound
-    stops repeated invocations from accumulating executor storage."""
-    sigs = (
+    CollapseProject). The frame is lazy and never persisted: the band
+    self-joins read it below the cap window's band-key exchange, which
+    both join sides share, so the hashing runs once per query."""
+    return (
         ensure_compute_parallelism(df).select(
             F.col(id_col).alias("id"),
             shingles_col(F.col(text_col)).alias("sh"),
@@ -268,9 +237,34 @@ def _signature_frame(
         )
         .select("id", "sh", lsh_band_keys(F.col("sig")).alias("bands"))
     )
-    if cache_signatures:
-        sigs = _keyed_persist(("sigs", _plan_key(df), text_col, id_col, hash_fn), sigs)
-    return sigs
+
+
+def _band_rows(bands: Column) -> Column:
+    """Generator of one (band_idx, band_key) row per element of a band
+    array, for ``select``. The same rows as ``posexplode``, but as
+    ``inline`` over a transformed array, which evaluates the array
+    once per document: ``posexplode`` over the un-persisted band
+    expression took 1.02–1.05 s at sf0.1 against 0.40 s for the array
+    alone, and this form runs at the array's cost."""
+    return F.inline(
+        F.transform(
+            bands, lambda k, i: F.struct(i.alias("band_idx"), k.alias("band_key"))
+        )
+    )
+
+
+def _jaccard(sh_a: Column, sh_b: Column) -> Column:
+    """Exact shingle-set Jaccard, rounded to the 6dp cross-engine
+    convention the oracles assume."""
+    return F.round(
+        F.size(F.array_intersect(sh_a, sh_b)).cast("double")
+        / F.size(F.array_union(sh_a, sh_b)).cast("double"),
+        6,
+    )
+
+
+# row_number never reaches it, so an uncapped cap window drops nothing
+_NO_CAP = 2**31 - 1
 
 
 def _cap_hot_buckets(
@@ -279,7 +273,6 @@ def _cap_hot_buckets(
     key_cols: tuple[str, str] = ("band_idx", "band_key"),
     observation=None,
     observe_name: str = "hot_bucket_cap",
-    persist_key: tuple | None = None,
 ) -> DataFrame:
     """Bound a band bucket's contribution to the self-join at ``limit``
     members (the deterministic ``limit`` lowest ids win). A hot bucket
@@ -288,9 +281,14 @@ def _cap_hot_buckets(
     bucket cost limit² instead of size². Buckets at or under the limit
     are untouched, so results on a healthy corpus are unchanged; truly
     giant duplicate clusters should be collapsed by exact-dedup BEFORE
-    LSH (the standard web-dedup pipeline order). The row_number window
-    shuffles on the same key as the join itself, so it adds no new
-    partitioning.
+    LSH (the standard web-dedup pipeline order).
+
+    The row_number window shuffles on the same key as the join itself,
+    and it runs even when ``limit`` is None (its filter then drops
+    nothing): its band-key exchange sits below both self-join sides'
+    projections, so the two sides read one shared exchange and the
+    signature frame under it is computed once. Without the window each
+    side would exchange, and hash, on its own.
 
     Capping is NOT silent. Two observability modes:
 
@@ -306,15 +304,10 @@ def _cap_hot_buckets(
       disables the group-limit pushdown, so this is the diagnostic
       mode, not the default plan.
 
-    ``persist_key`` (default-mode only): keyed-persist the capped
-    frame BELOW the observe node, so a cache hit still re-evaluates
-    the named metric — a CollectMetrics above an InMemoryTableScan is
-    one cheap columnar pass, while persisting ABOVE the observe would
-    silence ``at_cap_buckets`` for every query after the first."""
-    if limit is None:
-        return exploded
+    Both counters read 0 when ``limit`` is None."""
     from pyspark.sql.window import Window
 
+    limit = _NO_CAP if limit is None else limit
     w = Window.partitionBy(*key_cols).orderBy("id")
     ranked = exploded.withColumn("_rk", F.row_number().over(w))
     if observation is not None:
@@ -329,11 +322,9 @@ def _cap_hot_buckets(
             ).alias("capped_buckets"),
         )
         return ranked.filter(F.col("_rk") <= limit).drop("_rk")
-    kept = ranked.filter(F.col("_rk") <= limit)
-    if persist_key is not None:
-        kept = _keyed_persist(persist_key, kept)
     return (
-        kept.observe(
+        ranked.filter(F.col("_rk") <= limit)
+        .observe(
             observe_name,
             F.coalesce(
                 F.sum((F.col("_rk") == limit).cast("long")), F.lit(0).cast("long")
@@ -348,7 +339,6 @@ def minhash_lsh_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     jaccard_threshold: float | None = None,
-    cache_signatures: bool = True,
     hot_bucket_limit: int | None = DEFAULT_HOT_BUCKET_LIMIT,
     hash_fn=None,
     cap_observation=None,
@@ -357,58 +347,26 @@ def minhash_lsh_pairs(
     (id_a < id_b), verified with exact shingle-set Jaccard computed
     only for bucket collisions.
 
-    Shuffle + storage layout (the part that matters at 10^9 docs):
-    the band self-join moves only (id, band_key) — never the shingle
-    arrays — and the ONLY thing ever persisted is that skinny
-    (id, band_idx, band_key) frame (~24 B/row × bands). The heavy
-    shingle payload is re-derived AFTER candidate dedup for exactly
-    the surviving candidate ids, via a broadcast semi-join back into
-    the source table: the candidate set is bounded (hot-bucket cap ⇒
-    ≤ limit × buckets-touched ids, in practice a vanishing fraction
-    of the corpus), so one extra pruned scan of (id, text) beats
-    materializing O(corpus) shingle arrays — which at 100 TB cannot
-    fit storage and would spill, i.e. write AND re-read the corpus
-    anyway. ``cache_signatures`` keyed-persists the skinny band frame
-    (so the self-join's two sides don't each recompute per-document
-    hashing — 3× wall on measurement), the deduped pair list, and the
-    candidate shingle table (so the verify's two sides share one
-    source scan); on a real warehouse the band frame is the stored
-    index (see ``minhash_index``) instead."""
-    sigs = _signature_frame(df, text_col, id_col, hash_fn, cache_signatures=False)
-    caching = cache_signatures and cap_observation is None
-    band_arrays = sigs.select("id", "bands")
-    if caching:
-        # Persist the compact (id, bands-array) frame BEFORE the
-        # explode: Generate re-evaluates its generator input per
-        # emitted row, so exploding the raw expression re-runs the
-        # whole shingle→signature→band chain ~bands× (measured 3-4×
-        # warm at sf0.1); exploding from the cached arrays makes the
-        # hashing exactly one pass. 8 short strings/doc — skinny.
-        band_arrays = _keyed_persist(
-            ("minhash-bands", _plan_key(df), text_col, id_col, hash_fn),
-            band_arrays,
-        )
-    # The capped-frame persist sits BELOW the observe (see
-    # _cap_hot_buckets) so `at_cap_buckets` still fires on cache
-    # hits. Skipped when the caller binds an explicit Observation
-    # (one-shot objects).
-    persist_key = None
-    if caching:
-        persist_key = (
-            "minhash-exploded", _plan_key(df), text_col, id_col, hash_fn,
-            hot_bucket_limit,
-        )
+    Shuffle layout (the part that matters at 10^9 docs): the band
+    self-join moves only (id, band_idx, band_key) — never the shingle
+    arrays — and both of its sides read the one band-key exchange of
+    the cap window (see ``_cap_hot_buckets``), so the per-document
+    hashing runs once and nothing is persisted. The verify joins the
+    deduped pair list to the source's (id, text) once per side and
+    shingles the two texts after the join: shingle arrays exist only
+    for surviving pairs, never for the corpus, which at 100 TB could
+    not be held without spilling it — writing AND re-reading the
+    corpus anyway. On a real warehouse the band frame is the stored
+    index (see ``minhash_index``)."""
+    bands = _signature_frame(df, text_col, id_col, hash_fn).select(
+        "id", _band_rows(F.col("bands"))
+    )
     exploded = _cap_hot_buckets(
-        band_arrays.select("id", F.posexplode("bands").alias("band_idx", "band_key")),
+        bands,
         hot_bucket_limit,
         observation=cap_observation,
         observe_name="minhash_hot_bucket_cap",
-        persist_key=persist_key,
     )
-    if hot_bucket_limit is None and persist_key is not None:
-        # uncapped mode bypasses _cap_hot_buckets' persist but the
-        # frame is still read by both self-join sides
-        exploded = _keyed_persist(persist_key, exploded)
     left = exploded.select(F.col("id").alias("id_a"), "band_idx", "band_key")
     right = exploded.select(F.col("id").alias("id_b"), "band_idx", "band_key")
     pairs = (
@@ -417,64 +375,26 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    # Candidate ids WITHOUT re-running the pair join: a doc is a pair
-    # endpoint iff it sits in a band bucket with >= 2 members (every
-    # member of a multi-member bucket pairs with every other member,
-    # so bucket-based and pair-based endpoint sets are EQUAL). The
-    # bucket-count window runs over the persisted capped frame, whose
-    # cached partitioning is already hash(band_idx, band_key) from
-    # the cap window — no new exchange. Deriving candidates this way
-    # (instead of from `pairs`) keeps the band self-join single-
-    # execution without persisting `pairs`, which would bury the
-    # at_cap_buckets CollectMetrics inside a cache and silence the
-    # cap's recall-loss signal after the first invocation
-    # (test_cap_metric_survives_cache_hit).
-    from pyspark.sql.window import Window
-
-    bucket_n = F.count(F.lit(1)).over(
-        Window.partitionBy("band_idx", "band_key")
-    )
-    cand_ids = (
-        exploded.withColumn("_n", bucket_n)
-        .filter(F.col("_n") > 1)
-        .select(F.col("id").alias("_cand_id"))
-        .dropDuplicates()
-    )
-    # No forced broadcast: the candidate-id set scales with the
-    # corpus's near-dup fraction (web corpora: large), so a hard
-    # F.broadcast here is a driver-OOM / 8 GB-broadcast cliff at
-    # 10^9 docs. Left to the optimizer, AQE broadcasts it when the
-    # runtime size is under the threshold and falls back to a shuffle
-    # left_semi when it is not — exactly the adaptive behavior the
-    # scale path needs. cand_ids' column is aliased to _cand_id so a
-    # caller passing id_col="id" never hits AMBIGUOUS_REFERENCE.
-    sh_tbl = (
-        df.join(cand_ids, df[id_col] == cand_ids["_cand_id"], "left_semi")
-        .select(F.col(id_col).alias("id"), shingles_col(F.col(text_col)).alias("sh"))
-    )
-    if caching:
-        # referenced twice (verify side a / side b): one source scan
-        sh_tbl = _keyed_persist(
-            ("minhash-cand-sh", _plan_key(df), text_col, id_col, hash_fn,
-             hot_bucket_limit),
-            sh_tbl,
-        )
+    # aliased on the way in, so id_col="id" never hits
+    # AMBIGUOUS_REFERENCE
+    text = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
     verified = (
-        pairs.join(sh_tbl.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(sh_tbl.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
+        pairs.join(text.select(F.col("id").alias("id_a"), F.col("text").alias("text_a")), "id_a")
+        .join(text.select(F.col("id").alias("id_b"), F.col("text").alias("text_b")), "id_b")
+        .select(
+            "id_a", "id_b",
+            shingles_col(F.col("text_a")).alias("sh_a"),
+            shingles_col(F.col("text_b")).alias("sh_b"),
+        )
     )
-    jac = (
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        / F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    )
-    out = verified.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+    out = verified.select("id_a", "id_b", _jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
     if jaccard_threshold is not None:
         out = out.filter(F.col("jaccard") >= jaccard_threshold)
     return out
 
 
 # ---------------------------------------------------------------------------
-# Incremental MinHash dedup against a persisted corpus index
+# Incremental MinHash dedup against a stored corpus index
 # ---------------------------------------------------------------------------
 
 def minhash_index(
@@ -482,7 +402,6 @@ def minhash_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_fn=None,
-    cache_signatures: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """The two index tables a corpus stores ONCE so later ingests never
     re-hash it: ``bands`` = (id, band_idx, band_key) — the only thing
@@ -496,11 +415,10 @@ def minhash_index(
     co-locates with the new batch's exchange), which is what makes
     per-ingest dedup cost scale with the INGEST, not the corpus.
     Signature arithmetic is identical to ``minhash_lsh_pairs`` — the
-    two share ``_signature_frame`` (one code path, one cache key), so
-    an index built yesterday collides with today's batch exactly as a
-    single batch run would."""
-    sigs = _signature_frame(df, text_col, id_col, hash_fn, cache_signatures)
-    bands = sigs.select("id", F.posexplode("bands").alias("band_idx", "band_key"))
+    two share ``_signature_frame`` — so an index built yesterday
+    collides with today's batch exactly as a single batch run would."""
+    sigs = _signature_frame(df, text_col, id_col, hash_fn)
+    bands = sigs.select("id", _band_rows(F.col("bands")))
     shingles = sigs.select("id", "sh")
     return bands, shingles
 
@@ -514,7 +432,6 @@ def minhash_lsh_pairs_incremental(
     jaccard_threshold: float | None = None,
     hot_bucket_limit: int | None = DEFAULT_HOT_BUCKET_LIMIT,
     hash_fn=None,
-    cache_signatures: bool = True,
 ) -> DataFrame:
     """Near-dup pairs involving at least one NEW document — new-vs-
     corpus and new-vs-new — WITHOUT ever self-joining the corpus: the
@@ -544,42 +461,34 @@ def minhash_lsh_pairs_incremental(
     ``minhash_lsh_pairs(old ∪ new)`` filtered to pairs with ≥1 new
     endpoint. Requires new ids disjoint from index ids."""
     new_bands, new_shingles = minhash_index(
-        new_df, text_col=text_col, id_col=id_col, hash_fn=hash_fn,
-        cache_signatures=cache_signatures,
+        new_df, text_col=text_col, id_col=id_col, hash_fn=hash_fn
     )
     tagged_new = new_bands.withColumn("_new", F.lit(True))
     touched = new_bands.select("band_idx", "band_key").dropDuplicates()
     relevant_index = index_bands.join(
         touched, ["band_idx", "band_key"], "left_semi"
     ).withColumn("_new", F.lit(False))
-    # Persist the capped combined frame: BOTH candidate-join sides
-    # reference it, and Spark does not reuse the semi-join + union +
-    # band-key window exchange across join sides (same reason the
-    # batch path persists its capped bands) — without it every ingest
-    # pays the corpus prune and cap shuffle twice.
-    combined_key = None
-    if cache_signatures:
-        combined_key = (
-            "incr-combined", _plan_key(new_df), _plan_key(index_bands),
-            text_col, id_col, hash_fn, hot_bucket_limit,
-        )
+    # BOTH candidate-join sides read the capped combined frame, and
+    # both read its `_new` tag, so the two sides' plans stay equal up
+    # to the cap window and share its band-key exchange (with the
+    # corpus prune and the union under it); the `_new` filter cannot
+    # pass the window
     combined = _cap_hot_buckets(
         relevant_index.unionByName(tagged_new),
         hot_bucket_limit,
         observe_name="incremental_hot_bucket_cap",
-        persist_key=combined_key,
     )
-    if hot_bucket_limit is None and combined_key is not None:
-        # uncapped mode skips _cap_hot_buckets' persist path but the
-        # frame is still referenced by both join sides
-        combined = _keyed_persist(combined_key, combined)
     new_side = combined.filter(F.col("_new")).select(
         F.col("id").alias("id_n"), "band_idx", "band_key"
     )
-    all_side = combined.select(F.col("id").alias("id_o"), "band_idx", "band_key")
+    all_side = combined.select(
+        F.col("id").alias("id_o"), F.col("_new").alias("_new_o"), "band_idx", "band_key"
+    )
     pairs = (
         new_side.join(all_side, ["band_idx", "band_key"])
-        .filter(F.col("id_n") != F.col("id_o"))
+        # a new-new pair is met from both ends: keep it from its lower
+        # id (new ids are disjoint from index ids)
+        .filter(~F.col("_new_o") | (F.col("id_n") < F.col("id_o")))
         .select(
             F.least("id_n", "id_o").alias("id_a"),
             F.greatest("id_n", "id_o").alias("id_b"),
@@ -597,11 +506,7 @@ def minhash_lsh_pairs_incremental(
             "id_b",
         )
     )
-    jac = (
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        / F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    )
-    out = verified.select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+    out = verified.select("id_a", "id_b", _jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
     if jaccard_threshold is not None:
         out = out.filter(F.col("jaccard") >= jaccard_threshold)
     return out
@@ -674,18 +579,15 @@ def simhash_exploded_bands(
     bits: int = SIMHASH_BITS,
     bands: int = 4,
     hash_fn=None,
-    cache_signatures: bool = True,
     blocks: int | None = DEFAULT_SIMHASH_BLOCKS,
     max_hamming: int = 3,
 ) -> DataFrame:
-    """UNCAPPED (id, sh, band_idx, band_key) band frame behind the
-    keyed persist — the shared build for ``simhash_lsh_pairs`` and any
-    per-document code consumer (filter ``band_idx = 0`` for one
-    (id, sh) row per doc), so the expensive per-token simhash computes
-    once per corpus even when codes and pairs appear in one query.
-    Per-doc codes must come from THIS frame, never a capped one: the
-    hot-bucket cap drops (id, band) rows, so a capped frame can lose a
-    document's band 0 entirely.
+    """UNCAPPED (id, sh, band_idx, band_key) band frame that
+    ``simhash_lsh_pairs`` caps and self-joins. Its band 0 carries one
+    (id, sh) row per document, so a per-document code consumer can
+    filter ``band_idx = 0``; codes must come from THIS frame, never a
+    capped one: the hot-bucket cap drops (id, band) rows, so a capped
+    frame can lose a document's band 0 entirely.
 
     Two candidate layouts, both with EXACT recall for hamming ≤
     ``max_hamming`` (pigeonhole):
@@ -713,7 +615,6 @@ def simhash_exploded_bands(
             F.shiftright(F.col("sh"), b * width).bitwiseAND(F.lit(mask))
             for b in range(bands)
         ]
-        scheme = ("legacy", bands)
     else:
         group = blocks - max_hamming
         if group < 1:
@@ -732,15 +633,7 @@ def simhash_exploded_bands(
                 )
                 key_col = F.shiftleft(key_col, w).bitwiseOR(part)
             band_cols.append(key_col)
-        scheme = ("blocks", blocks, max_hamming)
-    base = sh.select(
-        "id", "sh", F.posexplode(F.array(*band_cols)).alias("band_idx", "band_key")
-    )
-    key = (
-        "simhash-exploded", _plan_key(df), text_col, id_col, hash_fn,
-        bits, scheme, None,
-    )
-    return _keyed_persist(key, base) if cache_signatures else base
+    return sh.select("id", "sh", _band_rows(F.array(*band_cols)))
 
 
 def simhash_lsh_pairs(
@@ -750,7 +643,6 @@ def simhash_lsh_pairs(
     max_hamming: int = 3,
     bands: int = 4,
     bits: int = SIMHASH_BITS,
-    cache_signatures: bool = True,
     hot_bucket_limit: int | None = DEFAULT_SIMHASH_BUCKET_LIMIT,
     hash_fn=None,
     cap_observation=None,
@@ -766,41 +658,24 @@ def simhash_lsh_pairs(
     (``bands`` tables of bits/bands-bit keys — key space 2^8 at the
     32/4 default, whose n²/256 candidate join the sf1 bench exposed).
     Exact hamming verifies every candidate either way, so both layouts
-    return identical pairs. The band equi-join is the only shuffle."""
+    return identical pairs. The band equi-join's exchange is the cap
+    window's, shared by both join sides (see ``_cap_hot_buckets``), so
+    the per-token simhash computes once without a persist; pairs are
+    filtered on hamming before they are deduplicated."""
     if blocks is None and max_hamming > bands - 1:
         raise ValueError(
             f"banded recall guarantee needs max_hamming <= bands-1 "
             f"(got {max_hamming} > {bands - 1})"
         )
-    # Same treatment as minhash's capped-band cache: without it BOTH
-    # self-join sides recompute the (expensive) per-token simhash AND
-    # the cap's window exchange; the cached frame is (id, long, int,
-    # long) — trivial to hold. Unlike minhash there is no separate
-    # signature persist, so the persist pays even uncapped (it is the
-    # only thing stopping a double simhash computation). The persist
-    # sits below the observe so `at_cap_buckets` fires on cache hits.
-    caching = cache_signatures and cap_observation is None
-    base = simhash_exploded_bands(
-        df, text_col=text_col, id_col=id_col, bits=bits, bands=bands,
-        hash_fn=hash_fn,
-        cache_signatures=caching and hot_bucket_limit is None,
-        blocks=blocks, max_hamming=max_hamming,
+    exploded = _cap_hot_buckets(
+        simhash_exploded_bands(
+            df, text_col=text_col, id_col=id_col, bits=bits, bands=bands,
+            hash_fn=hash_fn, blocks=blocks, max_hamming=max_hamming,
+        ),
+        hot_bucket_limit,
+        observation=cap_observation,
+        observe_name="simhash_hot_bucket_cap",
     )
-    scheme = ("legacy", bands) if blocks is None else ("blocks", blocks, max_hamming)
-    key = (
-        "simhash-exploded", _plan_key(df), text_col, id_col, hash_fn,
-        bits, scheme, hot_bucket_limit,
-    )
-    if hot_bucket_limit is None:
-        exploded = base
-    else:
-        exploded = _cap_hot_buckets(
-            base,
-            hot_bucket_limit,
-            observation=cap_observation,
-            observe_name="simhash_hot_bucket_cap",
-            persist_key=key if caching else None,
-        )
     left = exploded.select(
         F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), "band_idx", "band_key"
     )
@@ -814,8 +689,8 @@ def simhash_lsh_pairs(
             "id_a", "id_b",
             hamming_distance(F.col("sh_a"), F.col("sh_b")).alias("hamming"),
         )
-        .dropDuplicates(["id_a", "id_b"])
         .filter(F.col("hamming") <= max_hamming)
+        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -849,13 +724,9 @@ def ngram_jaccard_pairs(
         *( [F.col("blk")] if block_col else [] ),
     )
     joined = a.join(b, "blk") if block_col else a.crossJoin(b)
-    jac = (
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        / F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    )
     return (
         joined.filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+        .select("id_a", "id_b", _jaccard(F.col("sh_a"), F.col("sh_b")).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 

@@ -58,7 +58,7 @@ def ensure_compute_parallelism(df):
     sequence packing is NOT and must not use this)."""
     try:
         # sparkContext/rdd raise on Spark Connect — degrade to the
-        # unchanged frame there (same fallback stance as _plan_key)
+        # unchanged frame there
         target = df.sparkSession.sparkContext.defaultParallelism
         current = df.rdd.getNumPartitions()
     except Exception:

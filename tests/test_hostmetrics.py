@@ -272,3 +272,42 @@ def test_missing_key_is_null_not_a_failed_query(spark):
     }
     # 8 cpu + 3 processes + 6 memory + 3 paging usage + 6 paging ops
     assert len(values) == 26
+
+
+@pytest.mark.parametrize(
+    "section, text, want",
+    [
+        # a truncated cpu line: user and nice parse, the rest is NULL
+        ("proc_stat", "cpu0 1 2", {
+            ("system.cpu.time", "cpu=cpu0,state=user"): 0.01,
+            ("system.cpu.time", "cpu=cpu0,state=nice"): 0.02,
+        }),
+        # a truncated disk line: only read operations and merges parse
+        ("diskstats", "8 0 sda 1 2", {
+            ("system.disk.operations", "device=sda,direction=read"): 1,
+            ("system.disk.merged", "device=sda,direction=read"): 2,
+        }),
+        ("loadavg", "0.5", {("system.cpu.load_average.1m", ""): 0.5}),
+        # a keyed value past the bigint range
+        ("proc_stat", "processes 99999999999999999999\nprocs_running 2", {
+            ("system.processes.count", "status=running"): 2,
+        }),
+        # a non-numeric field is NULL, its neighbours keep their values
+        ("loadavg", "0.5 x 0.25", {
+            ("system.cpu.load_average.1m", ""): 0.5,
+            ("system.cpu.load_average.15m", ""): 0.25,
+        }),
+    ],
+)
+def test_truncated_line_gives_null_datapoints(spark, section, text, want):
+    """A line cut short or holding garbage yields NULL datapoints for
+    the fields it lacks, never a failed scrape query."""
+    snaps = spark.createDataFrame(
+        [("h0", 0, text)], f"host_id string, ts bigint, {section} string"
+    )
+    values = {
+        k: r["int_value"] if r["data_type"].startswith("Int") else r["double_value"]
+        for k, r in _dp_map(scrape_snapshots(snaps)).items()
+    }
+    assert {k: v for k, v in values.items() if v is not None} == want
+    assert len(values) > len(want)  # the missing fields are NULL rows

@@ -134,9 +134,7 @@ class TestPlanQuality:
             n += 1
         return n
 
-    def test_minhash_lsh_single_join_shuffle_side(self, spark):
-        from opentelemetry_collector_spark.trainingdata import minhash_lsh_pairs
-
+    def _assert_single_join_shuffle_side(self, spark, lsh_pairs):
         docs = datagen.make_transcripts_df(spark, n_convs=5).selectExpr(
             "cast(turn_idx as long) as doc_id", "text"
         )
@@ -154,50 +152,52 @@ class TestPlanQuality:
         try:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
             spark.conf.set("spark.sql.adaptive.enabled", "false")
-            # shuffles: band self-join (1, exchange shared by both
-            # sides) + pair dedup (1) + the candidate-id derivation
-            # (bucket-count window ≤1 — free when the cap window has
-            # already band-partitioned the cached frame — plus the
-            # tiny id distinct, 1) + the verify's id_a/id_b joins
-            # (≤2, one shingle side reused) + the candidate→source
-            # semi (≤2: with broadcast forced off this regime models
-            # a candidate set too big to broadcast — the r4-advice
-            # driver-OOM case — where a shuffle left_semi on id is
-            # the only correct plan; under AQE + default threshold a
-            # small candidate set still broadcasts at runtime and
-            # these two exchanges vanish) — the heavy shingle arrays
-            # move only for surviving pairs, never through the band
-            # join
-            plan = plan_of(minhash_lsh_pairs(docs, hot_bucket_limit=None))
+            # shuffles: the cap window's band-key exchange (1, shared
+            # by both self-join sides) + pair dedup (1) + for minhash
+            # the verify's id_a/id_b joins (the pair list twice, the
+            # source's (id, text) once — its exchange is reused by
+            # the second side). With broadcast forced off this regime
+            # models a pair list too big to broadcast; under AQE +
+            # default threshold a small one broadcasts at runtime and
+            # the verify exchanges vanish. The shingle arrays are
+            # built after the verify joins, for surviving pairs only,
+            # never through the band join
+            plan = plan_of(lsh_pairs(docs, hot_bucket_limit=None))
             n = self._shuffles(plan)
             assert n <= 9, f"{n} shuffles\n{plan}"
-            # the corpus-sized band exchange must be SKINNY: any
-            # exchange partitioned on the band keys must not carry
-            # the shingle array (sh moves only through the verify
-            # joins, keyed by candidate id)
-            for line in plan.splitlines():
-                if "Exchange hashpartitioning(band_" in line:
-                    assert "sh#" not in line, f"shingles in band shuffle:\n{line}"
-
-            # the DEFAULT hot-bucket cap must be shuffle-neutral: the
-            # capped (id, band) frame is persisted ONCE (it is the
-            # cheapest thing in the plan, ~24 B/row), so the window's
-            # band-key exchange, the partial WindowGroupLimit pruning
-            # and the cap's CollectMetrics all run exactly once and
-            # BOTH self-join sides read the cached blocks — without
-            # the cache each side would pay its own window exchange
-            # and evaluate the cap metric twice
-            capped = plan_of(minhash_lsh_pairs(docs))
+            # the DEFAULT hot-bucket cap is shuffle-neutral and keeps
+            # Catalyst's map-side partial WindowGroupLimit pruning
+            capped = plan_of(lsh_pairs(docs))
             n_capped = self._shuffles(capped)
             assert n_capped <= n, f"cap added shuffles: {n_capped} > {n}\n{capped}"
-            assert capped.count("InMemoryTableScan") >= 2, capped
             assert "WindowGroupLimit" in capped and "Partial" in capped, capped
+            for p in (plan, capped):
+                # nothing is persisted: both self-join sides read one
+                # exchange instead of a cached frame
+                assert "InMemoryTableScan" not in p, p
+                assert "ReusedExchange" in p, p
         finally:
             for k, v in saved.items():
                 if v is None:
                     spark.conf.unset(k)
                 else:
                     spark.conf.set(k, v)
+        return plan, capped
+
+    def test_minhash_lsh_single_join_shuffle_side(self, spark):
+        from opentelemetry_collector_spark.trainingdata import minhash_lsh_pairs
+
+        for plan in self._assert_single_join_shuffle_side(spark, minhash_lsh_pairs):
+            # the corpus-sized band exchange must be SKINNY: any exchange
+            # partitioned on the band keys must not carry the shingle array
+            for line in plan.splitlines():
+                if "Exchange hashpartitioning(band_" in line:
+                    assert "sh#" not in line, f"shingles in band shuffle:\n{line}"
+
+    def test_simhash_lsh_single_join_shuffle_side(self, spark):
+        from opentelemetry_collector_spark.trainingdata import simhash_lsh_pairs
+
+        self._assert_single_join_shuffle_side(spark, simhash_lsh_pairs)
 
     def test_embed_near_dup_bucket_join_carries_no_vectors(self, spark):
         """The embedding near-dup bucket self-join must move only
