@@ -2,7 +2,8 @@
 
 Local-mode settings mirror what we would submit cluster-side via
 ``spark-submit --py-files`` (AQE on, Arrow on, shuffle partitions sized
-to cores, UTC so DuckDB-oracle comparisons are timezone-stable).
+to cores, UTC so DuckDB-oracle comparisons are timezone-stable,
+parquet timestamps as INT64 micros so their footers carry min/max).
 """
 
 from __future__ import annotations
@@ -112,6 +113,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # INT64 timestamps, whose parquet footers carry min/max (INT96's
+        # carry none); Spark takes this from the session conf only, not
+        # from a write option
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config(

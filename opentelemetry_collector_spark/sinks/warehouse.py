@@ -18,21 +18,27 @@ Design (Iceberg-shaped, parquet-backed):
     kind: every commit is a whole run;
   * ONE commit manifest per run (JSON, written atomically via rename
     AFTER the data lands) with one entry per sink — path, row count,
-    observed sent count, per-file lineage — and the receiver counters.
-    Readers only see committed snapshots; a crash before the rename
-    leaves orphan directories that the next attempt of the same run_id
-    overwrites — never double-counted data;
+    observed sent count, schema, per-file lineage — and the receiver
+    counters. Readers only see committed snapshots; a crash before the
+    rename leaves orphan directories that the next attempt of the same
+    run_id overwrites — never double-counted data;
   * obsreport-style sent-counters are captured from ``df.observe``
     during the SAME action as the write: a routed sink's on the input
     rows before the fan-out (``compile_routed``), an aggregate sink's
-    on the aggregate frame. Per-file lineage (file → row count +
-    conv_id range) is harvested from the written parquet FOOTERS —
-    metadata-only, no second data scan (the manifest-file role
+    on the aggregate frame. Per-file lineage (file → row count, bytes,
+    conv_id and ts ranges) is harvested from the written parquet
+    FOOTERS — metadata-only, no second data scan (the manifest-file role
     Iceberg's own manifests play). A commit requires each sink's footer
     row total to equal its observed sent count, and each routed sink's
     by-conversation aggregate to count every turn sent to it — a lost
     or truncated file fails the commit instead of under-counting
     silently;
+  * the committed format is decided once, as Iceberg's defaults do:
+    zstd parquet, ``ts`` as INT64 ``TIMESTAMP(MICROS)`` (whose footers
+    carry the min/max that INT96 lacks; ``session.get_spark`` sets it,
+    since Spark takes the timestamp type from the session conf only),
+    and each sink entry records the schema its files were written with,
+    so a read needs no footer-inference job;
   * on a real cluster the identical interface binds to Iceberg
     (``writeTo(...).append()`` within its snapshot/commit machinery,
     on a table PARTITIONED BY sink); ``sources.tables.iceberg_available``
@@ -53,6 +59,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 
 def _fingerprint(run_id: str) -> str:
@@ -67,13 +74,27 @@ def _json_safe(v):
     return v
 
 
+def _as_nullable(t: DataType) -> DataType:
+    """``t`` with every field, element and value nullable: the schema a
+    parquet read returns, whatever the nullability it was written with."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
 def _footer_lineage(path: str, lineage_keys: tuple[str, ...]) -> list[dict]:
-    """Per-file lineage from parquet footer metadata: row count plus
-    min/max of each lineage key, read without touching data pages
-    (``run_and_write`` records the conv_id range). A TIMESTAMP_NTZ
-    column is written as INT64 ``TIMESTAMP(MICROS)`` with min/max; only
-    a TIMESTAMP column is written as INT96, which carries no
-    statistics. String min/max may be
+    """Per-file lineage from parquet footer metadata: row count, bytes
+    and min/max of each lineage key, read without touching data pages
+    (``run_and_write`` records the conv_id and ts ranges). ``ts`` has
+    min/max because it is written as INT64 ``TIMESTAMP(MICROS)``; a key
+    without footer statistics (an INT96 timestamp, written by a session
+    not built by ``get_spark``) is left out. String min/max may be
     writer-truncated bounds (parquet permits truncated statistics) —
     still valid conservative key ranges.
     O(#files) driver-side metadata reads, exactly the cost profile of
@@ -240,12 +261,17 @@ class Warehouse:
         action fills it — never a second scan. ``run_and_write`` counts
         the routed sinks on the input rows, before the fan-out these
         files come from, and the aggregate sinks on the aggregate frame
-        itself. Lineage comes from the parquet footers: metadata-only,
-        no re-scan of the data just written (at 100 TB a post-write
-        re-read would double the write path's I/O). Overwrite mode
+        itself. Lineage (per file: rows, bytes and the ``lineage_keys``
+        ranges) comes from the parquet footers: metadata-only, no
+        re-scan of the data just written (at 100 TB a post-write re-read
+        would double the write path's I/O). Every file is zstd parquet;
+        each entry records the files' schema, as the read returns it
+        (every field nullable), for ``read_sink``. Overwrite mode
         replaces an orphan directory left by a crashed attempt."""
         path = os.path.join(self.root, table, f"snap={_fingerprint(run_id)}")
-        df.write.mode("overwrite").partitionBy("sink").parquet(path)
+        df.write.mode("overwrite").option("compression", "zstd").partitionBy("sink").parquet(path)
+        files_schema = StructType([f for f in df.schema if f.name != "sink"])
+        schema = json.loads(_as_nullable(files_schema).json())
         observed = sent.get
         entries = {}
         for sink in sinks:
@@ -261,6 +287,7 @@ class Warehouse:
                 "path": sink_path,
                 "rows": rows,
                 "observed_sent": int(observed[sink]),
+                "schema": schema,
                 "lineage": lineage,
             }
         return entries
@@ -271,10 +298,17 @@ class Warehouse:
         beside them is never read. A committed file that is gone fails
         the read (PATH_NOT_FOUND) and one whose size differs from the
         manifest's is refused by name, rather than under-counting. A sink
-        of a partitioned run with no rows lists no files and adds none."""
-        files = []
+        of a partitioned run with no rows lists no files and adds none.
+
+        When every manifest that lists the sink records the same schema,
+        the read takes it and launches no job; otherwise (schemas that
+        differ, or a manifest older than the field) Spark infers the
+        schema from the footers, in a job."""
+        files, schemas = [], []
         for m in self._manifests():
             e = m["sinks"].get(sink)
+            if e:
+                schemas.append(e.get("schema"))
             for f in e["lineage"] if e else ():
                 full = os.path.join(e["path"], f["file"])
                 want = f.get("bytes")  # None in manifests older than the field
@@ -286,18 +320,30 @@ class Warehouse:
                 files.append(full)
         if not files:
             raise FileNotFoundError(f"no committed snapshots for sink {sink!r}")
+        if schemas[0] is not None and all(s == schemas[0] for s in schemas):
+            return spark.read.schema(StructType.fromJson(schemas[0])).parquet(*files)
         return spark.read.parquet(*files)
 
     def metrics_table(self, spark: SparkSession) -> DataFrame:
         """obsreport-parity view over the commit log: per-sink sent
-        counters (obsreport_exporter.go:29-44)."""
+        counters (obsreport_exporter.go:29-44) and committed bytes, the
+        sum of the sink's file sizes (NULL for a manifest older than the
+        per-file ``bytes``)."""
         rows = [
-            (m["run_id"], sink, e["rows"], len(e["lineage"]))
+            (
+                m["run_id"],
+                sink,
+                e["rows"],
+                len(e["lineage"]),
+                None
+                if any("bytes" not in f for f in e["lineage"])
+                else sum(f["bytes"] for f in e["lineage"]),
+            )
             for m in self._manifests()
             for sink, e in m["sinks"].items()
         ]
         return spark.createDataFrame(
-            rows, "run_id string, sink string, sent bigint, n_partitions int"
+            rows, "run_id string, sink string, sent bigint, n_partitions int, bytes bigint"
         )
 
 
@@ -341,7 +387,7 @@ def run_and_write(
 
     tagged, received = compile_routed(spark, transcripts, config)
     entries = warehouse.write_partitioned(
-        "routed", tagged, run_id, sinks, received, lineage_keys=("conv_id",)
+        "routed", tagged, run_id, sinks, received, lineage_keys=("conv_id", "ts")
     )
     counters = {k: int(v) for k, v in received.get.items() if k not in sinks}
 

@@ -116,15 +116,49 @@ class TestRunAndWrite:
             assert sum(f["rows"] for f in r.lineage) == r.rows
             files |= {os.path.join(r.path, f["file"]) for f in r.lineage}
         # routed files carry their conv_id ranges from the parquet
-        # footers; run_and_write asks for no ts range (this fixture's
-        # TIMESTAMP ts is written as INT96, without statistics; a
-        # TIMESTAMP_NTZ ts is INT64 TIMESTAMP(MICROS) with min/max)
+        # footers (their ts ranges: test_committed_format_is_zstd_with_ts_bounds)
         assert results["archive"].lineage
         for f in results["archive"].lineage:
             assert f["min_conv_id"] <= f["max_conv_id"]
         assert len(files) == sum(len(r.lineage) for r in results.values())
-        sent = {r["sink"]: r["sent"] for r in wh.metrics_table(spark).collect()}
-        assert sent == {name: r.rows for name, r in results.items()}
+        # the commit log's sent counters and committed bytes, the latter
+        # the sizes of the files on disk
+        metrics = {r["sink"]: r for r in wh.metrics_table(spark).collect()}
+        assert {s: r["sent"] for s, r in metrics.items()} == {
+            name: r.rows for name, r in results.items()
+        }
+        on_disk = {
+            name: sum(os.path.getsize(os.path.join(r.path, f["file"])) for f in r.lineage)
+            for name, r in results.items()
+        }
+        assert {s: r["bytes"] for s, r in metrics.items()} == on_disk
+        assert on_disk["archive"] > 0
+
+    def test_committed_format_is_zstd_with_ts_bounds(self, spark, tiny_transcripts, wh):
+        """Every committed file of both tables is zstd parquet, and the
+        fixture's TIMESTAMP ts is INT64 TIMESTAMP(MICROS) with footer
+        min/max, so each routed file's lineage carries its ts range."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        results = run_and_write(spark, tiny_transcripts, wh, "run1")
+        assert results["archive"].lineage and results["archive_agg"].lineage
+        for name, r in results.items():
+            for f in r.lineage:
+                md = pq.ParquetFile(os.path.join(r.path, f["file"])).metadata
+                chunks = [
+                    md.row_group(g).column(c)
+                    for g in range(md.num_row_groups)
+                    for c in range(md.num_columns)
+                ]
+                assert {c.compression for c in chunks} == {"ZSTD"}, (name, f["file"])
+                if name.endswith("_agg"):
+                    continue
+                ts = [c for c in chunks if c.path_in_schema == "ts"]
+                assert ts and all(c.physical_type == "INT64" for c in ts)
+                assert all(c.statistics.has_min_max for c in ts)
+                assert md.schema.to_arrow_schema().field("ts").type == pa.timestamp("us", "UTC")
+                assert f["min_ts"] <= f["max_ts"], (name, f)
 
     def test_receiver_counters_ride_the_write(self, spark, tiny_transcripts, wh):
         """accepted / parse refused are observed on the enriched frame,
@@ -340,6 +374,64 @@ class TestRunAndWrite:
         assert redo["archive"].rows == tiny_transcripts.count()
         for name, r in redo.items():  # nothing doubled
             assert wh.read_sink(spark, name).count() == r.rows, name
+
+
+class TestReadSink:
+    """``read_sink`` takes the schema from the manifests: no job runs
+    before the read's own action, and a manifest older than the field
+    still reads, by footer inference."""
+
+    @staticmethod
+    def _new_jobs(spark, read):
+        """(read's result, the ungrouped job ids that appeared while it ran)."""
+        sc = spark.sparkContext
+        tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
+        bus.waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup())
+        got = read()
+        bus.waitUntilEmpty()
+        return got, set(tracker.getJobIdsForGroup()) - before
+
+    def test_read_launches_no_job_and_returns_the_inferred_schema(
+        self, spark, tiny_transcripts, wh
+    ):
+        results = run_and_write(spark, tiny_transcripts, wh, "run1")
+        for sink in ("archive", "archive_agg"):
+            got, jobs = self._new_jobs(spark, lambda: wh.read_sink(spark, sink))
+            assert not jobs, sink
+            # what Spark's footer inference returns: every column
+            # nullable (the written frame's ``parsed`` is not), no
+            # ``sink`` partition column
+            r = results[sink]
+            inferred = spark.read.parquet(*[os.path.join(r.path, f["file"]) for f in r.lineage])
+            assert got.schema == inferred.schema, sink
+            assert "sink" not in got.columns
+            assert all(f.nullable for f in got.schema.fields)
+        assert "parsed" in wh.read_sink(spark, "archive").columns
+
+    def test_manifest_without_schema_reads_by_inference(self, spark, tiny_transcripts, wh):
+        import json
+
+        r = run_and_write(spark, tiny_transcripts, wh, "run1", ARCHIVE_ONLY)["archive"]
+        want = wh.read_sink(spark, "archive")
+        key = lambda row: (row.conv_id, row.turn_idx)  # noqa: E731
+        want_rows = sorted(want.collect(), key=key)
+        path = wh._commit_path(r.snapshot_id)
+        with open(path) as f:
+            m = json.load(f)
+        for e in m["sinks"].values():
+            del e["schema"]
+        with open(path, "w") as f:
+            json.dump(m, f)
+        got, jobs = self._new_jobs(spark, lambda: wh.read_sink(spark, "archive"))
+        assert jobs  # the footer-inference job
+        assert got.schema == want.schema
+        assert sorted(got.collect(), key=key) == want_rows
+        # one run with the field and one without: the schemas are not
+        # all recorded, so the read infers them
+        run_and_write(spark, tiny_transcripts, wh, "run2", ARCHIVE_ONLY)
+        both = wh.read_sink(spark, "archive")
+        assert both.schema == want.schema and both.count() == 2 * r.rows
 
 
 class TestManifestReader:
